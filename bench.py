@@ -95,11 +95,9 @@ PLANS_EXTRA = [
     "acid_table_changes_partitioned",  # partitioned CDF
     # Moved out of HEADLINE in round 12 to fit the three round-11
     # queries above at full 2-decimal precision inside the driver's
-    # 2000-char tail window: each keeps a SIBLING headliner exercising
-    # the same code path (pagerank_copurchase; minhash_lsh_pairs_docs)
-    # and its variant-specific numbers in SCALE.md (§13 persist-vs-lazy,
-    # §10 hot-bucket cap).
-    "pagerank_copurchase_persist",  # persisted-edges pagerank variant
+    # 2000-char tail window: it keeps a SIBLING headliner exercising
+    # the same code path (minhash_lsh_pairs_docs) and its
+    # variant-specific numbers in SCALE.md (§10 hot-bucket cap).
     "minhash_lsh_capped_docs",   # LSH under hot-bucket skew (capped)
 ]
 

@@ -41,9 +41,9 @@ from financial_data_lakehouse_pipeline__spark.corpus.textdocs import (
     _lang_hits_sql,
     _minhash_ctes,
 )
+from financial_data_lakehouse_pipeline__spark.materialize import pin
 from financial_data_lakehouse_pipeline__spark.operators import sampling, text
 from financial_data_lakehouse_pipeline__spark.operators.dedup import (
-    _pin,
     canonical_text,
     minhash_lsh_pairs,
 )
@@ -282,16 +282,20 @@ def _funnel(spark, sf_dir, model_quality: bool):
         # screen pipeline (quality_score + language_id regexes) over
         # the slice (guide §2.4) — the heavy screens now run once; the
         # training tokenizer re-reads raw text with the slice predicate
-        # pushed to the scan, exactly like the LSH branch re-acquires
-        # survivor text.
-        labels = _pin(
+        # pushed to the scan (its own read, filtered before any
+        # parallelism floor rather than relying on the optimizer to
+        # push the predicate through the floor's repartition;
+        # naive_bayes_train floors the slice itself), exactly like the
+        # LSH branch re-acquires survivor text.
+        labels = pin(
             base.filter(F.col("doc_id") % _TRAIN_MOD == 0).select(
                 "doc_id", "q_ok"
             )
         )
         bias = text.naive_bayes_bias(labels, F.col("q_ok"))
         train = (
-            d.filter(F.col("doc_id") % _TRAIN_MOD == 0)
+            read_table(spark, sf_dir, "documents")
+            .filter(F.col("doc_id") % _TRAIN_MOD == 0)
             .select("doc_id", "text")
             .join(labels, "doc_id")
         )
@@ -330,7 +334,7 @@ def _funnel(spark, sf_dir, model_quality: bool):
     # and its tiny dup-id output is checkpointed too, so the three
     # downstream consumers (count agg, mixture thresholds, packing)
     # re-derive f5/f6 from two small parquet reads + one broadcast.
-    # Unlike .persist() none of this pins executor memory across
+    # Unlike a persist, none of this pins executor memory across
     # bench/driver invocations.
     variant = "model" if model_quality else "heur"
     # Per-invocation unique leaf: two datasets sharing a basename, or
@@ -380,7 +384,7 @@ def _funnel(spark, sf_dir, model_quality: bool):
     # the benchmark-fingerprint broadcast — one materialization of the
     # narrow flag table ends that (guide §2.4; the parquet checkpoints
     # above keep the EXPENSIVE upstream out of all of them already)
-    flagged = _pin(
+    flagged = pin(
         flags.join(dups_r, "doc_id", "left")
         .withColumn(
             "f5", F.col("f4") & ~F.coalesce(F.col("__dup"), F.lit(False))

@@ -797,7 +797,7 @@ def streaming_upsert_keep_latest(spark, sf_dir):
     """Streaming MERGE sink (streaming.upsert_sink): foreachBatch
     dedups each micro-batch to its latest row per user and MERGEs it
     into a copy-on-write versioned parquet table (the poor-man's Delta
-    log; delta_io.upsert_delta is the ACID variant). Driven to
+    log; sources.acid.merge is the ACID variant). Driven to
     completion, the committed state equals batch keep-latest — the
     oracle."""
     import os

@@ -655,8 +655,8 @@ def merge_upsert_customers(spark, sf_dir):
     """MERGE INTO on plain DataFrames (operators/cdc.merge_upsert):
     matched keys take the update row wholesale, unmatched update rows
     insert, untouched target rows pass through — Delta-MERGE semantics
-    compiled to one left-anti join + unionByName (delta_io.upsert_delta
-    is the ACID variant when delta-spark is present). The update batch is
+    compiled to one left-anti join + unionByName (sources.acid.merge
+    is the ACID variant). The update batch is
     derived deterministically from the customer table (every 7th key
     re-segmented with +100 balance; every 17th key re-keyed as an
     insert)."""

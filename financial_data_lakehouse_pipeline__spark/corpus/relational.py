@@ -1072,22 +1072,6 @@ def pagerank_copurchase(spark, sf_dir):
     return graph.pagerank(edges, iters=2, damping=0.85)
 
 
-@register("pagerank_copurchase_persist", _pagerank_sql(iters=2, damping=0.85))
-def pagerank_copurchase_persist(spark, sf_dir):
-    """Same PageRank, `persist_edges=True` — the scan-bound 100 TB
-    regime's plan (edge derivation materialized once instead of
-    recomputed per iteration, operators/graph.pagerank). Registered as
-    its own query so the recompute-vs-persist crossover measured in
-    round 4 (5.3 s vs 9.1 s at sf0.1/iters=2, where recompute wins)
-    stays continuously benchmarked rather than a one-off claim. Results
-    are identical by construction — same unrolled oracle."""
-    from financial_data_lakehouse_pipeline__spark.operators import graph
-
-    li = read_table(spark, sf_dir, "lineitem")
-    edges = graph.cooccurrence_edges(li, "l_orderkey", "l_partkey")
-    return graph.pagerank(edges, iters=2, damping=0.85, persist_edges=True)
-
-
 @register(
     "winsorize_prices",
     # Per-group p05/p95 on exact integer cents (bit-identical

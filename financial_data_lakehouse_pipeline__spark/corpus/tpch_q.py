@@ -33,6 +33,7 @@ from financial_data_lakehouse_pipeline__spark.corpus import (
     sql_money_sum,
 )
 from financial_data_lakehouse_pipeline__spark.functions import dmean, money_sum
+from financial_data_lakehouse_pipeline__spark.materialize import pin
 from financial_data_lakehouse_pipeline__spark.sources import read_table
 
 #: Exact revenue term used by most TPC-H queries.
@@ -585,11 +586,11 @@ def waiting_suppliers_q21(spark, sf_dir):
     Plan shape preserved exactly: the correlated EXISTS is a LEFT SEMI
     self-join and the NOT EXISTS a LEFT ANTI self-join, both keyed on
     orderkey against the same per-(order, supplier) last-ship aggregate
-    — never a cartesian. The shared aggregate is localCheckpoint-ed:
+    — never a cartesian. The shared aggregate is pinned:
     its three consumers (the late filter, the semi probe, the anti
     probe) carry different pushed projections, so neither Catalyst's
     ReuseExchange nor AQE stage reuse unifies them (verified: 10
-    parquet scans without the checkpoint, lineitem read 3x) — at 100 TB
+    parquet scans without the pin, lineitem read 3x) — at 100 TB
     one materialization of the ~|orders|-sized aggregate beats three
     full fact scans. 'Late' adapts to shipped >30 days after order
     date (the testdata has no commit/receipt dates); finished orders
@@ -597,9 +598,11 @@ def waiting_suppliers_q21(spark, sf_dir):
     li = read_table(spark, sf_dir, "lineitem")
     o = read_table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
     s = read_table(spark, sf_dir, "supplier")
-    os_ = li.groupBy(
-        F.col("l_orderkey").alias("ok"), F.col("l_suppkey").alias("sk")
-    ).agg(F.max("l_shipdate").alias("last_ship")).localCheckpoint(eager=False)
+    os_ = pin(
+        li.groupBy(
+            F.col("l_orderkey").alias("ok"), F.col("l_suppkey").alias("sk")
+        ).agg(F.max("l_shipdate").alias("last_ship"))
+    )
     late = os_.join(o, os_.ok == o.o_orderkey).filter(
         F.col("last_ship") > F.col("o_orderdate") + F.expr("INTERVAL 30 DAYS")
     ).select("ok", "sk", "last_ship")
@@ -854,7 +857,7 @@ def important_stock_q11(spark, sf_dir):
     scale factors leaves most single nations empty). The
     HAVING-vs-global-scalar shape: per-part exact cent sums, then a
     1-row re-aggregate broadcast back as a cross join. The part-level
-    aggregate is localCheckpoint-ed first (Q21 pattern) so the fact
+    aggregate is pinned first (Q21 pattern) so the fact
     table is scanned ONCE — without it the broadcast side's lineage
     would re-scan lineitem to rebuild pv for the total. The share
     predicate multiplies the BIGINT cent sum by 1000 instead of
@@ -873,11 +876,10 @@ def important_stock_q11(spark, sf_dir):
     cents = F.floor(F.col("l_extendedprice") * F.lit(100.0) + F.lit(0.5)).cast(
         "bigint"
     )
-    pv = (
+    pv = pin(
         li.join(F.broadcast(elig), li.l_suppkey == F.col("s_suppkey"), "left_semi")
         .groupBy("l_partkey")
         .agg(F.sum(cents).alias("val_c"))
-        .localCheckpoint(eager=True)
     )
     tot = pv.agg(F.sum("val_c").alias("tot_c"))
     return (

@@ -13,6 +13,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from financial_data_lakehouse_pipeline__spark.functions import dmean
+from financial_data_lakehouse_pipeline__spark.materialize import pin
 
 
 def bucketize(
@@ -437,12 +438,10 @@ def association_rules(
     Output: (item_a, item_b, pair_count, count_a, count_b, support,
     conf_a_to_b, conf_b_to_a, lift), item_a < item_b.
     """
-    from financial_data_lakehouse_pipeline__spark.operators.dedup import _pin
-
     # pinned: four branches (basket total, item counts, both pair-join
     # sides) re-derived the distinct otherwise — 4 scans + 4 shuffles
     # for one logical dedup (guide §2.4)
-    baskets = _pin(
+    baskets = pin(
         df.select(
             F.col(group_col).alias("__g"), F.col(item_col).alias("__i")
         ).distinct()

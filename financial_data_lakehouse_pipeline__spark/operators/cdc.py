@@ -131,11 +131,10 @@ def merge_upsert(
 
     Equivalent relational form (and the plan this compiles to):
     ``updates UNION ALL (target LEFT ANTI JOIN updates ON keys)`` — one
-    keyed shuffle, no full-table rewrite logic. This is the TESTED
-    parquet-native stand-in for sources/delta_io.upsert_delta (which
-    needs delta-spark); rewrite-in-place then lands via the partitioned
-    writer, ideally partition-pruned to only the partitions the update
-    batch touches.
+    keyed shuffle, no full-table rewrite logic. The transactional form
+    is sources.acid.merge; here rewrite-in-place lands via the
+    partitioned writer, ideally partition-pruned to only the partitions
+    the update batch touches.
 
     Both inputs must share a schema (enforced by unionByName).
     """

@@ -21,12 +21,12 @@ from __future__ import annotations
 
 import hashlib
 import math
-import os
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from financial_data_lakehouse_pipeline__spark.functions import guarded_div, tokens
+from financial_data_lakehouse_pipeline__spark.materialize import pin, release
 from financial_data_lakehouse_pipeline__spark.sources.readers import (
     scan_parallelism_floor,
 )
@@ -179,101 +179,6 @@ def _pairwise_jaccard(
     )
 
 
-#: Session-level pin-mode switch (VERDICT/ADVICE r13: the default
-#: localCheckpoint trades fault tolerance for speed — blocks are
-#: executor-local and NON-replicated with lineage truncated, so on a
-#: real cluster an executor loss or dynamic-allocation decommission
-#: during a query holding a corpus-sized pin kills the job with no
-#: recompute path). Values:
-#:   local      (default) lazy RDD localCheckpoint — fastest; accepts
-#:              the lineage-loss failure mode (fine locally / on static
-#:              executors; SCALE.md §23).
-#:   replicated MEMORY_AND_DISK_2 persist — two replicas AND lineage
-#:              kept (recompute stays possible), for spot/decommission
-#:              regimes where a lost pin must not kill a long query.
-#:   reliable   checkpoint(eager=False) to spark.checkpoint.dir —
-#:              object-store-backed; survives any executor loss.
-#:   off        full lineage, no materialization anywhere — the global
-#:              kill switch for storage-tighter-than-recompute regimes.
-PIN_MODE_ENV = "SPARK_GRAFT_PIN_MODE"
-
-
-def _pin(df: DataFrame, enabled: bool = True) -> DataFrame:
-    """Materialize a multiply-consumed subtree ONCE via a lazy
-    ``localCheckpoint`` (computed on first use inside the consuming job,
-    stored in the block manager, lineage truncated).
-
-    The LSH/prefix pair finders reference their shingle table and their
-    candidate-pair table from 3-6 plan branches each; without
-    materialization Catalyst re-evaluates the whole
-    tokenize→explode→md5→aggregate subtree per branch (the round-13
-    minhash plan had 20 parquet scans / 38 exchanges for ONE logical
-    pass — guide §2.4: remove repeated work feeding the same exchange).
-    A DataFrame-level MEMORY_AND_DISK ``persist`` was measured SLOWER
-    than recompute here (columnar cache build + serialized branch
-    execution, SCALE.md §13); the RDD-level local checkpoint skips the
-    columnar conversion and was measured faster than both (A/B at
-    sf0.1: median 5.2s recompute vs 2.7s pinned for minhash_lsh_pairs).
-    Lazy (``eager=False``) so plan-only callers (tests, plan reports)
-    never trigger execution at build time.
-
-    ``enabled=False`` restores full lineage — for plan inspection, or
-    at extreme scale when executor storage is tighter than recompute
-    (the stored-index incremental path never pins base-scale tables).
-    The ``SPARK_GRAFT_PIN_MODE`` env var swaps the storage strategy
-    session-wide (replicated / reliable / off) without touching any
-    call site — the fault-tolerance escape hatch for corpus-sized pins
-    at cluster scale (see :data:`PIN_MODE_ENV`)."""
-    if not enabled:
-        return df
-    mode = os.environ.get(PIN_MODE_ENV, "local")
-    if mode == "off":
-        return df
-    if mode == "replicated":
-        from pyspark import StorageLevel
-
-        return df.persist(StorageLevel.MEMORY_AND_DISK_2)
-    if mode == "reliable":
-        return df.checkpoint(eager=False)
-    return df.localCheckpoint(eager=False)
-
-
-def _release_pin(df: DataFrame) -> None:
-    """Free a pin's executor blocks once no future computation can
-    reference it (superseded loop state; a routed-away pre-pass table).
-    Without this, cleanup waits on driver GC + ContextCleaner, so a
-    long-lived session accumulates checkpoint blocks with unbounded
-    residency (ADVICE r13). Best-effort: the localCheckpoint blocks
-    hang off the LogicalRDD's internal RDD (stable Spark API reached
-    via py4j); any failure just leaves the old GC-based cleanup."""
-    try:
-        df.unpersist()  # covers the 'replicated' persist mode; no-op otherwise
-    except Exception:
-        pass
-    try:
-        df._jdf.queryExecution().logical().rdd().unpersist(False)
-    except Exception:
-        pass
-
-
-def _maybe_persist(df: DataFrame, persist: bool) -> DataFrame:
-    """Optionally MEMORY_AND_DISK-persist the reused shingle subtree.
-
-    The shingle table feeds 3-4 plan branches (signatures/sizes/both
-    self-join sides); without persistence Spark recomputes the
-    tokenize+explode subtree per branch. Locally that recompute is cheap
-    (columnar scan + codegen beat the memory-store round trip — measured
-    3.6s vs 4.3s at sf0.1), so the default is False; flip it on when the
-    corpus scan is the expensive part (remote object storage, 100 TB
-    inputs, wide rows), where 4 passes over the source dominate. Spark's
-    LRU evicts the block under pressure; one-shot callers need no cleanup."""
-    if persist:
-        from pyspark import StorageLevel
-
-        return df.persist(StorageLevel.MEMORY_AND_DISK)
-    return df
-
-
 def drop_stop_shingles(
     shingles: DataFrame, max_doc_freq: int
 ) -> DataFrame:
@@ -305,7 +210,6 @@ def ngram_jaccard_pairs(
     text_col: str = "text",
     n: int = 3,
     threshold: float = 0.5,
-    persist_shingles: bool = False,
     max_doc_freq: int | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs by exact n-gram Jaccard >= threshold.
@@ -316,10 +220,7 @@ def ngram_jaccard_pairs(
     (:func:`drop_stop_shingles`) before the self-join; Jaccard is then
     exact over the capped shingle universe.
     """
-    sh = _maybe_persist(
-        word_shingles(scan_parallelism_floor(df), id_col, text_col, n),
-        persist_shingles,
-    )
+    sh = word_shingles(scan_parallelism_floor(df), id_col, text_col, n)
     if max_doc_freq is not None:
         sh = drop_stop_shingles(sh, max_doc_freq)
     return _pairwise_jaccard(sh, id_col).filter(F.col("jaccard") >= threshold)
@@ -334,7 +235,6 @@ def prefix_filter_jaccard_pairs(
     max_doc_freq: int | None = None,
     dfreq: DataFrame | None = None,
     shingles: DataFrame | None = None,
-    pin_intermediates: bool = True,
 ) -> DataFrame:
     """Near-duplicate pairs by exact n-gram Jaccard >= threshold via
     PREFIX FILTERING (the SSJoin/PPJoin candidate-pruning principle) —
@@ -375,11 +275,11 @@ def prefix_filter_jaccard_pairs(
     ``shingles`` — optional precomputed shingle table over the SAME
     (df, n, cap) universe (the auto router pins and hands over its
     pre-pass shingles, saving a full tokenize pass).
-    ``pin_intermediates`` materializes the shingle, prefix and
-    candidate tables once instead of re-evaluating their subtrees per
+    The shingle, prefix and candidate tables are pinned
+    (``materialize.pin``) instead of re-evaluating their subtrees per
     consuming branch (shingles feed dfreq/ranked/sizes plus both verify
     posting sides; prefixes feed both candidate join sides) — guide
-    §2.4; pass False to inspect full lineage.
+    §2.4.
     """
     from fractions import Fraction
 
@@ -401,7 +301,7 @@ def prefix_filter_jaccard_pairs(
         sh = word_shingles(scan_parallelism_floor(df), id_col, text_col, n)
         if max_doc_freq is not None:
             sh = drop_stop_shingles(sh, max_doc_freq)
-        sh = _pin(sh, pin_intermediates)
+        sh = pin(sh)
     else:
         sh = shingles
     if dfreq is None:
@@ -412,11 +312,8 @@ def prefix_filter_jaccard_pairs(
             Window.partitionBy(id_col).orderBy("__df", "shingle")
         ),
     )
-    sizes = _pin(
-        sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("__sz")),
-        pin_intermediates,
-    )
-    pref = _pin(
+    sizes = pin(sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("__sz")))
+    pref = pin(
         ranked.join(sizes, id_col)
         .filter(
             F.col("__rn")
@@ -425,16 +322,14 @@ def prefix_filter_jaccard_pairs(
                      f"DIV {fr.denominator}")
             + F.lit(1)
         )
-        .select(F.col(id_col), "shingle"),
-        pin_intermediates,
+        .select(F.col(id_col), "shingle")
     )
-    cands = _pin(
+    cands = pin(
         pref.select(F.col(id_col).alias("id_a"), "shingle")
         .join(pref.select(F.col(id_col).alias("id_b"), "shingle"), "shingle")
         .filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b")
-        .distinct(),
-        pin_intermediates,
+        .distinct()
     )
     return _pairwise_jaccard(sh, id_col, restrict_to=cands, sizes=sizes).filter(
         F.col("jaccard") >= threshold
@@ -529,10 +424,8 @@ def minhash_lsh_pairs(
     num_hashes: int = 16,
     bands: int = 4,
     threshold: float = 0.5,
-    persist_shingles: bool = False,
     max_doc_freq: int | None = None,
     max_bucket_size: int | None = None,
-    pin_intermediates: bool = True,
 ) -> DataFrame:
     """Near-dup pairs via MinHash banding, verified with exact Jaccard.
 
@@ -558,37 +451,32 @@ def minhash_lsh_pairs(
     cap, which at threshold-grade similarity are better handled by exact
     dedup first.
 
-    ``pin_intermediates`` materializes the shingle table and the
-    candidate-pair table once (:func:`_pin`) instead of re-evaluating
-    their subtrees per consuming branch (shingles feed the signature
-    aggregation plus both verify posting sides; candidates feed both
-    member semi-joins plus the pair restrict) — measured ~1.9x at
-    sf0.1 with identical output. Pass False to inspect full lineage.
+    The shingle, signature and candidate-pair tables are pinned
+    (``materialize.pin``) instead of re-evaluating their subtrees per
+    consuming branch (shingles feed the signature aggregation plus both
+    verify posting sides; candidates feed both member semi-joins plus
+    the pair restrict) — measured ~1.9x at sf0.1 with identical output.
     """
     if num_hashes % bands:
         raise ValueError("num_hashes must divide evenly into bands")
     rows_per_band = num_hashes // bands
-    sh = _maybe_persist(
-        word_shingles(scan_parallelism_floor(df), id_col, text_col, n),
-        persist_shingles,
-    )
+    sh = word_shingles(scan_parallelism_floor(df), id_col, text_col, n)
     if max_doc_freq is not None:
         sh = drop_stop_shingles(sh, max_doc_freq)
-    sh = _pin(sh, pin_intermediates and not persist_shingles)
+    sh = pin(sh)
     # one narrow row per doc, consumed by both bucket join sides and the
     # verify denominators — pin so the 16-min aggregation runs once
-    sig = _pin(minhash_signatures(sh, id_col, num_hashes), pin_intermediates)
+    sig = pin(minhash_signatures(sh, id_col, num_hashes))
 
     buckets = _band_buckets(sig, id_col, bands, rows_per_band, max_bucket_size)
 
     l = buckets.select(F.col(id_col).alias("id_a"), "band", "key")
     r = buckets.select(F.col(id_col).alias("id_b"), "band", "key")
-    candidates = _pin(
+    candidates = pin(
         l.join(r, ["band", "key"])
         .filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b")
-        .distinct(),
-        pin_intermediates,
+        .distinct()
     )
 
     exact = _pairwise_jaccard(
@@ -678,7 +566,12 @@ def dedup_route(
     only driver-side actions are two counts and a 1-row collect.
 
     Returns ``(route, stats)`` with route in {"prefix", "lsh"} and the
-    stats dict carrying the measured quantities for logging/tests."""
+    stats dict carrying the measured quantities for logging/tests.
+
+    With ``return_shingles`` the returned shingle table is a pin whose
+    ownership passes to the caller, under the sole-owner rule of
+    ``materialize.release``: once the caller releases it, neither that
+    handle nor any frame built on it may be used again."""
     from fractions import Fraction
 
     from financial_data_lakehouse_pipeline__spark.operators import sampling
@@ -711,7 +604,7 @@ def dedup_route(
             cap = max(1, max_doc_freq * sample_buckets // sampling.BUCKETS)
         sh = drop_stop_shingles(sh, cap)
     if reusable:
-        sh = _pin(sh)  # post-cap: both consumers need the capped universe
+        sh = pin(sh)  # post-cap: both consumers need the capped universe
     dfreq = sh.groupBy("shingle").agg(
         F.count(F.lit(1)).cast("long").alias("__df")
     )
@@ -795,6 +688,9 @@ def similar_pairs_auto(
         return_dfreq=True,
         return_shingles=True,
     )
+    # this call is the sole owner of the pinned ``shingles``: on the
+    # prefix route they are handed on inside the returned plan (so never
+    # released here), on the lsh route nothing else holds them
     if route == "prefix":
         return prefix_filter_jaccard_pairs(
             df, id_col, text_col, n, threshold, max_doc_freq=max_doc_freq,
@@ -805,7 +701,7 @@ def similar_pairs_auto(
         # pin, but the LSH path never reads it (minhash_lsh_pairs
         # tokenizes and pins its own capped universe) — free the blocks
         # instead of leaking them until driver GC (ADVICE r13)
-        _release_pin(shingles)
+        release(shingles)
     return minhash_lsh_pairs(
         df, id_col, text_col, n,
         num_hashes=num_hashes, bands=bands, threshold=threshold,
@@ -839,7 +735,7 @@ def duplicate_clusters(
     # lineage — without materialization the whole upstream pair-finding
     # DAG (LSH at minimum) re-executes once per iteration (guide §2.4);
     # the edge list is pair-volume-bounded at any scale
-    edges = _pin(
+    edges = pin(
         edges.unionByName(
             pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
         ).distinct()
@@ -874,13 +770,13 @@ def duplicate_clusters(
         # PREVIOUS round's label blocks can never be referenced again —
         # free them now instead of waiting on driver GC (ADVICE r13;
         # unbounded residency across a long loop otherwise)
-        _release_pin(labels)
+        release(labels)
         labels = new_labels
         if changed == 0:
             break
     # the surviving labels are materialized (the convergence count ran
     # over them), so the edge pin is fully consumed too
-    _release_pin(edges)
+    release(edges)
     return labels.withColumn(
         "is_representative", F.col(id_col) == F.col("cluster_id")
     )
@@ -930,11 +826,11 @@ def simhash_pairs(
     the fingerprint split into d+1 blocks matches exactly), then verifies
     with bit_count(xor) — equi-join + filter, never all-pairs.
 
-    The per-doc fingerprint table is pinned (:func:`_pin`) so the token
+    The per-doc fingerprint table is pinned so the token
     explode + per-bit popcount aggregation runs once instead of once per
     candidate join side (was 2 full scans+aggregations, guide §2.4).
     """
-    s = _pin(simhash(df, id_col, text_col, bits))
+    s = pin(simhash(df, id_col, text_col, bits))
     blocks = max_hamming + 1
     width = bits // blocks or 1
     # Explode each fingerprint into (block_idx, block_value) rows and
@@ -1239,7 +1135,6 @@ def incremental_minhash_pairs(
     base_shingles: DataFrame | None = None,
     base_signatures: DataFrame | None = None,
     base_buckets: DataFrame | None = None,
-    pin_buckets: bool = True,
 ) -> DataFrame:
     """Near-dup pairs for a NEW batch against an EXISTING corpus — the
     nightly-ingest shape of dedup at 100 TB: the historical corpus was
@@ -1267,15 +1162,14 @@ def incremental_minhash_pairs(
     which equals the full-union count on exactly those buckets, so the
     output is bit-identical to the old union-shaped plan (the SQL
     oracle twin needs no change) while no shuffle's width scales with
-    the base. The pruned bucket table is pinned via localCheckpoint
-    (``pin_buckets``; plan tests pass False to inspect full lineage) so
-    its 4+ downstream consumers read one materialization instead of
+    the base. The pruned bucket table is pinned (``materialize.pin``)
+    so its 4+ downstream consumers read one materialization instead of
     re-scanning the base index per branch; the verify stage broadcasts
     the candidate member ids (bounded by the batch's collision volume)
     so the base shingle/size index scans are map-side-filtered too.
-    ``pin_buckets`` also gates the batch-bounded materializations: the
-    batch's own shingle/signature tables and the candidate-pair table,
-    each otherwise re-derived once per consuming branch. Base-scale
+    The batch-bounded tables are pinned too: the batch's own
+    shingle/signature tables and the candidate-pair table, each
+    otherwise re-derived once per consuming branch. Base-scale
     tables are NEVER pinned, on either path (round 14; ADVICE r13):
     pinning them wrote O(corpus) blocks per call — per micro-batch from
     the streaming sink — and the LogicalRDD barrier stopped the
@@ -1331,14 +1225,13 @@ def incremental_minhash_pairs(
     # Batch-side tables are batch-bounded at any scale and consumed by
     # 2-3 branches each (shingles: the union's verify sides; signatures:
     # band keys + the union's sizes) — pin so the batch tokenizes and
-    # aggregates once (gated on ``pin_buckets`` like every other
-    # materialization here so plan tests can see full lineage).
+    # aggregates once.
     sh_inc = word_shingles(
         scan_parallelism_floor(incoming.select(id_col, text_col)),
         id_col, text_col, n,
     )
-    sh_inc = _pin(sh_inc, pin_buckets)
-    sig_inc = _pin(minhash_signatures(sh_inc, id_col, num_hashes), pin_buckets)
+    sh_inc = pin(sh_inc)
+    sig_inc = pin(minhash_signatures(sh_inc, id_col, num_hashes))
     if base_shingles is not None:
         # stored-index path: base tables come straight off parquet —
         # NEVER pin base-scale data (the scans are the cheap part; a
@@ -1396,7 +1289,7 @@ def incremental_minhash_pairs(
     # lazy (was an EAGER checkpoint through round 13 — one redundant
     # materialization job per call; the candidate self-join is the
     # forcing action and both its sides read the same blocks)
-    buckets = _pin(buckets, pin_buckets)
+    buckets = pin(buckets)
     l = buckets.select(
         F.col(id_col).alias("id_a"), "band", "key", F.col("__is_new").alias("__new_a")
     )
@@ -1406,13 +1299,12 @@ def incremental_minhash_pairs(
     # candidate pairs are batch-collision-bounded and consumed by three
     # branches (both member id sets + the pair restrict) — pin so the
     # bucket self-join runs once
-    candidates = _pin(
+    candidates = pin(
         l.join(r, ["band", "key"])
         .filter(F.col("id_a") < F.col("id_b"))
         .filter(F.col("__new_a") | F.col("__new_b"))
         .select("id_a", "id_b")
-        .distinct(),
-        pin_buckets,
+        .distinct()
     )
     if base_shingles is None:
         # Manual member pushdown for the inline base (round 14): the
@@ -1433,7 +1325,7 @@ def incremental_minhash_pairs(
             .unionByName(candidates.select(F.col("id_b").alias(id_col)))
             .distinct()
         )
-        sh_verify_base = _pin(
+        sh_verify_base = pin(
             word_shingles(
                 scan_parallelism_floor(
                     base.select(id_col, text_col).join(
@@ -1441,8 +1333,7 @@ def incremental_minhash_pairs(
                     )
                 ),
                 id_col, text_col, n,
-            ),
-            pin_buckets,
+            )
         )
         sh = sh_verify_base.unionByName(sh_inc)
     exact = _pairwise_jaccard(

@@ -15,6 +15,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from financial_data_lakehouse_pipeline__spark.functions import dsum, guarded_div
+from financial_data_lakehouse_pipeline__spark.materialize import pin
 
 
 def tumbling_window_agg(
@@ -218,7 +219,6 @@ def concurrency_sweep(
     start: Column,
     end_exclusive: Column,
     weight: Column | None = None,
-    pin: bool = True,
 ) -> DataFrame:
     """Sweep-line concurrency curve: for every interval boundary, how
     many intervals [start, end_exclusive) are active at that instant —
@@ -241,16 +241,11 @@ def concurrency_sweep(
     Output: (at, delta, concurrent) — ``concurrent`` is the count active
     on [at, next_boundary).
     """
-    from financial_data_lakehouse_pipeline__spark.operators.dedup import _pin
-
     w = weight if weight is not None else F.lit(1).cast("bigint")
     # pinned: the +start and -end delta branches each re-derived the
     # interval table (for sessionized inputs that is a full window
-    # aggregation per branch — guide §2.4). ``pin=False`` (or
-    # SPARK_GRAFT_PIN_MODE) restores full lineage for input-scale
-    # tables when executor storage / fault tolerance demand it
-    # (ADVICE r13).
-    df = _pin(df, pin)
+    # aggregation per branch — guide §2.4).
+    df = pin(df)
     deltas = df.select(start.alias("at"), w.alias("__d")).unionAll(
         df.select(end_exclusive.alias("at"), (-w).alias("__d"))
     )

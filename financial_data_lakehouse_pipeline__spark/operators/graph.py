@@ -18,32 +18,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from financial_data_lakehouse_pipeline__spark.materialize import pin
+
 #: Contribution quantum — 1e-12, same as the k-means centroid means.
 _Q = 1e12
 
 
-def _loop_edges_pin(edges: DataFrame, pin: bool = True) -> DataFrame:
-    """Materialize a loop-invariant edge table once for per-iteration
-    reuse (lazy localCheckpoint). NOTE — co-partitioning on the
-    iteration join key was TRIED here and does not survive the pin
-    (round 14, VERDICT r13 #6): under AQE every materialization barrier
-    — ``localCheckpoint`` and ``persist`` alike — reports
-    ``UnknownPartitioning(0)`` at static-planning time (the barrier's
-    final partitioning is not known until its adaptive sub-plan
-    executes; verified in plans/r14/pagerank_copurchase_after.txt and a
-    minimal repro), so EnsureRequirements re-inserts the join exchange
-    regardless of any upstream ``repartition(N, key)``, which then only
-    ADDS a shuffle. What remains — and is kept — is the
-    materialization itself: the symmetrized union and its upstream
-    self-join execute once instead of once per iteration branch."""
-    from financial_data_lakehouse_pipeline__spark.operators.dedup import _pin
-
-    return _pin(edges, pin)
-
-
-def cooccurrence_pairs(
-    df: DataFrame, group_col: str, item_col: str, pin: bool = True
-) -> DataFrame:
+def cooccurrence_pairs(df: DataFrame, group_col: str, item_col: str) -> DataFrame:
     """Deduplicated co-occurrence pairs with src < dst (one row per
     undirected edge): items sharing a group value (parts in the same
     order, docs with the same fingerprint, ...) get an edge. Self-join
@@ -51,23 +32,20 @@ def cooccurrence_pairs(
     sizes first (a 10k-item group contributes 50M pairs) the same way
     the dedup operators cap posting lists.
 
-    ``pin`` materializes the deduplicated pair table once (lazy
-    localCheckpoint): every consumer of a co-occurrence graph
-    re-references it from multiple plan branches (symmetrized union ×
-    per-iteration joins in pagerank/label-propagation; three self-join
-    sides in triangle counting), and without materialization each
-    branch re-runs the group self-join + distinct (measured at sf0.1:
-    pagerank 6.8 → 4.9 s median). Pass False for full-lineage plans."""
-    from financial_data_lakehouse_pipeline__spark.operators.dedup import _pin
-
+    The deduplicated pair table is pinned (``materialize.pin``): every
+    consumer of a co-occurrence graph re-references it from multiple
+    plan branches (symmetrized union × per-iteration joins in
+    pagerank/label-propagation; three self-join sides in triangle
+    counting), and without materialization each branch re-runs the
+    group self-join + distinct (measured at sf0.1: pagerank 6.8 → 4.9 s
+    median)."""
     a = df.select(F.col(group_col).alias("__g"), F.col(item_col).alias("src"))
     b = df.select(F.col(group_col).alias("__g"), F.col(item_col).alias("dst"))
-    return _pin(
+    return pin(
         a.join(b, "__g")
         .filter(F.col("src") < F.col("dst"))
         .select("src", "dst")
-        .distinct(),
-        pin,
+        .distinct()
     )
 
 
@@ -117,12 +95,7 @@ def triangle_counts(pairs: DataFrame) -> DataFrame:
     )
 
 
-def pagerank(
-    edges: DataFrame,
-    iters: int = 2,
-    damping: float = 0.85,
-    persist_edges: bool | None = None,
-) -> DataFrame:
+def pagerank(edges: DataFrame, iters: int = 2, damping: float = 0.85) -> DataFrame:
     """PageRank on a symmetric edge list, ``iters`` synchronous
     iterations, uniform init 1/N.
 
@@ -137,22 +110,24 @@ def pagerank(
     by the node key to make it shuffle-free) + one groupBy dst. No
     driver-side state at any size.
 
-    Recompute vs persist (``persist_edges``, default auto): every
-    iteration references the loop-invariant edge lineage, so without
-    materialization the plan re-derives it O(iters) times. Whether that
-    costs anything is regime-dependent, and we measured it rather than
-    guessed (sf0.1, 2.4M edges, local[32], median of 4): at iters=2
-    recompute is 5.3s vs 9.1s with a MEMORY_AND_DISK persist — the
-    columnar cache build plus serialized branch execution loses to
-    re-running the codegen'd self-join over NVMe-cached parquet. The
-    crossover arrives as iterations grow (plan size and re-derivation
-    are linear in iters) or when the source scan itself is the expensive
-    part (remote object storage, 100 TB). Auto therefore persists only
-    when ``iters > 4``; callers in the scan-bound regime pass
-    ``persist_edges=True`` explicitly. When persisting, rank lineage is
-    also truncated with a ``localCheckpoint`` every 5 iterations, and
-    the result is eagerly materialized so the cache can be released
-    before returning (no cache leak into the caller's session).
+    Loop-invariant tables are pinned once (guide §2.4): every iteration
+    references the symmetrized edge table and the degree table, so
+    without materialization the plan re-derives them O(iters) times. A
+    MEMORY_AND_DISK persist of the edges was measured slower than plain
+    recompute (sf0.1, 2.4M edges, local[32], median of 4: 9.1 s vs
+    5.3 s at iters=2 — columnar cache build plus serialized branch
+    execution), and the pin faster than both. Co-partitioning the
+    pinned tables on the join key was TRIED and does not survive the
+    pin (round 14, VERDICT r13 #6): under AQE every materialization
+    barrier — ``localCheckpoint`` and ``persist`` alike — reports
+    ``UnknownPartitioning(0)`` at static-planning time (its final
+    partitioning is not known until its adaptive sub-plan executes;
+    verified in plans/r14/pagerank_copurchase_after.txt and a minimal
+    repro), so EnsureRequirements re-inserts the join exchange
+    regardless of any upstream ``repartition(N, key)``, which then only
+    ADDS a shuffle. The rank table's lineage is cut with a lazy
+    ``localCheckpoint`` every 5 iterations (a loop-lineage cut, not a
+    reuse pin, so it holds under every pin mode).
 
     Contribution-less nodes (possible only if the caller passes a
     non-symmetric edge list — the parameter is just ``edges``) keep the
@@ -161,26 +136,8 @@ def pagerank(
 
     Output: (node, deg, pagerank).
     """
-    from pyspark import StorageLevel
-
-    from financial_data_lakehouse_pipeline__spark.operators.dedup import _pin
-
-    if persist_edges is None:
-        persist_edges = iters > 4
-    # Loop-invariant tables are materialized ONCE (guide §2.4): the
-    # symmetrized edge table (previously the union + its upstream
-    # re-executed per iteration branch) and the degree table
-    # (previously one re-aggregation per iteration in the rank update).
-    # Co-partitioning them on the join key was tried and REVERTED — see
-    # _loop_edges_pin: under AQE a materialization barrier loses its
-    # outputPartitioning at planning time, so the upstream repartition
-    # only added a shuffle without removing the per-round join exchange.
-    edges = edges.select("src", "dst")
-    if persist_edges:
-        edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
-    else:
-        edges = _loop_edges_pin(edges)
-    deg = _pin(
+    edges = pin(edges.select("src", "dst"))
+    deg = pin(
         edges.groupBy(F.col("src").alias("node")).agg(
             F.count(F.lit(1)).cast("bigint").alias("deg")
         )
@@ -217,13 +174,9 @@ def pagerank(
                 ).alias("r"),
             )
         )
-        if persist_edges and (i + 1) % 5 == 0 and (i + 1) < iters:
-            ranks = ranks.localCheckpoint(eager=True)
-    out = ranks.select("node", "deg", F.col("r").alias("pagerank"))
-    if persist_edges:
-        out = out.localCheckpoint(eager=True)
-        edges.unpersist()
-    return out
+        if (i + 1) % 5 == 0 and (i + 1) < iters:
+            ranks = ranks.localCheckpoint(eager=False)
+    return ranks.select("node", "deg", F.col("r").alias("pagerank"))
 
 
 def _canonical_pairs(edges: DataFrame) -> DataFrame:
@@ -480,8 +433,8 @@ def label_propagation(edges: DataFrame, iters: int = 2) -> DataFrame:
     # Loop-invariant edges: one materialization — the symmetrized union
     # and its upstream self-join otherwise re-execute per iteration
     # (guide §2.4). Co-partitioning on dst was tried and reverted; see
-    # _loop_edges_pin.
-    edges = _loop_edges_pin(edges.select("src", "dst"))
+    # pagerank.
+    edges = pin(edges.select("src", "dst"))
     labels = (
         edges.select("src")
         .distinct()

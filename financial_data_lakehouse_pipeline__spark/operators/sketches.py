@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from financial_data_lakehouse_pipeline__spark.materialize import pin
+
 
 def _bucket(key: Column, seed: int, width: int) -> Column:
     """Row hash d_seed(key) ∈ [0, width): 28-bit md5-prefix integer of
@@ -132,15 +134,13 @@ def cms_heavy_hitters(
 
     Output: (key, est_cnt, cnt) for keys with exact cnt >= min_count.
     """
-    from financial_data_lakehouse_pipeline__spark.operators.dedup import _pin
-
     sketch = count_min_sketch(df, key_col, depth, width)
     distinct_keys = df.filter(F.col(key_col).isNotNull()).select(key_col).distinct()
     # pinned: both the semi-join probe and the final attach re-reference
     # the candidate table, which would re-run the sketch aggregation +
     # estimate join per branch (the hot tail is min_count-bounded, so
     # the materialization is small at any scale)
-    cand = _pin(
+    cand = pin(
         cms_estimate(sketch, distinct_keys, key_col, depth, width).filter(
             F.col("est_cnt") >= min_count
         )

@@ -13,6 +13,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from financial_data_lakehouse_pipeline__spark.functions import guarded_div, tokens
+from financial_data_lakehouse_pipeline__spark.materialize import pin
 
 # Tiny per-language stopword lists for the n-gram/stopword language
 # heuristic. Deliberately small + ASCII so the same lists are trivially
@@ -310,7 +311,6 @@ def tfidf_top_terms(
     text_col: str = "text",
     top_k: int = 3,
     min_term_len: int = 3,
-    pin: bool = True,
 ) -> DataFrame:
     """Top-k most characteristic terms per document by tf x idf.
 
@@ -324,19 +324,11 @@ def tfidf_top_terms(
     groupBy for df (broadcast — vocabulary is tiny relative to the
     corpus), one window top-k. Ties broken by (tf desc, term asc) —
     fully deterministic.
-
-    ``pin`` materializes the (corpus-sized, narrow) tf table once for
-    its two consumers; pass False — or set SPARK_GRAFT_PIN_MODE — when
-    executor storage is tighter than recompute, or on clusters where a
-    non-replicated localCheckpoint's lineage loss is unacceptable
-    (ADVICE r13; the off-switch every corpus-scale pin now has).
     """
     from financial_data_lakehouse_pipeline__spark.functions import tokens as _tokens
     from pyspark.sql import Window
 
     canon = F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " ")
-    from financial_data_lakehouse_pipeline__spark.operators.dedup import _pin
-
     from financial_data_lakehouse_pipeline__spark.sources.readers import (
         scan_parallelism_floor,
     )
@@ -349,9 +341,7 @@ def tfidf_top_terms(
     # pinned: the df aggregation and the scoring join both consume the
     # tf table — without materialization the tokenize/explode/groupBy
     # shuffle runs twice (guide §2.4)
-    tf = _pin(
-        terms.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf")), pin
-    )
+    tf = pin(terms.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf")))
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n_docs = df.select(F.countDistinct(F.col(id_col)).alias("__n"))
     w = Window.partitionBy(id_col).orderBy(
@@ -897,8 +887,6 @@ def naive_bayes_train(
         canonical_text,
     )
 
-    from financial_data_lakehouse_pipeline__spark.operators.dedup import _pin
-
     from financial_data_lakehouse_pipeline__spark.sources.readers import (
         scan_parallelism_floor,
     )
@@ -910,7 +898,7 @@ def naive_bayes_train(
     # pinned: the totals aggregate and the weight projection both
     # consume the count table — without materialization the tokenize/
     # explode/groupBy shuffle runs twice (vocabulary-sized, bounded)
-    counts = _pin(
+    counts = pin(
         toks.groupBy("term").agg(
             F.sum(F.when(F.col("__y"), 1).otherwise(0)).cast("bigint").alias("c_pos"),
             F.sum(F.when(F.col("__y"), 0).otherwise(1)).cast("bigint").alias("c_neg"),

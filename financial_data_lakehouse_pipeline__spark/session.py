@@ -98,7 +98,7 @@ def build_session(
     # 1g Spark default OOM-killed the full sf0.1 corpus run once the
     # persist-heavy queries landed (32 concurrent tasks sharing 1g =
     # ~30 MB each; java.lang.OutOfMemoryError in the sort-spill reader
-    # during pagerank_copurchase_persist, round 5). Default
+    # of a persisted-edges pagerank, round 5). Default
     # container-aware: ~1/8 of available RAM clamped to [2g, 8g],
     # where "available" is min(host physical RAM, cgroup memory limit)
     # — sysconf reports HOST RAM, so without the cgroup read a

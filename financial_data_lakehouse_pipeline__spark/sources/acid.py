@@ -2,9 +2,8 @@
 transaction layer the reference's managed warehouse tables imply
 (reference sql/hive_schemas.sql:78-106: managed tables rebuilt by full
 overwrite each daily run) re-expressed as an incremental, versioned,
-optimistically-concurrent log over plain parquet, because delta-spark is
-not installed in this container (sources/delta_io.py stays import-gated
-and activates unchanged when it is).
+optimistically-concurrent log over plain parquet, with no dependency
+beyond Spark itself; :func:`merge` is its MERGE upsert.
 
 Layout (all under the table root):
 

@@ -245,9 +245,9 @@ def upsert_sink(
     transaction log: readers always see a complete committed version,
     and the versions double as time travel.
 
-    At scale the same foreachBatch body targets delta_io.upsert_delta
-    (real ACID MERGE, no full-table rewrite); the copy-on-write variant
-    here keeps the semantics testable without delta-spark.
+    At scale the same foreachBatch body targets sources.acid.merge
+    (ACID MERGE that rewrites only the files holding matched keys); the
+    copy-on-write variant here rewrites the whole table.
 
     Returns the StreamingQuery (caller awaits termination); read the
     result with :func:`read_upsert_state`.

@@ -1,0 +1,70 @@
+"""Guard: pin storage is decided in ``materialize.py`` alone.
+
+Scans the engine package's code tokens (comments and strings are
+skipped, so prose may still name the APIs) and fails on:
+
+- ``.persist(`` or ``.checkpoint(`` anywhere outside materialize.py;
+- any use of the name ``_pin`` (the retired private helper);
+- ``.localCheckpoint(`` in a file the materialize module docstring does
+  not list as a non-pin lineage cut.
+"""
+
+from __future__ import annotations
+
+import io
+import os
+import re
+import tokenize
+
+from financial_data_lakehouse_pipeline__spark import materialize
+
+PKG = os.path.dirname(os.path.abspath(materialize.__file__))
+
+
+def _engine_files() -> list[str]:
+    out = []
+    for root, _dirs, files in os.walk(PKG):
+        out += [
+            os.path.relpath(os.path.join(root, f), PKG)
+            for f in files
+            if f.endswith(".py")
+        ]
+    return sorted(out)
+
+
+def _code_names(path: str) -> set[str]:
+    """Names called as ``.name(`` in code, plus every bare NAME token
+    (prefixed with '!') — comments and string literals excluded."""
+    with open(os.path.join(PKG, path), encoding="utf-8") as fh:
+        toks = [
+            t for t in tokenize.generate_tokens(io.StringIO(fh.read()).readline)
+            if t.type not in (tokenize.COMMENT, tokenize.NL, tokenize.NEWLINE,
+                              tokenize.INDENT, tokenize.DEDENT)
+        ]
+    found = {"!" + t.string for t in toks if t.type == tokenize.NAME}
+    for a, b, c in zip(toks, toks[1:], toks[2:]):
+        if a.string == "." and b.type == tokenize.NAME and c.string == "(":
+            found.add(b.string)
+    return found
+
+
+def _local_checkpoint_allowlist() -> set[str]:
+    doc = materialize.__doc__
+    tail = doc[doc.index("Direct ``localCheckpoint`` calls"):]
+    return set(re.findall(r"^\s+(\S+\.py)\s", tail, re.M))
+
+
+def test_pin_storage_is_decided_only_in_materialize():
+    allow = _local_checkpoint_allowlist()
+    files = _engine_files()
+    assert allow and allow <= set(files), allow  # no stale allowlist entries
+    bad = []
+    for path in files:
+        calls = _code_names(path)
+        if path != "materialize.py":
+            bad += [f"{path}: .{m}(" for m in ("persist", "checkpoint") if m in calls]
+            if "localCheckpoint" in calls and path not in allow:
+                bad.append(f"{path}: .localCheckpoint( (not on the allowlist)")
+        if "!_pin" in calls:
+            bad.append(f"{path}: _pin")
+    assert not bad, bad

@@ -1,13 +1,33 @@
-"""Pin storage posture (round 14, VERDICT r13 #7 / ADVICE r13): the
-session-level SPARK_GRAFT_PIN_MODE switch and the explicit block release
-for superseded pins."""
+"""Pin storage posture: the session-level SPARK_GRAFT_PIN_MODE switch
+and the explicit block release for superseded pins
+(``materialize.pin`` / ``materialize.release``)."""
 
 from __future__ import annotations
+
+import hashlib
+import os
+import sys
 
 import pytest
 from pyspark.sql import functions as F
 
-from financial_data_lakehouse_pipeline__spark.operators import dedup
+from financial_data_lakehouse_pipeline__spark import corpus, materialize
+
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
+
+from check_oracle import normalize  # noqa: E402
+
+#: Corpus queries whose plans carry reuse pins (LSH, incremental LSH,
+#: pagerank, tf-idf, the concurrency sweep, CMS heavy hitters, TPC-H Q11).
+PIN_QUERIES = (
+    "minhash_lsh_pairs_docs",
+    "incremental_lsh_dedup_docs",
+    "pagerank_copurchase",
+    "tfidf_top_terms_docs",
+    "session_concurrency",
+    "cms_heavy_users",
+    "important_stock_q11",
+)
 
 
 @pytest.fixture()
@@ -22,27 +42,22 @@ def _plan_name(df) -> str:
 
 
 def test_pin_default_is_local_checkpoint(small_df, monkeypatch):
-    monkeypatch.delenv(dedup.PIN_MODE_ENV, raising=False)
-    pinned = dedup._pin(small_df)
+    monkeypatch.delenv(materialize.PIN_MODE_ENV, raising=False)
+    pinned = materialize.pin(small_df)
     # a (lazy) localCheckpoint rewrites the plan to a LogicalRDD leaf
     assert _plan_name(pinned) == "LogicalRDD"
     assert pinned.count() == 100
 
 
 def test_pin_mode_off_keeps_full_lineage(small_df, monkeypatch):
-    monkeypatch.setenv(dedup.PIN_MODE_ENV, "off")
-    pinned = dedup._pin(small_df)
+    monkeypatch.setenv(materialize.PIN_MODE_ENV, "off")
+    pinned = materialize.pin(small_df)
     assert pinned is small_df  # the global kill switch: no-op
 
 
-def test_pin_disabled_flag_keeps_full_lineage(small_df, monkeypatch):
-    monkeypatch.delenv(dedup.PIN_MODE_ENV, raising=False)
-    assert dedup._pin(small_df, enabled=False) is small_df
-
-
 def test_pin_mode_replicated_persists_with_two_replicas(small_df, monkeypatch):
-    monkeypatch.setenv(dedup.PIN_MODE_ENV, "replicated")
-    pinned = dedup._pin(small_df)
+    monkeypatch.setenv(materialize.PIN_MODE_ENV, "replicated")
+    pinned = materialize.pin(small_df)
     lvl = pinned.storageLevel
     # MEMORY_AND_DISK_2: lineage kept (recompute possible), 2 replicas —
     # the executor-loss-tolerant variant for corpus-sized pins
@@ -55,32 +70,53 @@ def test_pin_mode_replicated_persists_with_two_replicas(small_df, monkeypatch):
 def test_pin_mode_reliable_checkpoints(small_df, monkeypatch, tmp_path):
     spark = small_df.sparkSession
     spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
-    monkeypatch.setenv(dedup.PIN_MODE_ENV, "reliable")
-    pinned = dedup._pin(small_df)
+    monkeypatch.setenv(materialize.PIN_MODE_ENV, "reliable")
+    pinned = materialize.pin(small_df)
     assert _plan_name(pinned) == "LogicalRDD"
     assert pinned.count() == 100
 
 
-def test_pin_modes_produce_identical_results(small_df, monkeypatch):
+def _row_hash(df) -> str:
+    cols = df.columns
+    rows = normalize([tuple(r) for r in df.collect()], cols)
+    return hashlib.sha256(repr((sorted(cols), rows)).encode()).hexdigest()
+
+
+def test_pin_modes_produce_identical_results(small_df, sf_dir, monkeypatch, tmp_path):
+    """Every pin mode yields the same rows: on a bare frame, and on the
+    corpus queries whose plans pin (order-insensitive row hashes)."""
+    small_df.sparkSession.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
     expected = sorted(r["k"] for r in small_df.collect())
-    for mode in ("local", "replicated", "off"):
-        monkeypatch.setenv(dedup.PIN_MODE_ENV, mode)
-        got = sorted(r["k"] for r in dedup._pin(small_df).collect())
-        assert got == expected, mode
+    queries = corpus.queries()
+    hashes: dict[str, dict[str, str]] = {}
+    try:
+        for mode in ("local", "replicated", "reliable", "off"):
+            monkeypatch.setenv(materialize.PIN_MODE_ENV, mode)
+            got = sorted(r["k"] for r in materialize.pin(small_df).collect())
+            assert got == expected, mode
+            for name in PIN_QUERIES:
+                df = queries[name](small_df.sparkSession, sf_dir)
+                hashes.setdefault(name, {})[mode] = _row_hash(df)
+    finally:
+        # replicated pins are cache-manager entries: drop them so later
+        # tests' plans never pick up an InMemoryRelation
+        small_df.sparkSession.catalog.clearCache()
+    for name, by_mode in hashes.items():
+        assert len(set(by_mode.values())) == 1, (name, by_mode)
 
 
 def test_release_pin_frees_materialized_blocks(small_df, monkeypatch):
-    monkeypatch.delenv(dedup.PIN_MODE_ENV, raising=False)
-    pinned = dedup._pin(small_df)
+    monkeypatch.delenv(materialize.PIN_MODE_ENV, raising=False)
+    pinned = materialize.pin(small_df)
     assert pinned.count() == 100  # materialize the lazy checkpoint
     rdd = pinned._jdf.queryExecution().logical().rdd()
     assert rdd.getStorageLevel().useMemory() or rdd.getStorageLevel().useDisk()
-    dedup._release_pin(pinned)
+    materialize.release(pinned)
     lvl = rdd.getStorageLevel()
     assert not (lvl.useMemory() or lvl.useDisk())
 
 
 def test_release_pin_is_safe_on_unpinned_frames(small_df):
     # best-effort contract: arbitrary plans (no LogicalRDD) are a no-op
-    dedup._release_pin(small_df)
+    materialize.release(small_df)
     assert small_df.count() == 100

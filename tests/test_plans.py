@@ -712,7 +712,7 @@ def test_zipf_fit_rank_window_is_distributed(spark, sf_dir):
     assert all("__pid" in ln for ln in rn_specs), rn_specs
 
 
-def test_incremental_dedup_plan_is_batch_driven(spark, sf_dir):
+def test_incremental_dedup_plan_is_batch_driven(spark, sf_dir, monkeypatch):
     """Round 13 (SCALE.md §19b): the union-shaped incremental plan's
     per-batch wall grew +92% over a 22x base growth on open
     vocabularies — the slope was the base's LINEAR terms (full-union
@@ -726,18 +726,19 @@ def test_incremental_dedup_plan_is_batch_driven(spark, sf_dir):
 
     from pyspark.sql import functions as F
 
+    from financial_data_lakehouse_pipeline__spark import materialize
     from financial_data_lakehouse_pipeline__spark.operators import (
         dedup,
         sampling,
     )
     from financial_data_lakehouse_pipeline__spark.sources import read_table
 
+    # pins off: the assertions read the full lineage, not LogicalRDD leaves
+    monkeypatch.setenv(materialize.PIN_MODE_ENV, "off")
     d = read_table(spark, sf_dir, "documents")
     is_new = sampling.hash_bucket(F.col("doc_id"), salt="incr") < 1000
     base, inc = d.filter(~is_new), d.filter(is_new)
-    df = dedup.incremental_minhash_pairs(
-        base, inc, max_bucket_size=50, pin_buckets=False
-    )
+    df = dedup.incremental_minhash_pairs(base, inc, max_bucket_size=50)
     plan = plans.formatted_plan(df)
     assert "SortMergeJoin" not in plan
     assert "CartesianProduct" not in plan

@@ -59,22 +59,6 @@ def test_external_table_msck_and_analyze(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS t_ext")
 
 
-def test_delta_gate(spark, tmp_path):
-    """Delta I/O is import-gated: real when delta-spark is present,
-    actionable RuntimeError otherwise (it is absent in this container)."""
-    import pytest
-
-    from financial_data_lakehouse_pipeline__spark.sources import delta_io
-
-    if delta_io.delta_available():  # pragma: no cover - not in container
-        df = spark.createDataFrame([Row(k="a", v=1)])
-        delta_io.write_delta(df, str(tmp_path / "d"))
-        assert delta_io.read_delta(spark, str(tmp_path / "d")).count() == 1
-    else:
-        with pytest.raises(RuntimeError, match="delta-spark is not installed"):
-            delta_io.write_delta(spark.range(1), str(tmp_path / "d"))
-
-
 def test_json_explode_paths(spark):
     """P2/S1: array-of-structs and map-of-structs flattening over the
     deterministic fixtures (reference dc:48-61, dc:151-157)."""

@@ -73,7 +73,7 @@ def main() -> int:
         "Exchanges = shuffle boundaries in the initial plan (AQE may "
         "coalesce/replan at runtime); Scans = parquet scan operators. "
         "Since round 13 the multi-consumer operators PIN their shared "
-        "subtrees with lazy localCheckpoints (operators/dedup._pin — "
+        "subtrees with lazy localCheckpoints (materialize.pin — "
         "the round's optimization; OPTIMIZATION_r13.md), so a pinned "
         "query's visible plan reads `Scan ExistingRDD` nodes and "
         "REPORTS 0 parquet scans here: the real scans/exchanges live "
