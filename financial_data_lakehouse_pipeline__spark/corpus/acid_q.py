@@ -34,7 +34,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from financial_data_lakehouse_pipeline__spark.corpus import register
-from financial_data_lakehouse_pipeline__spark.sources import acid
+from financial_data_lakehouse_pipeline__spark.sources import acid, footer_schema
 
 _SCRATCH = os.path.join(os.path.dirname(__file__), "..", "..", ".scratch")
 _SCRATCH = os.path.abspath(_SCRATCH)
@@ -553,7 +553,7 @@ def acid_stream_ingest(spark, sf_dir):
         f"-{stt.st_size}-{int(stt.st_mtime)}"
     )
     root = os.path.join(_SCRATCH, "fixtures", "acid", f"stream_{tag}")
-    raw_schema = spark.read.parquet(src).schema
+    raw_schema = footer_schema(src)
     stream = st.stream_from_parquet_dir(
         spark, sf_dir, raw_schema, glob="events.parquet"
     ).select("event_id", "user_id", "event_type")

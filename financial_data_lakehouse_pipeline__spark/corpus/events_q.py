@@ -10,7 +10,11 @@ from financial_data_lakehouse_pipeline__spark.corpus import register, sql_dsum
 from financial_data_lakehouse_pipeline__spark.functions import dmean, dsum
 from financial_data_lakehouse_pipeline__spark.operators import analysis, cleaning, events, joins, windows
 from financial_data_lakehouse_pipeline__spark.operators.analysis import alignment_score
-from financial_data_lakehouse_pipeline__spark.sources import normalize_event_ts, read_table
+from financial_data_lakehouse_pipeline__spark.sources import (
+    footer_schema,
+    normalize_event_ts,
+    read_table,
+)
 
 # DuckDB-side: events.ts normalized to microsecond TIMESTAMP (matches the
 # Spark-side ns→µs conversion in sources.readers.read_table).
@@ -388,7 +392,7 @@ def streaming_session_windows(spark, sf_dir):
 
     from financial_data_lakehouse_pipeline__spark import streaming as st
 
-    raw_schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
+    raw_schema = footer_schema(os.path.join(sf_dir, "events.parquet"))
     stream = st.stream_from_parquet_dir(spark, sf_dir, raw_schema, glob="events.parquet")
     stream = normalize_event_ts(stream)
     agg = st.session_windows(
@@ -426,7 +430,7 @@ def streaming_hourly_counts(spark, sf_dir):
     # pathGlobFilter selecting only the events file. Schema comes from the
     # RAW parquet (ts is a nanos BIGINT under nanosAsLong) — read_table's
     # normalized schema would not match the physical files.
-    raw_schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
+    raw_schema = footer_schema(os.path.join(sf_dir, "events.parquet"))
     stream = st.stream_from_parquet_dir(
         spark, sf_dir, raw_schema, glob="events.parquet"
     )
@@ -466,7 +470,7 @@ def streaming_record_highs(spark, sf_dir):
 
     from financial_data_lakehouse_pipeline__spark import streaming as st
 
-    raw_schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
+    raw_schema = footer_schema(os.path.join(sf_dir, "events.parquet"))
     stream = st.stream_from_parquet_dir(
         spark, sf_dir, raw_schema, glob="events.parquet"
     )
@@ -504,7 +508,7 @@ def streaming_enrich_users(spark, sf_dir):
     from financial_data_lakehouse_pipeline__spark import streaming as st
     from financial_data_lakehouse_pipeline__spark.operators import joins
 
-    raw_schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
+    raw_schema = footer_schema(os.path.join(sf_dir, "events.parquet"))
     stream = st.stream_from_parquet_dir(
         spark, sf_dir, raw_schema, glob="events.parquet"
     ).select("event_id", "user_id", "event_type", "value")
@@ -735,7 +739,7 @@ def streaming_click_attribution(spark, sf_dir):
 
     from financial_data_lakehouse_pipeline__spark import streaming as st
 
-    raw_schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
+    raw_schema = footer_schema(os.path.join(sf_dir, "events.parquet"))
 
     def side(event_type, cols):
         s = st.stream_from_parquet_dir(
@@ -811,7 +815,7 @@ def streaming_upsert_keep_latest(spark, sf_dir):
     scratch = os.path.abspath(scratch)
     shutil.rmtree(scratch, ignore_errors=True)
 
-    raw_schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
+    raw_schema = footer_schema(os.path.join(sf_dir, "events.parquet"))
     stream = normalize_event_ts(
         st.stream_from_parquet_dir(spark, sf_dir, raw_schema, glob="events.parquet")
     ).select("user_id", "ts", "event_id", "value")
@@ -1353,7 +1357,7 @@ def streaming_distinct_keys(spark, sf_dir):
 
     from financial_data_lakehouse_pipeline__spark import streaming as st
 
-    raw_schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
+    raw_schema = footer_schema(os.path.join(sf_dir, "events.parquet"))
     stream = st.stream_from_parquet_dir(
         spark, sf_dir, raw_schema, glob="events.parquet"
     )

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from financial_data_lakehouse_pipeline__spark.corpus import register
 from financial_data_lakehouse_pipeline__spark.operators import sketches
-from financial_data_lakehouse_pipeline__spark.sources import read_table
+from financial_data_lakehouse_pipeline__spark.sources import footer_schema, read_table
 
 _DEPTH = 4
 _WIDTH = 256
@@ -100,7 +100,7 @@ def streaming_cms_users(spark, sf_dir):
 
     from financial_data_lakehouse_pipeline__spark import streaming as st
 
-    raw_schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
+    raw_schema = footer_schema(os.path.join(sf_dir, "events.parquet"))
     stream = st.stream_from_parquet_dir(
         spark, sf_dir, raw_schema, glob="events.parquet"
     )
@@ -329,7 +329,7 @@ def streaming_hll_custkey(spark, sf_dir):
     from financial_data_lakehouse_pipeline__spark import streaming as st
     from financial_data_lakehouse_pipeline__spark.operators import sketches as sk
 
-    raw_schema = spark.read.parquet(os.path.join(sf_dir, "orders.parquet")).schema
+    raw_schema = footer_schema(os.path.join(sf_dir, "orders.parquet"))
     stream = st.stream_from_parquet_dir(
         spark, sf_dir, raw_schema, glob="orders.parquet"
     )
@@ -351,7 +351,7 @@ def streaming_hist_order_totals(spark, sf_dir):
     from financial_data_lakehouse_pipeline__spark import streaming as st
     from financial_data_lakehouse_pipeline__spark.operators import sketches as sk
 
-    raw_schema = spark.read.parquet(os.path.join(sf_dir, "orders.parquet")).schema
+    raw_schema = footer_schema(os.path.join(sf_dir, "orders.parquet"))
     stream = st.stream_from_parquet_dir(
         spark, sf_dir, raw_schema, glob="orders.parquet"
     )
@@ -600,9 +600,7 @@ def streaming_kmv_quantiles(spark, sf_dir):
     scratch = os.path.abspath(scratch)
     shutil.rmtree(scratch, ignore_errors=True)
 
-    raw_schema = spark.read.parquet(
-        os.path.join(sf_dir, "orders.parquet")
-    ).schema
+    raw_schema = footer_schema(os.path.join(sf_dir, "orders.parquet"))
     stream = st.stream_from_parquet_dir(
         spark, sf_dir, raw_schema, glob="orders.parquet"
     )

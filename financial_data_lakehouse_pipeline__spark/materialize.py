@@ -30,9 +30,16 @@ A DataFrame-level MEMORY_AND_DISK ``persist`` was measured SLOWER than
 recompute for these subtrees (columnar cache build + serialized branch
 execution, SCALE.md §13); the RDD-level local checkpoint skips the
 columnar conversion and was measured faster than both (A/B at sf0.1:
-median 5.2 s recompute vs 2.7 s pinned for minhash_lsh_pairs). Every
-mode is lazy, so plan-only callers never trigger execution at build
-time.
+median 5.2 s recompute vs 2.7 s pinned for minhash_lsh_pairs).
+
+No mode computes the pinned rows inside :func:`pin`, but under AQE
+``local`` and ``reliable`` still launch Spark jobs there: Spark 4's lazy
+``localCheckpoint``/``checkpoint`` calls ``execute()`` on the physical
+plan, which materializes the AQE query stages (the shuffle-map stages)
+below the pinned root. On a one-shuffle subtree ``pin`` launched 1 job
+in ``local`` and in ``reliable`` mode and 0 in ``replicated`` and
+``off``. The pin moves that shuffle-map work from the first action to
+the build; it does not add any.
 
 Direct ``localCheckpoint`` calls that are NOT reuse pins stay where they
 are, because ``off`` must not disable them (tests/test_materialize.py
@@ -59,9 +66,10 @@ PIN_MODE_ENV = "SPARK_GRAFT_PIN_MODE"
 
 
 def pin(df: DataFrame) -> DataFrame:
-    """Materialize a multiply-consumed subtree ONCE, computed on first
-    use inside the consuming job, with the storage strategy of the
-    session's pin mode (see the module docstring)."""
+    """Materialize a multiply-consumed subtree ONCE, with the storage
+    strategy of the session's pin mode. The pinned rows are computed on
+    first use inside the consuming job; the shuffle-map stages below them
+    may run here (see the module docstring)."""
     mode = os.environ.get(PIN_MODE_ENV, "local")
     if mode == "off":
         return df

@@ -12,10 +12,21 @@ Stage map (reference → here):
 
 A user of the reference runs three spark-submit jobs writing parquet
 between stages; here each stage is a DataFrame-in/DataFrame-out function,
-so Catalyst optimizes ACROSS stage boundaries (no forced materialization,
-no double execution from post-write count() — the reference anti-pattern
-SURVEY.md §4 flags). Pass ``out_dir`` to write the per-stage parquet the
-reference layout produces.
+so Catalyst optimizes across stage boundaries and no post-write count()
+re-executes a stage (the reference anti-pattern SURVEY.md §4 flags).
+Pass ``out_dir`` to write the per-stage parquet the reference layout
+produces.
+
+One boundary is materialized on purpose. The master join and the four
+analysis outputs all read the indicator table, and without a pin each of
+them re-runs the dedup shuffle and the window chain. ``run_pipeline``
+therefore wraps ONE ``materialize.pin`` around the indicator columns those
+five outputs read (:data:`_SHARED`): the first action (the lake write, or
+the first output forced) computes it and the rest read its blocks. The
+projection is narrow on purpose: Catalyst prunes the SMA, Bollinger and
+``relative_qty`` windows nobody downstream reads from the pinned plan, so
+the pin computes less and holds fewer bytes than a pin of the whole
+frame. ``results["indicators"]`` stays the full, unpinned frame.
 """
 
 from __future__ import annotations
@@ -25,6 +36,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from financial_data_lakehouse_pipeline__spark import materialize
 from financial_data_lakehouse_pipeline__spark.functions import dmean, dsum, safe_corr
 from financial_data_lakehouse_pipeline__spark.operators import analysis, cleaning, joins, windows
 from financial_data_lakehouse_pipeline__spark.sources import (
@@ -33,6 +45,19 @@ from financial_data_lakehouse_pipeline__spark.sources import (
 )
 
 _ORDER = ["l_shipdate", "l_orderkey", "l_linenumber"]
+
+#: The indicator columns ``master_stage`` and ``analysis_stage`` read.
+_SHARED = [
+    "l_suppkey",
+    "l_orderkey",
+    "l_linenumber",
+    "l_shipdate",
+    "ship_date",
+    "net_price",
+    "momentum_1",
+    "l_quantity",
+    "l_returnflag",
+]
 
 
 def clean_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -142,12 +167,16 @@ def run_pipeline(
 ) -> dict[str, DataFrame]:
     """The full clean → indicators → master → analysis chain. With
     ``out_dir`` each stage also writes hive-partitioned parquet (the
-    reference's lake layout, partitioned by ship year/month)."""
+    reference's lake layout, partitioned by ship year/month).
+
+    The master and analysis outputs share one pin of the indicator
+    columns they read (see the module docstring)."""
     cleaned = clean_stage(spark, sf_dir)
     indicators = transform_stage(cleaned)
-    master = master_stage(spark, sf_dir, indicators)
+    shared = materialize.pin(indicators.select(*_SHARED))
+    master = master_stage(spark, sf_dir, shared)
     results = {"cleaned": cleaned, "indicators": indicators, "master": master}
-    results.update(analysis_stage(indicators))
+    results.update(analysis_stage(shared))
     if out_dir:
         staged = master.withColumns(
             {"year": F.year("ship_date"), "month": F.month("ship_date")}

@@ -1,5 +1,6 @@
 from financial_data_lakehouse_pipeline__spark.sources.readers import (
     TABLES,
+    footer_schema,
     normalize_event_ts,
     read_csv,
     read_json,
@@ -20,6 +21,7 @@ from financial_data_lakehouse_pipeline__spark.sources import acid
 __all__ = [
     "acid",
     "TABLES",
+    "footer_schema",
     "normalize_event_ts",
     "read_csv",
     "read_json",

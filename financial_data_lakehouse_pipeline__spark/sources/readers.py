@@ -4,13 +4,16 @@
 physical quirks (the `events` table's TIMESTAMP(NANOS) column) so operators
 downstream always see clean logical types. Filters/projections applied by
 callers still push down to the parquet scan — normalization is a column
-rewrite, not a materialization.
+rewrite, not a materialization. Its schema comes from the file footer on
+the driver (`footer_schema`), so building a read runs no Spark job.
 """
 
 from __future__ import annotations
 
 import os
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -133,8 +136,76 @@ def normalize_event_ts(df: DataFrame, col: str = "ts") -> DataFrame:
     return df
 
 
+_SCALARS = {
+    pa.int8(): T.ByteType(),
+    pa.int16(): T.ShortType(),
+    pa.int32(): T.IntegerType(),
+    pa.int64(): T.LongType(),
+    pa.float32(): T.FloatType(),
+    pa.float64(): T.DoubleType(),
+    pa.bool_(): T.BooleanType(),
+    pa.string(): T.StringType(),
+    pa.large_string(): T.StringType(),
+    pa.binary(): T.BinaryType(),
+    pa.date32(): T.DateType(),
+}
+
+
+def _spark_type(name: str, t: pa.DataType, ntz: bool, int96: bool) -> T.DataType:
+    """One arrow type as Spark's parquet converter reads it."""
+    if pa.types.is_dictionary(t):
+        return _spark_type(name, t.value_type, ntz, int96)
+    if pa.types.is_list(t):
+        return T.ArrayType(_spark_type(name, t.value_type, ntz, int96), True)
+    if pa.types.is_decimal(t):
+        return T.DecimalType(t.precision, t.scale)
+    if pa.types.is_timestamp(t):
+        if int96:  # legacy INT96, which pyarrow reports as timestamp[ns]
+            return T.TimestampType()
+        if t.unit == "ns":  # tune_runtime sets nanosAsLong
+            return T.LongType()
+        if t.tz is None and ntz:
+            return T.TimestampNTZType()
+        return T.TimestampType()
+    if t not in _SCALARS:
+        raise TypeError(f"footer_schema: column {name!r} has unmapped parquet type {t}")
+    return _SCALARS[t]
+
+
+def footer_schema(path: str) -> T.StructType:
+    """The Spark schema of one parquet file, read from its footer on the
+    driver with pyarrow (about 1 ms, no Spark job — inference runs one).
+
+    Types map the way Spark's parquet converter maps them under the
+    engine's session confs: TIMESTAMP(NANOS) is a LONG (nanosAsLong),
+    legacy INT96 is a TIMESTAMP, a tz-naive timestamp is TIMESTAMP_NTZ
+    unless the active session sets
+    ``spark.sql.parquet.inferTimestampNTZ.enabled=false``, dictionary
+    columns read as their value type, and every field is nullable. A type
+    with no mapping raises ``TypeError``; there is no fallback to
+    inference. Nothing is cached: each call re-reads the footer.
+    """
+    spark = SparkSession.getActiveSession()
+    ntz = spark is None or (
+        spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled", "true").lower()
+        != "false"
+    )
+    with pq.ParquetFile(path) as footer:
+        leaves, fields = footer.schema, footer.schema_arrow
+    int96 = {c.path.split(".")[0] for c in leaves if c.physical_type == "INT96"}
+    return T.StructType(
+        [
+            T.StructField(f.name, _spark_type(f.name, f.type, ntz, f.name in int96), True)
+            for f in fields
+        ]
+    )
+
+
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one driver testdata table with normalized logical types.
+
+    The schema comes from the parquet footer (``footer_schema``), not
+    from Spark's inference, so the read runs no Spark job at build time.
 
     events.ts physical encoding has drifted across driver rounds (nanos
     LONG, then timestamp[us]/NTZ); ``normalize_event_ts`` maps every
@@ -142,7 +213,8 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     always see one logical type.
     """
     tune_runtime(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    df = spark.read.schema(footer_schema(path)).parquet(path)
     if name == "events":
         df = normalize_event_ts(df)
     return df

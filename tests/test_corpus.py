@@ -143,3 +143,26 @@ def test_every_query_handles_empty_input(spark, tmp_path):
         except Exception as e:  # noqa: BLE001 - collecting all failures
             failures.append(f"{name}: {str(e).splitlines()[0][:120]}")
     assert not failures, failures
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "grouped_stats_q1",
+        "regional_revenue_q5",
+        "sessionize_users",
+        "bloom_anti_join_customers",
+    ],
+)
+def test_pure_query_build_launches_no_spark_job(name, spark, sf_dir):
+    """Building a pure query (no pin, no driver loop) runs no Spark job:
+    every table schema comes from the parquet footer, not inference.
+    Jobs are counted per job group, as tools/job_count.py does."""
+    sc = spark.sparkContext
+    group = f"build:{name}"
+    sc.setJobGroup(group, group)
+    try:
+        _QUERIES[name](spark, sf_dir)
+    finally:
+        sc.setJobGroup(None, None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []

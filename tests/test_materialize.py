@@ -1,4 +1,5 @@
-"""Guard: pin storage is decided in ``materialize.py`` alone.
+"""Guard: pin storage is decided in ``materialize.py`` alone, and table
+schemas come from the parquet footer.
 
 Scans the engine package's code tokens (comments and strings are
 skipped, so prose may still name the APIs) and fails on:
@@ -6,7 +7,9 @@ skipped, so prose may still name the APIs) and fails on:
 - ``.persist(`` or ``.checkpoint(`` anywhere outside materialize.py;
 - any use of the name ``_pin`` (the retired private helper);
 - ``.localCheckpoint(`` in a file the materialize module docstring does
-  not list as a non-pin lineage cut.
+  not list as a non-pin lineage cut;
+- ``.parquet(...).schema`` anywhere: a Spark schema-inference job just to
+  type a source (``sources.footer_schema`` reads it on the driver).
 """
 
 from __future__ import annotations
@@ -34,7 +37,8 @@ def _engine_files() -> list[str]:
 
 def _code_names(path: str) -> set[str]:
     """Names called as ``.name(`` in code, plus every bare NAME token
-    (prefixed with '!') — comments and string literals excluded."""
+    (prefixed with '!') and ``.parquet().schema`` for an inference lookup
+    — comments and string literals excluded."""
     with open(os.path.join(PKG, path), encoding="utf-8") as fh:
         toks = [
             t for t in tokenize.generate_tokens(io.StringIO(fh.read()).readline)
@@ -42,10 +46,25 @@ def _code_names(path: str) -> set[str]:
                               tokenize.INDENT, tokenize.DEDENT)
         ]
     found = {"!" + t.string for t in toks if t.type == tokenize.NAME}
-    for a, b, c in zip(toks, toks[1:], toks[2:]):
+    for i, (a, b, c) in enumerate(zip(toks, toks[1:], toks[2:])):
         if a.string == "." and b.type == tokenize.NAME and c.string == "(":
             found.add(b.string)
+            if b.string == "parquet" and _attr_after_call(toks, i + 2) == "schema":
+                found.add(".parquet().schema")
     return found
+
+
+def _attr_after_call(toks: list, i: int) -> str | None:
+    """The attribute read right after the call whose '(' is ``toks[i]``."""
+    depth = 0
+    for j in range(i, len(toks)):
+        depth += {"(": 1, ")": -1}.get(toks[j].string, 0)
+        if depth == 0:
+            nxt = toks[j + 1 : j + 3]
+            if len(nxt) == 2 and nxt[0].string == "." and nxt[1].type == tokenize.NAME:
+                return nxt[1].string
+            return None
+    return None
 
 
 def _local_checkpoint_allowlist() -> set[str]:
@@ -67,4 +86,6 @@ def test_pin_storage_is_decided_only_in_materialize():
                 bad.append(f"{path}: .localCheckpoint( (not on the allowlist)")
         if "!_pin" in calls:
             bad.append(f"{path}: _pin")
+        if ".parquet().schema" in calls:
+            bad.append(f"{path}: .parquet(...).schema (use sources.footer_schema)")
     assert not bad, bad

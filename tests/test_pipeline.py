@@ -7,7 +7,9 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from financial_data_lakehouse_pipeline__spark import pipeline
+from financial_data_lakehouse_pipeline__spark import materialize, pipeline
+
+_OUTPUTS = ("master", "correlation", "forward_returns", "events", "summary")
 
 
 @pytest.fixture(scope="module")
@@ -59,3 +61,43 @@ def test_lake_layout_written(results, spark):
     assert years  # hive-partitioned layout on disk
     back = spark.read.parquet(os.path.join(out, "master"))
     assert back.count() > 0
+
+
+#: Floating aggregates whose last bits depend on the order rows reach
+#: them: without the pin, Catalyst prunes the window sort from these two
+#: outputs (they read no window column), so their input order differs.
+_FLOAT_AGGS = {"qty_price_corr", "net_price_stddev"}
+
+
+def _hashes(res: dict) -> dict[str, tuple[int, int]]:
+    """Row count and order-insensitive hash sum of each output, with the
+    floating aggregates rounded to 8 decimals."""
+    out = {}
+    for k in _OUTPUTS:
+        df = res[k]
+        cols = [F.round(c, 8) if c in _FLOAT_AGGS else F.col(c) for c in df.columns]
+        r = df.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.xxhash64(*cols).cast("decimal(38,0)")).alias("h"),
+        ).collect()[0]
+        out[k] = (r.n, int(r.h or 0))
+    return out
+
+
+def test_shared_pin_matches_unpinned_outputs(spark, sf_dir, monkeypatch):
+    """The five outputs read one shared pin of the indicator columns:
+    under ``local`` their plans scan no lineitem (the pin's blocks stand
+    in for dedup + windows), and their contents equal the unpinned run
+    (bit for bit, except the last bits of the floating aggregates)."""
+    monkeypatch.setenv(materialize.PIN_MODE_ENV, "local")
+    pinned = pipeline.run_pipeline(spark, sf_dir)
+    for k in _OUTPUTS:
+        assert not any(
+            f.endswith("lineitem.parquet") for f in pinned[k].inputFiles()
+        ), k
+    assert "LogicalRDD" in pinned["master"]._jdf.queryExecution().optimizedPlan().toString()
+    assert pinned["indicators"].inputFiles()  # the full frame stays unpinned
+    monkeypatch.setenv(materialize.PIN_MODE_ENV, "off")
+    plain = pipeline.run_pipeline(spark, sf_dir)
+    assert any(f.endswith("lineitem.parquet") for f in plain["summary"].inputFiles())
+    assert _hashes(pinned) == _hashes(plain)

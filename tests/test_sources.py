@@ -7,6 +7,7 @@ import os
 
 from pyspark.sql import Row
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from financial_data_lakehouse_pipeline__spark.sources import (
     read_parquet,
@@ -452,3 +453,113 @@ def test_variant_roundtrip_and_nested_paths(spark):
     by_a = {r["a"]: r for r in got}
     assert by_a[1]["c1"] == 20 and by_a[2]["c1"] is None
     assert '"a":1' in by_a[1]["back"].replace(" ", "")
+
+
+def _tables(d: str) -> list[str]:
+    return sorted(os.path.join(d, f) for f in os.listdir(d) if f.endswith(".parquet"))
+
+
+def test_footer_schema_equals_inferred_for_testdata_tables(spark, sf_dir, tmp_path):
+    """The footer-derived schema is exactly Spark's inferred schema for
+    every driver table and for a fresh gen_sf directory, and read_table
+    still normalizes events.ts to TimestampType."""
+    import sys
+
+    from financial_data_lakehouse_pipeline__spark.session import tune_runtime
+    from financial_data_lakehouse_pipeline__spark.sources import footer_schema, read_table
+
+    sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
+    import gen_sf
+
+    gen = str(tmp_path / "gen")
+    gen_sf.generate(0.001, gen, seed=7, ref=sf_dir)
+    tune_runtime(spark)
+    paths = _tables(sf_dir) + _tables(gen)
+    assert len(paths) >= 20
+    for p in paths:
+        assert footer_schema(p) == spark.read.parquet(p).schema, p
+    for d in (sf_dir, gen):
+        ts = read_table(spark, d, "events").schema["ts"].dataType
+        assert isinstance(ts, T.TimestampType), d
+
+
+def test_footer_schema_maps_each_type_like_spark(spark, tmp_path):
+    """One column of every mapped arrow type, read back by Spark: the
+    footer schema equals the inferred one, with NTZ inference on and off."""
+    import datetime
+    import decimal
+
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from financial_data_lakehouse_pipeline__spark.session import tune_runtime
+    from financial_data_lakehouse_pipeline__spark.sources import footer_schema
+
+    ts = datetime.datetime(2024, 1, 1, 1, 2, 3)
+    tbl = pa.table(
+        {
+            "i8": pa.array([1], pa.int8()),
+            "i16": pa.array([1], pa.int16()),
+            "i32": pa.array([1], pa.int32()),
+            "i64": pa.array([1], pa.int64()),
+            "f32": pa.array([1.0], pa.float32()),
+            "f64": pa.array([1.0], pa.float64()),
+            "flag": pa.array([True]),
+            "s": pa.array(["x"]),
+            "ls": pa.array(["x"], pa.large_string()),
+            "bin": pa.array([b"x"]),
+            "d": pa.array([datetime.date(2024, 1, 1)], pa.date32()),
+            "dec": pa.array([decimal.Decimal("1.23")], pa.decimal128(10, 2)),
+            "ns": pa.array([ts], pa.timestamp("ns")),
+            "us_tz": pa.array([ts], pa.timestamp("us", tz="UTC")),
+            "us": pa.array([ts], pa.timestamp("us")),
+            "vec": pa.array([[1.0, 2.0]], pa.list_(pa.float32())),
+            "cat": pa.array(pd.Categorical(["a"])),
+        }
+    )
+    p = str(tmp_path / "types.parquet")
+    pq.write_table(tbl, p)
+    tune_runtime(spark)
+    assert footer_schema(p) == spark.read.parquet(p).schema
+    key = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    spark.conf.set(key, "false")
+    try:
+        assert footer_schema(p) == spark.read.parquet(p).schema
+        assert footer_schema(p)["us"].dataType == T.TimestampType()
+    finally:
+        spark.conf.unset(key)
+    assert footer_schema(p)["us"].dataType == T.TimestampNTZType()
+
+
+def test_footer_schema_reads_spark_int96_timestamps(spark, tmp_path):
+    """Spark's legacy INT96 timestamps (which pyarrow reports as ns) read
+    as TimestampType, as Spark infers them."""
+    from financial_data_lakehouse_pipeline__spark.sources import footer_schema
+
+    key = "spark.sql.parquet.outputTimestampType"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "INT96")
+    try:
+        out = str(tmp_path / "int96")
+        spark.range(2).selectExpr(
+            "timestamp'2024-01-01 00:00:00' AS t", "array(timestamp'2024-01-01') AS ts"
+        ).coalesce(1).write.parquet(out)
+    finally:
+        spark.conf.set(key, old)
+    (p,) = _tables(out)
+    assert footer_schema(p) == spark.read.parquet(p).schema
+    assert footer_schema(p)["t"].dataType == T.TimestampType()
+
+
+def test_footer_schema_rejects_unmapped_types(tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
+
+    from financial_data_lakehouse_pipeline__spark.sources import footer_schema
+
+    p = str(tmp_path / "struct.parquet")
+    pq.write_table(pa.table({"id": [1], "nested": pa.array([{"a": 1}])}), p)
+    with pytest.raises(TypeError, match="nested"):
+        footer_schema(p)
