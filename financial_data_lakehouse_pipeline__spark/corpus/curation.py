@@ -18,20 +18,15 @@ semantics are set-dependent: language ID (gram explode + broadcast
 profile join + doc-keyed argmax), exact dedup (one fingerprint-keyed
 window), LSH near-dedup (banded signature join over stage-4 survivors
 only), decontamination (broadcast anti-flag on fingerprints), and the
-mixture thresholds (strata-sized aggregate broadcast back). The flagged
-table (ids + flags, no text) is checkpointed to the lake (scratch
-parquet) so the count aggregation, the mixture-threshold aggregate, and
-the packing branch share one computation of the funnel DAG without
-pinning executor memory — the same move at 100 TB, just to object
-storage.
+mixture thresholds (strata-sized aggregate broadcast back). The flag
+table (ids + flags, no text) and its assembly with the LSH and benchmark
+flags are reuse pins (``materialize.pin``), so the LSH branch, the count
+aggregation, the mixture-threshold aggregate, and the packing branch
+share one computation of the funnel DAG; ``SPARK_GRAFT_PIN_MODE=reliable``
+keeps those pins on ``spark.checkpoint.dir`` (object storage at 100 TB).
 """
 
 from __future__ import annotations
-
-import os
-import shutil
-import time
-import uuid
 
 from pyspark.sql import functions as F
 
@@ -48,33 +43,6 @@ from financial_data_lakehouse_pipeline__spark.operators.dedup import (
     minhash_lsh_pairs,
 )
 from financial_data_lakehouse_pipeline__spark.sources import read_table
-
-_SCRATCH = os.path.abspath(
-    os.path.join(os.path.dirname(__file__), "..", "..", ".scratch")
-)
-
-#: Checkpoint dirs older than this are assumed dead (no lazy reader can
-#: plausibly still hold them) and are swept on the next invocation.
-_CKPT_TTL_SEC = 6 * 3600
-
-
-def _sweep_stale_checkpoints(parent: str) -> None:
-    """Best-effort removal of checkpoint dirs from finished invocations.
-    Every invocation writes a fresh uuid-suffixed dir, so without a
-    sweep the scratch area grows without bound; the TTL grace period
-    protects any still-lazy DataFrame from a concurrent run."""
-    try:
-        now = time.time()
-        for name in os.listdir(parent):
-            p = os.path.join(parent, name)
-            try:
-                if now - os.path.getmtime(p) > _CKPT_TTL_SEC:
-                    shutil.rmtree(p, ignore_errors=True)
-            except OSError:
-                continue
-    except OSError:
-        pass
-
 
 #: Target training mixture over the document sources (the remaining 16
 #: sources are dropped by design — mixture weights define the corpus).
@@ -321,55 +289,30 @@ def _funnel(spark, sf_dir, model_quality: bool):
         F.min(F.when(F.col("f3"), F.col("doc_id"))).over(w_fp),
     ).withColumn("f4", F.col("f3") & (F.col("doc_id") == F.col("__min_id")))
 
-    # Checkpoint the slim flag table (ids + flags + fp, no text) to the
-    # lake BEFORE the LSH branch: the expensive per-row pre-pass
-    # (language-ID gram explode, quality screens, the fingerprint
-    # window — plus the NB train/score sub-DAG in the model variant)
-    # runs exactly ONCE, where the round-10 layout recomputed it twice
-    # (once under the LSH branch, once under the final flag assembly —
-    # the regression VERDICT r10 flagged). The LSH branch re-acquires
-    # survivor text by joining the checkpoint back to the raw source
-    # (a doc_id+text projection-pushdown scan — re-reading the lake is
-    # the at-scale idiom, recomputing a classifier pipeline is not),
-    # and its tiny dup-id output is checkpointed too, so the three
-    # downstream consumers (count agg, mixture thresholds, packing)
-    # re-derive f5/f6 from two small parquet reads + one broadcast.
-    # Unlike a persist, none of this pins executor memory across
-    # bench/driver invocations.
-    variant = "model" if model_quality else "heur"
-    # Per-invocation unique leaf: two datasets sharing a basename, or
-    # two concurrent runs of the same query (parallel bench/driver
-    # sessions), must never overwrite a checkpoint a previously
-    # returned lazy DataFrame is still reading. Stale siblings from
-    # finished invocations are swept best-effort after a grace period.
-    ckpt_parent = os.path.join(_SCRATCH, "ckpt", "curation")
-    _sweep_stale_checkpoints(ckpt_parent)
-    ckpt = os.path.join(
-        ckpt_parent,
-        f"flagged_{variant}_"
-        f"{os.path.basename(os.path.normpath(sf_dir))}_{uuid.uuid4().hex}",
+    # Pin the slim flag table (ids + flags + fp, no text) BEFORE the LSH
+    # branch: the expensive per-row pre-pass (language-ID gram explode,
+    # quality screens, the fingerprint window — plus the NB train/score
+    # sub-DAG in the model variant) runs exactly ONCE, where the
+    # round-10 layout recomputed it twice (once under the LSH branch,
+    # once under the final flag assembly — the regression VERDICT r10
+    # flagged). The LSH branch re-acquires survivor text by semi-joining
+    # the raw source to the pin (a doc_id+text projection-pushdown scan —
+    # re-reading the lake is the at-scale idiom, recomputing a classifier
+    # pipeline is not; a semi join can only build the id side, so the
+    # text is never broadcast). Its tiny dup-id output has one consumer,
+    # the flag assembly pinned below, so it gets no pin of its own: a pin
+    # inside a pin stores the same rows twice, and under the replicated
+    # mode every level of pin nesting multiplies the plan string.
+    flags = pin(
+        b3.select("doc_id", "source", "fp", "n_tokens", "f1", "f2", "f3", "f4")
     )
-    # coalesce: the flag table is ~9 narrow columns; 32 task-sized
-    # shards would be tiny-file overhead for the three downstream
-    # readers (at 100 TB the equivalent is targeting sane file sizes,
-    # not task-count files)
-    b3.select(
-        "doc_id", "source", "fp", "n_tokens", "f1", "f2", "f3", "f4"
-    ).coalesce(8).write.mode("overwrite").parquet(ckpt + "_flags")
-    flags = spark.read.parquet(ckpt + "_flags")
-
     lsh_in = d.select("doc_id", "text").join(
-        flags.filter("f4").select("doc_id"), "doc_id"
+        flags.filter("f4").select("doc_id"), "doc_id", "left_semi"
     )
-    dups = (
+    dups_r = (
         minhash_lsh_pairs(lsh_in, num_hashes=16, bands=4, threshold=0.5)
         .select(F.col("id_b").alias("doc_id"))
         .distinct()
-    )
-    dups_schema = dups.schema
-    dups.coalesce(1).write.mode("overwrite").parquet(ckpt + "_dups")
-    dups_r = (
-        spark.read.schema(dups_schema).parquet(ckpt + "_dups")
         .withColumn("__dup", F.lit(True))
     )
     bench = (
@@ -382,8 +325,8 @@ def _funnel(spark, sf_dir, model_quality: bool):
     # thresholds aggregate, the stage-count aggregate, and the packing
     # branch), and each re-derivation re-scanned the raw documents for
     # the benchmark-fingerprint broadcast — one materialization of the
-    # narrow flag table ends that (guide §2.4; the parquet checkpoints
-    # above keep the EXPENSIVE upstream out of all of them already)
+    # narrow flag table ends that (guide §2.4; the flag pin above keeps
+    # the EXPENSIVE upstream out of all of them already)
     flagged = pin(
         flags.join(dups_r, "doc_id", "left")
         .withColumn(

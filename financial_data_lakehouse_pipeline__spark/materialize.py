@@ -4,7 +4,8 @@ subtree is materialized.
 An operator whose plan references the same subtree from several
 branches (shingle tables feeding signatures and both verify sides,
 loop-invariant edge tables feeding every iteration, a shared aggregate
-probed by semi and anti joins) wraps it in :func:`pin`. Without it
+probed by semi and anti joins, the curation funnel's flag table)
+wraps it in :func:`pin`. Without it
 Catalyst re-evaluates the whole subtree per branch (the round-13
 minhash plan had 20 parquet scans / 38 exchanges for ONE logical pass).
 :func:`release` frees a pin once nothing can reference it again.
@@ -22,7 +23,9 @@ without touching any call site:
               kept, for spot/decommission regimes where a lost pin must
               not kill a long query.
   reliable    ``checkpoint(eager=False)`` to ``spark.checkpoint.dir`` —
-              object-store-backed; survives any executor loss.
+              object-store-backed; survives any executor loss. The lake
+              posture for corpus-sized pins such as the curation
+              funnel's flag table.
   off         full lineage, no materialization — for plan inspection and
               storage-tighter-than-recompute regimes.
 

@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from financial_data_lakehouse_pipeline__spark.functions import cosine_similarity, dot
+from financial_data_lakehouse_pipeline__spark.sources import scan_parallelism_floor
 
 
 def _sim(a: Column, b: Column) -> Column:
@@ -243,16 +244,11 @@ def cosine_topk_partials(
 
     from pyspark.sql import Window
 
-    proj = corpus.select(id_col, vec_col, *payload)
     # Occupancy guard, not a scale path: a small corpus (driver-scale
     # parquet = a handful of splits) would otherwise score on as many
-    # cores as it has files. Fires ONLY when partitions < cluster
-    # parallelism — i.e. exactly when the corpus is small enough that
-    # the round-robin shuffle is trivial; a lake-scale corpus has
-    # partitions >> slots and streams through untouched.
-    defp = sc.defaultParallelism
-    if proj.rdd.getNumPartitions() < defp:
-        proj = proj.repartition(defp)
+    # cores as it has files; a lake-scale corpus streams through
+    # untouched (sources.scan_parallelism_floor).
+    proj = scan_parallelism_floor(corpus.select(id_col, vec_col, *payload))
     partials = proj.mapInPandas(_part, out_schema)
     if exclude_self:
         partials = partials.filter(

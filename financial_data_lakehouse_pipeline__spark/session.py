@@ -38,6 +38,14 @@ _RUNTIME_CONF = {
     # corpus it sends the multi-branch LSH plans into runaway re-planning
     # — minutes instead of seconds at sf0.01.)
     "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
+    # Cap plan strings (explain output and the AQE plan updates the SQL
+    # listener keeps per execution) at 1M characters. A persisted pin
+    # prints its cached plan once per reference, and AQE prints each one
+    # twice (initial and final plan), so nested pins under
+    # SPARK_GRAFT_PIN_MODE=replicated grow the string exponentially: the
+    # model-gated curation funnel reached 131M characters at sf0.001 and
+    # exhausted a 2g driver heap.
+    "spark.sql.maxPlanStringLength": "1m",
 }
 
 

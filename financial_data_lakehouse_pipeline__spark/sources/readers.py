@@ -13,6 +13,7 @@ from __future__ import annotations
 import os
 
 import pyarrow as pa
+import pyarrow.fs as pafs
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -238,21 +239,57 @@ def scan_parallelism_floor(df: DataFrame) -> DataFrame:
     dominates the row bytes — callers are the tokenize/hash-heavy text
     operators, nothing else.
 
+    Deciding runs no Spark job. The partition count ``n`` is the
+    output partitioning of the physical plan when it is known: an
+    exchange, an explicit repartition, a join above them. Under AQE
+    that is the adaptive node's current plan, which until the frame
+    runs is its initial plan with every exchange already placed (its
+    ``inputPlan`` is not: a sort-merge join there has no exchanges yet,
+    and children with different partition counts make Spark reject the
+    join's partitioning). A scan-rooted plan (including the streamed
+    side of a broadcast join) reports ``UnknownPartitioning``; then
+    ``n`` is the split count of
+    ``df.inputFiles()``, per file min(row groups,
+    ceil(size / spark.sql.files.maxPartitionBytes)). Every file is at
+    least one split, so footers (pyarrow, as in ``footer_schema``) are
+    read only when ``files * 2 <= target``, and only for files larger
+    than one split. A streaming frame passes through untouched.
+
     Scale posture: the floor only engages when the scan is under-split
     by 2x or more versus the session's core count, so real lake inputs
     (thousands of splits) pass through untouched — no added corpus
     shuffle at 100 TB; it self-tunes to SPARK_GRAFT_CPUS locally and to
     the executor fleet on a cluster.
     """
+    if df.isStreaming:
+        return df
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
-    try:
-        n = df.rdd.getNumPartitions()
-    except Exception:  # exotic plans (no RDD view): leave untouched
-        return df
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.executedPlan()
+    part = plan.outputPartitioning()
+    if part.getClass().getSimpleName() != "UnknownPartitioning":
+        n = part.numPartitions()
+    else:
+        files = df.inputFiles()
+        n = len(files) if len(files) * 2 > target else _split_count(spark, files)
     if n * 2 > target:
         return df
     return df.repartition(target)
+
+
+def _split_count(spark: SparkSession, files: list[str]) -> int:
+    """Scan tasks for ``files``: per file, min(row groups, byte splits)."""
+    max_bytes = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    n = 0
+    for uri in files:
+        fs, path = pafs.FileSystem.from_uri(uri)
+        splits = -(-fs.get_file_info(path).size // max_bytes)
+        if splits > 1 and path.endswith(".parquet"):
+            splits = min(splits, pq.read_metadata(path, filesystem=fs).num_row_groups)
+        n += splits
+    return n
 
 
 def with_ingest_metadata(df: DataFrame, source: str) -> DataFrame:

@@ -157,7 +157,9 @@ def test_every_query_handles_empty_input(spark, tmp_path):
 def test_pure_query_build_launches_no_spark_job(name, spark, sf_dir):
     """Building a pure query (no pin, no driver loop) runs no Spark job:
     every table schema comes from the parquet footer, not inference.
-    Jobs are counted per job group, as tools/job_count.py does."""
+    Jobs are counted per job group after draining the listener bus, as
+    tools/job_count.py does, so a job whose start event is still queued
+    is not missed."""
     sc = spark.sparkContext
     group = f"build:{name}"
     sc.setJobGroup(group, group)
@@ -165,4 +167,5 @@ def test_pure_query_build_launches_no_spark_job(name, spark, sf_dir):
         _QUERIES[name](spark, sf_dir)
     finally:
         sc.setJobGroup(None, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
     assert sc.statusTracker().getJobIdsForGroup(group) == []

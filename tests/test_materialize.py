@@ -1,5 +1,6 @@
-"""Guard: pin storage is decided in ``materialize.py`` alone, and table
-schemas come from the parquet footer.
+"""Guard: pin storage is decided in ``materialize.py`` alone, table
+schemas come from the parquet footer, and no engine code runs a frame
+through its RDD view to shape a plan.
 
 Scans the engine package's code tokens (comments and strings are
 skipped, so prose may still name the APIs) and fails on:
@@ -9,7 +10,12 @@ skipped, so prose may still name the APIs) and fails on:
 - ``.localCheckpoint(`` in a file the materialize module docstring does
   not list as a non-pin lineage cut;
 - ``.parquet(...).schema`` anywhere: a Spark schema-inference job just to
-  type a source (``sources.footer_schema`` reads it on the driver).
+  type a source (``sources.footer_schema`` reads it on the driver);
+- a DataFrame's ``.rdd`` attribute anywhere: reading it plans and, under
+  AQE, runs the query's shuffle stages while the frame is only being
+  built (``sources.scan_parallelism_floor`` decides from the plan). The
+  py4j call ``.rdd()`` on a JVM plan node, as in ``materialize.release``,
+  is not an attribute read and stays allowed.
 """
 
 from __future__ import annotations
@@ -37,8 +43,9 @@ def _engine_files() -> list[str]:
 
 def _code_names(path: str) -> set[str]:
     """Names called as ``.name(`` in code, plus every bare NAME token
-    (prefixed with '!') and ``.parquet().schema`` for an inference lookup
-    — comments and string literals excluded."""
+    (prefixed with '!'), ``.parquet().schema`` for an inference lookup and
+    ``.rdd`` for a DataFrame's RDD view read as an attribute — comments
+    and string literals excluded."""
     with open(os.path.join(PKG, path), encoding="utf-8") as fh:
         toks = [
             t for t in tokenize.generate_tokens(io.StringIO(fh.read()).readline)
@@ -47,6 +54,8 @@ def _code_names(path: str) -> set[str]:
         ]
     found = {"!" + t.string for t in toks if t.type == tokenize.NAME}
     for i, (a, b, c) in enumerate(zip(toks, toks[1:], toks[2:])):
+        if a.string == "." and b.string == "rdd" and c.string != "(":
+            found.add(".rdd")
         if a.string == "." and b.type == tokenize.NAME and c.string == "(":
             found.add(b.string)
             if b.string == "parquet" and _attr_after_call(toks, i + 2) == "schema":
@@ -88,4 +97,6 @@ def test_pin_storage_is_decided_only_in_materialize():
             bad.append(f"{path}: _pin")
         if ".parquet().schema" in calls:
             bad.append(f"{path}: .parquet(...).schema (use sources.footer_schema)")
+        if ".rdd" in calls:
+            bad.append(f"{path}: DataFrame .rdd (decide from the plan, as the scan floor does)")
     assert not bad, bad

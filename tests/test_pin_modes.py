@@ -10,6 +10,7 @@ import sys
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.readwriter import DataFrameWriter
 
 from financial_data_lakehouse_pipeline__spark import corpus, materialize
 
@@ -18,8 +19,10 @@ sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(
 from check_oracle import normalize  # noqa: E402
 
 #: Corpus queries whose plans carry reuse pins (LSH, incremental LSH,
-#: pagerank, tf-idf, the concurrency sweep, CMS heavy hitters, TPC-H Q11).
+#: pagerank, tf-idf, the concurrency sweep, CMS heavy hitters, TPC-H Q11,
+#: the model-gated curation funnel).
 PIN_QUERIES = (
+    "curation_funnel_model_docs",
     "minhash_lsh_pairs_docs",
     "incremental_lsh_dedup_docs",
     "pagerank_copurchase",
@@ -76,6 +79,10 @@ def test_pin_mode_reliable_checkpoints(small_df, monkeypatch, tmp_path):
     assert pinned.count() == 100
 
 
+def _no_write(*_args, **_kwargs):
+    raise AssertionError("the curation funnel opened a DataFrameWriter")
+
+
 def _row_hash(df) -> str:
     cols = df.columns
     rows = normalize([tuple(r) for r in df.collect()], cols)
@@ -84,7 +91,9 @@ def _row_hash(df) -> str:
 
 def test_pin_modes_produce_identical_results(small_df, sf_dir, monkeypatch, tmp_path):
     """Every pin mode yields the same rows: on a bare frame, and on the
-    corpus queries whose plans pin (order-insensitive row hashes)."""
+    corpus queries whose plans pin (order-insensitive row hashes). The
+    curation funnel keeps its intermediates in pins and opens no
+    DataFrameWriter, so it leaves no checkpoint files under ``.scratch/``."""
     small_df.sparkSession.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
     expected = sorted(r["k"] for r in small_df.collect())
     queries = corpus.queries()
@@ -95,8 +104,11 @@ def test_pin_modes_produce_identical_results(small_df, sf_dir, monkeypatch, tmp_
             got = sorted(r["k"] for r in materialize.pin(small_df).collect())
             assert got == expected, mode
             for name in PIN_QUERIES:
-                df = queries[name](small_df.sparkSession, sf_dir)
-                hashes.setdefault(name, {})[mode] = _row_hash(df)
+                with monkeypatch.context() as m:
+                    if name.startswith("curation_funnel"):
+                        m.setattr(DataFrameWriter, "__init__", _no_write)
+                    df = queries[name](small_df.sparkSession, sf_dir)
+                    hashes.setdefault(name, {})[mode] = _row_hash(df)
     finally:
         # replicated pins are cache-manager entries: drop them so later
         # tests' plans never pick up an InMemoryRelation

@@ -563,3 +563,89 @@ def test_footer_schema_rejects_unmapped_types(tmp_path):
     pq.write_table(pa.table({"id": [1], "nested": pa.array([{"a": 1}])}), p)
     with pytest.raises(TypeError, match="nested"):
         footer_schema(p)
+
+
+def _floor_with_jobs(spark, df, group):
+    """``scan_parallelism_floor(df)`` and the Spark jobs it ran, counted
+    per job group after draining the listener bus."""
+    from financial_data_lakehouse_pipeline__spark.sources import scan_parallelism_floor
+
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = scan_parallelism_floor(df)
+    finally:
+        sc.setJobGroup(None, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _round_robin_root(spark, df) -> bool:
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.executedPlan()
+    part = plan.outputPartitioning()
+    return (
+        plan.getClass().getSimpleName() == "ShuffleExchangeExec"
+        and part.getClass().getSimpleName() == "RoundRobinPartitioning"
+        and part.numPartitions() == spark.sparkContext.defaultParallelism
+    )
+
+
+def test_scan_floor_decides_from_the_plan_without_jobs(spark, sf_dir):
+    """The floor runs no Spark job: a bare docs scan and its broadcast
+    semi-join to a small id table (scan-rooted, one split) get a
+    round-robin exchange; an already round-robin frame, and its
+    sort-merge join with a scan (hash-partitioned on the shuffle
+    partition count), come back as they are."""
+    from financial_data_lakehouse_pipeline__spark.sources import read_table
+
+    target = spark.sparkContext.defaultParallelism
+    docs = read_table(spark, sf_dir, "documents")
+    ids = spark.createDataFrame([(i,) for i in range(0, 200, 7)], "doc_id long")
+    semi = docs.join(F.broadcast(ids), "doc_id", "left_semi")
+    rr = docs.repartition(target)
+    for name, df in (("scan", docs), ("semi", semi)):
+        out, jobs = _floor_with_jobs(spark, df, f"floor:{name}")
+        assert jobs == 0, name
+        assert _round_robin_root(spark, out), name
+    smj = rr.join(docs.select("doc_id").hint("merge"), "doc_id")
+    for name, df in (("rr", rr), ("smj", smj)):
+        out, jobs = _floor_with_jobs(spark, df, f"floor:{name}")
+        assert jobs == 0 and out is df, name
+
+
+def test_scan_floor_counts_splits_not_row_groups(spark, tmp_path):
+    """A small one-file parquet with 8 row groups is one byte split, so it
+    is floored; a 3-file dataset is 3 splits, left alone at local[4]."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    assert spark.sparkContext.defaultParallelism == 4
+    one = str(tmp_path / "one.parquet")
+    pq.write_table(pa.table({"id": list(range(80))}), one, row_group_size=10)
+    assert pq.read_metadata(one).num_row_groups == 8
+    out, jobs = _floor_with_jobs(spark, spark.read.parquet(one), "floor:rowgroups")
+    assert jobs == 0 and _round_robin_root(spark, out)
+
+    three = tmp_path / "three"
+    three.mkdir()
+    for i in range(3):
+        pq.write_table(pa.table({"id": [i]}), str(three / f"part-{i}.parquet"))
+    df = spark.read.parquet(str(three))
+    out, jobs = _floor_with_jobs(spark, df, "floor:files")
+    assert jobs == 0 and out is df
+
+
+def test_scan_floor_passes_streaming_frames_through(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from financial_data_lakehouse_pipeline__spark.sources import footer_schema
+
+    src = tmp_path / "stream"
+    src.mkdir()
+    pq.write_table(pa.table({"id": [1, 2]}), str(src / "part-0.parquet"))
+    df = spark.readStream.schema(footer_schema(str(src / "part-0.parquet"))).parquet(str(src))
+    out, jobs = _floor_with_jobs(spark, df, "floor:stream")
+    assert jobs == 0 and out is df

@@ -1,25 +1,21 @@
 """Spark JOBS per query invocation — the evidence plans cannot show
-(VERDICT r13 #5): a lazy-vs-eager ``localCheckpoint`` change alters the
-number of jobs a driver-loop operator launches per round, while the
-physical plan of any single job is identical. This tool counts them.
+(VERDICT r13 #5): a driver-loop operator launches jobs per round, and a
+DataFrame under construction may launch jobs before its action, while
+the physical plan of any single job looks the same. This tool counts
+them.
 
-Each named query runs in its own job group; the count is
-``len(statusTracker().getJobIdsForGroup(group))`` after forcing the
-query through the noop sink (same action as bench.py). Jobs launched
-while the query BUILDS (convergence counts, route statistics, funnel
-checkpoints) land in the same group, so the number is
-jobs-per-invocation end to end.
-
-``--force-eager`` monkeypatches ``DataFrame.localCheckpoint`` to ignore
-``eager=False`` — replaying the pre-round-13 behavior (one extra
-materialization job per loop round) on the SAME tree, so before/after
-is a one-flag A/B instead of a git checkout.
+Each named query is built under one job group and forced through the
+noop sink (same action as bench.py) under a second. The listener bus is
+drained before each count, so a job whose start event is still queued
+is not missed. ``build_jobs`` are the jobs launched while the query
+BUILDS (convergence counts, route statistics, pins' shuffle-map
+stages); ``jobs`` is the invocation's total, build plus action.
 
 Usage:
-    python tools/job_count.py [--force-eager] [sf_dir] name1 name2 ...
+    python tools/job_count.py [sf_dir] name1 name2 ...
 
-Prints one JSON line: {"sf_dir": ..., "force_eager": bool,
-"jobs": {name: n_jobs}}.
+Prints one JSON line: {"sf_dir": ..., "build_jobs": {name: n},
+"jobs": {name: n}}.
 """
 
 from __future__ import annotations
@@ -35,66 +31,38 @@ from financial_data_lakehouse_pipeline__spark import corpus  # noqa: E402
 from financial_data_lakehouse_pipeline__spark.session import build_session  # noqa: E402
 
 
-def _patch_eager_localcheckpoint() -> None:
-    # Patch the CLASSIC DataFrame class, not the abstract
-    # pyspark.sql.DataFrame facade: Spark 4 classic defines its own
-    # localCheckpoint, so patching only the base class is a no-op (the
-    # round-13 evidence run silently measured lazy twice).
-    targets = []
-    try:
-        from pyspark.sql.classic.dataframe import DataFrame as _CDF
-
-        targets.append(_CDF)
-    except ImportError:  # pragma: no cover - older Spark layout
-        pass
-    from pyspark.sql import DataFrame as _ADF
-
-    targets.append(_ADF)
-    for cls in targets:
-        if "localCheckpoint" not in cls.__dict__:
-            continue
-        orig = cls.localCheckpoint
-
-        def eager_only(self, eager: bool = True, *a, _orig=orig, **kw):  # noqa: ANN001
-            kw.pop("eager", None)
-            return _orig(self, True, *a, **kw)
-
-        cls.localCheckpoint = eager_only
-
-
 def main() -> None:
     args = sys.argv[1:]
-    force_eager = "--force-eager" in args
-    if force_eager:
-        args.remove("--force-eager")
     sf_dir = "/root/testdata/sf0.1"
     if args and os.path.isdir(args[0]):
         sf_dir, args = args[0], args[1:]
     if not args:
-        print("usage: job_count.py [--force-eager] [sf_dir] name...",
-              file=sys.stderr)
+        print("usage: job_count.py [sf_dir] name...", file=sys.stderr)
         raise SystemExit(1)
-    if force_eager:
-        _patch_eager_localcheckpoint()
     spark = build_session(
         "job-count", extra_conf={"spark.ui.showConsoleProgress": "false"}
     )
     qs = corpus.queries()
     sc = spark.sparkContext
+
+    def count(group: str) -> int:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    build_jobs: dict[str, int] = {}
     jobs: dict[str, int] = {}
     for name in args:
-        group = f"jobcount:{name}"
-        sc.setJobGroup(group, group)
+        build, run = f"jobcount:build:{name}", f"jobcount:run:{name}"
         try:
-            qs[name](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
+            sc.setJobGroup(build, build)
+            df = qs[name](spark, sf_dir)
+            sc.setJobGroup(run, run)
+            df.write.format("noop").mode("overwrite").save()
         finally:
             sc.setJobGroup(None, None)
-        jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
-    print(json.dumps(
-        {"sf_dir": sf_dir, "force_eager": force_eager, "jobs": jobs}
-    ))
+        build_jobs[name] = count(build)
+        jobs[name] = build_jobs[name] + count(run)
+    print(json.dumps({"sf_dir": sf_dir, "build_jobs": build_jobs, "jobs": jobs}))
     spark.stop()
 
 

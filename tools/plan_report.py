@@ -85,15 +85,14 @@ def main() -> int:
         "not mean no codegen); Bcast = broadcast joins; Cartesian should "
         "always be 'no'.",
         "",
-        "Queries that eagerly materialize mid-DAG (curation_funnel_* "
-        "checkpoint their flag table to scratch parquet; acid_* commit "
+        "Queries that eagerly materialize mid-DAG (acid_* commit "
         "transactional writes) report only the plan of the RETURNED "
-        "DataFrame here — the upstream DAG runs during the call. The "
-        "funnel's full upstream (one flag-column scan + fingerprint "
-        "window + survivor-only LSH sub-DAG, 36 exchanges pre-"
-        "checkpoint) is audited in SCALE.md §16; the ACID write "
-        "paths are plan-asserted in tests/test_plans.py and "
-        "tests/test_acid.py.",
+        "DataFrame here — the upstream DAG runs during the call; the "
+        "ACID write paths are plan-asserted in tests/test_plans.py and "
+        "tests/test_acid.py. The curation_funnel_* flag tables are pins "
+        "like the above; the funnel's full upstream (one "
+        "flag-column scan + fingerprint window + survivor-only LSH "
+        "sub-DAG) is audited in SCALE.md §16.",
         "",
         "| Query | Exchanges | Scans | WSCG spans | Bcast joins | Cartesian |",
         "|---|---|---|---|---|---|",
