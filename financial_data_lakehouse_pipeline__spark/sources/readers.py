@@ -13,7 +13,6 @@ from __future__ import annotations
 import os
 
 import pyarrow as pa
-import pyarrow.fs as pafs
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -239,21 +238,22 @@ def scan_parallelism_floor(df: DataFrame) -> DataFrame:
     dominates the row bytes — callers are the tokenize/hash-heavy text
     operators, nothing else.
 
-    Deciding runs no Spark job. The partition count ``n`` is the
-    output partitioning of the physical plan when it is known: an
-    exchange, an explicit repartition, a join above them. Under AQE
-    that is the adaptive node's current plan, which until the frame
-    runs is its initial plan with every exchange already placed (its
-    ``inputPlan`` is not: a sort-merge join there has no exchanges yet,
-    and children with different partition counts make Spark reject the
-    join's partitioning). A scan-rooted plan (including the streamed
-    side of a broadcast join) reports ``UnknownPartitioning``; then
-    ``n`` is the split count of
-    ``df.inputFiles()``, per file min(row groups,
-    ceil(size / spark.sql.files.maxPartitionBytes)). Every file is at
-    least one split, so footers (pyarrow, as in ``footer_schema``) are
-    read only when ``files * 2 <= target``, and only for files larger
-    than one split. A streaming frame passes through untouched.
+    Deciding runs no Spark job: ``n`` is read from the physical plan
+    Spark has already built for the frame. Under AQE that is the
+    adaptive node's current plan, which until the frame runs is its
+    initial plan with every exchange placed. A node whose output
+    partitioning has a count (an exchange, an explicit repartition, a
+    join above them) gives that count. Otherwise (a scan and the narrow
+    operators over it) ``n`` is the sum over its children, skipping the
+    broadcast side of a join, down to the source leaves, whose planned
+    input RDDs give Spark's own split count: the file scan's packing of
+    files into ``maxSplitBytes`` partitions, a pin's RDD, a local
+    relation's slices. A cached (replicated) pin counts through its
+    cached plan, a frame that has already run through its query
+    stages. Any other leaf (none in the engine's plans) counts as one
+    unsplit input, so the worst a new leaf kind costs is one
+    round-robin shuffle, never an error. A streaming frame passes
+    through untouched.
 
     Scale posture: the floor only engages when the scan is under-split
     by 2x or more versus the session's core count, so real lake inputs
@@ -263,33 +263,44 @@ def scan_parallelism_floor(df: DataFrame) -> DataFrame:
     """
     if df.isStreaming:
         return df
-    spark = df.sparkSession
-    target = spark.sparkContext.defaultParallelism
-    plan = df._jdf.queryExecution().executedPlan()
-    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
-        plan = plan.executedPlan()
-    part = plan.outputPartitioning()
-    if part.getClass().getSimpleName() != "UnknownPartitioning":
-        n = part.numPartitions()
-    else:
-        files = df.inputFiles()
-        n = len(files) if len(files) * 2 > target else _split_count(spark, files)
-    if n * 2 > target:
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if _planned_partitions(df._jdf.queryExecution().executedPlan()) * 2 > target:
         return df
     return df.repartition(target)
 
 
-def _split_count(spark: SparkSession, files: list[str]) -> int:
-    """Scan tasks for ``files``: per file, min(row groups, byte splits)."""
-    max_bytes = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
-    n = 0
-    for uri in files:
-        fs, path = pafs.FileSystem.from_uri(uri)
-        splits = -(-fs.get_file_info(path).size // max_bytes)
-        if splits > 1 and path.endswith(".parquet"):
-            splits = min(splits, pq.read_metadata(path, filesystem=fs).num_row_groups)
-        n += splits
-    return n
+#: Source leaves whose ``inputRDDs()`` are the RDDs Spark will scan.
+_SOURCE_SCANS = frozenset(
+    ("FileSourceScanExec", "BatchScanExec", "RDDScanExec", "LocalTableScanExec", "RangeExec")
+)
+
+
+def _planned_partitions(plan) -> int:
+    """The partition count a physical plan will run with, read from the
+    plan and its leaves' planned RDDs (no job runs)."""
+    name = plan.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        return _planned_partitions(plan.executedPlan())
+    n = plan.outputPartitioning().numPartitions()
+    if n > 0:
+        return n
+    if name.endswith("QueryStageExec"):  # a frame that has already run
+        return _planned_partitions(plan.plan())
+    if name == "InMemoryTableScanExec":
+        return _planned_partitions(plan.relation().cachedPlan())
+    kids = plan.children()
+    kids = [kids.apply(i) for i in range(kids.length())]
+    kids = [
+        k
+        for k in kids
+        if k.outputPartitioning().getClass().getSimpleName() != "BroadcastPartitioning"
+    ]
+    if kids:
+        return sum(_planned_partitions(k) for k in kids)
+    if name not in _SOURCE_SCANS:
+        return 1  # an unknown leaf: one unsplit input
+    rdds = plan.inputRDDs()
+    return sum(rdds.apply(i).getNumPartitions() for i in range(rdds.length()))
 
 
 def with_ingest_metadata(df: DataFrame, source: str) -> DataFrame:

@@ -615,26 +615,71 @@ def test_scan_floor_decides_from_the_plan_without_jobs(spark, sf_dir):
         assert jobs == 0 and out is df, name
 
 
-def test_scan_floor_counts_splits_not_row_groups(spark, tmp_path):
-    """A small one-file parquet with 8 row groups is one byte split, so it
-    is floored; a 3-file dataset is 3 splits, left alone at local[4]."""
+def test_scan_floor_counts_the_splits_spark_plans(spark, tmp_path, monkeypatch):
+    """The floor's count is the partition count Spark runs the frame
+    with (checked here against the RDD view, which the engine never
+    reads). A small one-file parquet with 8 row groups is one byte split
+    and is floored; a 12 MB one with 8 row groups packs into 3 splits at
+    local[4] and is left alone, as is a 3-file dataset. A directory name
+    that needs URI escaping, a local relation, a pin in the default and
+    the replicated mode, and a frame that has already run (its plan is
+    query stages) count the same way."""
+    import numpy as np
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    assert spark.sparkContext.defaultParallelism == 4
-    one = str(tmp_path / "one.parquet")
-    pq.write_table(pa.table({"id": list(range(80))}), one, row_group_size=10)
-    assert pq.read_metadata(one).num_row_groups == 8
-    out, jobs = _floor_with_jobs(spark, spark.read.parquet(one), "floor:rowgroups")
-    assert jobs == 0 and _round_robin_root(spark, out)
+    from financial_data_lakehouse_pipeline__spark import materialize
+    from financial_data_lakehouse_pipeline__spark.sources.readers import (
+        _planned_partitions,
+    )
 
+    assert spark.sparkContext.defaultParallelism == 4
+    small = str(tmp_path / "small.parquet")
+    pq.write_table(pa.table({"id": list(range(80))}), small, row_group_size=10)
+    big = str(tmp_path / "big.parquet")
+    rng = np.random.default_rng(0)
+    pq.write_table(
+        pa.table({"b": [rng.bytes(1000) for _ in range(12000)]}), big, row_group_size=1500
+    )
+    assert pq.read_metadata(small).num_row_groups == pq.read_metadata(big).num_row_groups == 8
     three = tmp_path / "three"
     three.mkdir()
     for i in range(3):
         pq.write_table(pa.table({"id": [i]}), str(three / f"part-{i}.parquet"))
-    df = spark.read.parquet(str(three))
-    out, jobs = _floor_with_jobs(spark, df, "floor:files")
-    assert jobs == 0 and out is df
+    odd = tmp_path / "a b é%"
+    odd.mkdir()
+    pq.write_table(pa.table({"id": [1, 2]}), str(odd / "part-0.parquet"))
+    monkeypatch.setenv(materialize.PIN_MODE_ENV, "replicated")
+    cached = materialize.pin(spark.read.parquet(big))
+    monkeypatch.delenv(materialize.PIN_MODE_ENV)
+    frames = {
+        "small": (spark.read.parquet(small), 1),
+        "big": (spark.read.parquet(big), 3),
+        "three": (spark.read.parquet(str(three)), 3),
+        "odd": (spark.read.parquet(str(odd)), 1),
+        "local": (spark.createDataFrame([(i,) for i in range(8)], "a int"), 4),
+        "pin": (materialize.pin(spark.read.parquet(big)), 3),
+        "cached": (cached, 3),
+        "ran": (
+            spark.read.parquet(big)
+            .withColumn("id", F.length("b"))
+            .join(F.broadcast(spark.read.parquet(str(three))), "id", "left_anti"),
+            3,
+        ),
+    }
+    frames["ran"][0].collect()
+    try:
+        for name, (df, n) in frames.items():
+            out, jobs = _floor_with_jobs(spark, df, f"floor:{name}")
+            assert jobs == 0, name
+            planned = _planned_partitions(df._jdf.queryExecution().executedPlan())
+            assert planned == n == df.rdd.getNumPartitions(), name
+            if n * 2 <= 4:
+                assert _round_robin_root(spark, out), name
+            else:
+                assert out is df, name
+    finally:
+        cached.unpersist()
 
 
 def test_scan_floor_passes_streaming_frames_through(spark, tmp_path):
