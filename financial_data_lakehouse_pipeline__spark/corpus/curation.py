@@ -301,8 +301,7 @@ def _funnel(spark, sf_dir, model_quality: bool):
     # pipeline is not; a semi join can only build the id side, so the
     # text is never broadcast). Its tiny dup-id output has one consumer,
     # the flag assembly pinned below, so it gets no pin of its own: a pin
-    # inside a pin stores the same rows twice, and under the replicated
-    # mode every level of pin nesting multiplies the plan string.
+    # inside a pin stores the same rows twice.
     flags = pin(
         b3.select("doc_id", "source", "fp", "n_tokens", "f1", "f2", "f3", "f4")
     )

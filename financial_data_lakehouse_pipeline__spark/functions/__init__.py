@@ -113,16 +113,6 @@ def cosine_similarity(a: Column, b: Column) -> Column:
     return guarded_div(dot(a, b), l2_norm(a) * l2_norm(b))
 
 
-def md5_prefix_int(col: Column, chars: int = 15) -> Column:
-    """First ``chars`` hex digits of md5(col) as a non-negative BIGINT.
-
-    Portable across engines (md5 is md5 everywhere) — used by MinHash /
-    SimHash so oracles can reproduce the hashing in plain SQL. 15 hex
-    digits = 60 bits, always < 2^63.
-    """
-    return F.conv(F.substring(F.md5(col), 1, chars), 16, 10).cast("bigint")
-
-
 def tokens(col: Column) -> Column:
     """Whitespace tokenization that returns [] for empty/blank strings."""
     trimmed = F.trim(col)

@@ -19,9 +19,12 @@ without touching any call site:
               truncated, so an executor loss during a query holding a
               corpus-sized pin kills the job (fine locally / on static
               executors; SCALE.md §23).
-  replicated  MEMORY_AND_DISK_2 ``persist`` — two replicas AND lineage
-              kept, for spot/decommission regimes where a lost pin must
-              not kill a long query.
+  replicated  the same ``localCheckpoint`` at MEMORY_AND_DISK_2 — two
+              replicas of every block, lineage truncated as in
+              ``local``: a block outlives one executor that holds it,
+              but losing both replicas fails the query instead of
+              recomputing it. For spot/decommission regimes that lose
+              executors one at a time.
   reliable    ``checkpoint(eager=False)`` to ``spark.checkpoint.dir`` —
               object-store-backed; survives any executor loss. The lake
               posture for corpus-sized pins such as the curation
@@ -29,20 +32,25 @@ without touching any call site:
   off         full lineage, no materialization — for plan inspection and
               storage-tighter-than-recompute regimes.
 
-A DataFrame-level MEMORY_AND_DISK ``persist`` was measured SLOWER than
-recompute for these subtrees (columnar cache build + serialized branch
-execution, SCALE.md §13); the RDD-level local checkpoint skips the
-columnar conversion and was measured faster than both (A/B at sf0.1:
-median 5.2 s recompute vs 2.7 s pinned for minhash_lsh_pairs).
+Every pin is a plan leaf (a ``LogicalRDD``): the consuming plan reads
+the pinned rows and never carries the pinned subtree's plan. A
+DataFrame-level ``persist`` is not one: every consumer prints its
+cached plan again, so nested persisted pins grew the plan string
+exponentially (the model-gated curation funnel reached 131M
+characters), and it was measured SLOWER than recompute for these
+subtrees (columnar cache build + serialized branch execution,
+SCALE.md §13). The RDD-level local checkpoint skips the columnar
+conversion and was measured faster than both (A/B at sf0.1: median
+5.2 s recompute vs 2.7 s pinned for minhash_lsh_pairs).
 
 No mode computes the pinned rows inside :func:`pin`, but under AQE
-``local`` and ``reliable`` still launch Spark jobs there: Spark 4's lazy
-``localCheckpoint``/``checkpoint`` calls ``execute()`` on the physical
-plan, which materializes the AQE query stages (the shuffle-map stages)
-below the pinned root. On a one-shuffle subtree ``pin`` launched 1 job
-in ``local`` and in ``reliable`` mode and 0 in ``replicated`` and
-``off``. The pin moves that shuffle-map work from the first action to
-the build; it does not add any.
+every mode except ``off`` still launches Spark jobs there: Spark 4's
+lazy ``localCheckpoint``/``checkpoint`` calls ``execute()`` on the
+physical plan, which materializes the AQE query stages (the shuffle-map
+stages) below the pinned root. On a one-shuffle subtree ``pin``
+launched 1 job in ``local``, ``replicated`` and ``reliable`` mode and 0
+in ``off``. The pin moves that shuffle-map work from the first action
+to the build; it does not add any.
 
 Direct ``localCheckpoint`` calls that are NOT reuse pins stay where they
 are, because ``off`` must not disable them (tests/test_materialize.py
@@ -63,6 +71,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
 PIN_MODE_ENV = "SPARK_GRAFT_PIN_MODE"
@@ -76,13 +85,10 @@ def pin(df: DataFrame) -> DataFrame:
     mode = os.environ.get(PIN_MODE_ENV, "local")
     if mode == "off":
         return df
-    if mode == "replicated":
-        from pyspark import StorageLevel
-
-        return df.persist(StorageLevel.MEMORY_AND_DISK_2)
     if mode == "reliable":
         return df.checkpoint(eager=False)
-    return df.localCheckpoint(eager=False)
+    level = StorageLevel.MEMORY_AND_DISK_2 if mode == "replicated" else None
+    return df.localCheckpoint(eager=False, storageLevel=level)
 
 
 def release(df: DataFrame) -> None:
@@ -97,13 +103,9 @@ def release(df: DataFrame) -> None:
     its blocks gone, so any other handle to it (or any frame derived from
     it) fails on next use instead of recomputing.
 
-    Best-effort: the localCheckpoint blocks hang off the LogicalRDD's
+    Best-effort: the checkpoint blocks hang off the LogicalRDD's
     internal RDD (stable Spark API reached via py4j); any failure just
     leaves the GC-based cleanup."""
-    try:
-        df.unpersist()  # covers the 'replicated' persist mode; no-op otherwise
-    except Exception:
-        pass
     try:
         df._jdf.queryExecution().logical().rdd().unpersist(False)
     except Exception:

@@ -14,26 +14,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from financial_data_lakehouse_pipeline__spark.functions import dmean, dsum, guarded_div, safe_corr
-
-
-def grouped_stats(
-    df: DataFrame,
-    keys: Sequence[str],
-    value_col: str,
-    prefix: str = "",
-) -> DataFrame:
-    """count/avg/min/max/stddev of one measure per group
-    (reference A1: data_transformation.py:261-271)."""
-    v = F.col(value_col)
-    p = prefix
-    return df.groupBy(*keys).agg(
-        F.count(v).alias(f"{p}count"),
-        dmean(v).alias(f"{p}avg"),
-        F.min(v).alias(f"{p}min"),
-        F.max(v).alias(f"{p}max"),
-        F.stddev_samp(v).alias(f"{p}stddev"),
-    )
+from financial_data_lakehouse_pipeline__spark.functions import dsum, guarded_div, safe_corr
 
 
 def conditional_counts(

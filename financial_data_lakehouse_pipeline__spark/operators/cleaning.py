@@ -2,8 +2,8 @@
 
 Generalizes the reference's four hard-coded cleaning jobs
 (scripts/spark_jobs/data_cleaning.py) into parameterized operators: nested
-flattening (array and map explode), typed casts, keep-latest dedup,
-null/domain-invariant filters, clamping, and derived columns.
+flattening (array and map explode), keep-latest dedup,
+null/domain-invariant filters, and derived columns.
 """
 
 from __future__ import annotations
@@ -12,8 +12,6 @@ from collections.abc import Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-
-from financial_data_lakehouse_pipeline__spark.functions import clamp
 
 
 def explode_array(df: DataFrame, array_col: str, alias: str = "item") -> DataFrame:
@@ -32,11 +30,6 @@ def explode_map(df: DataFrame, map_col: str, key_alias: str = "key", value_alias
     (data_cleaning.py:151-157).
     """
     return df.select("*", F.explode(F.col(map_col)).alias(key_alias, value_alias)).drop(map_col)
-
-
-def cast_columns(df: DataFrame, casts: Mapping[str, str]) -> DataFrame:
-    """Apply {column: spark_type_ddl} casts (reference dc:162-166, dc:303)."""
-    return df.withColumns({c: F.col(c).cast(t) for c, t in casts.items()})
 
 
 def dedup_keep_latest(
@@ -82,23 +75,10 @@ def filter_invariant(df: DataFrame, predicate: Column) -> DataFrame:
     return df.filter(predicate)
 
 
-def clamp_column(df: DataFrame, col: str, lo: float, hi: float, out: str | None = None) -> DataFrame:
-    """Clamp a column into [lo, hi] (reference sentiment clamp dc:320-325)."""
-    return df.withColumn(out or col, clamp(F.col(col), lo, hi))
-
-
 def with_derived(df: DataFrame, derived: Mapping[str, Column]) -> DataFrame:
     """Add derived columns in one projection (reference dc:93-98: price_range,
     price_change, price_change_pct)."""
     return df.withColumns(dict(derived))
-
-
-def fill_defaults(df: DataFrame, defaults: Mapping[str, object]) -> DataFrame:
-    """Null-fill columns with per-column defaults (reference dt:372-383
-    coalesce loop over 12 sentiment columns)."""
-    return df.withColumns(
-        {c: F.coalesce(F.col(c), F.lit(v)) for c, v in defaults.items()}
-    )
 
 
 def with_date_parts(df: DataFrame, date_col: str, parts: Sequence[str] = ("year", "month", "day")) -> DataFrame:

@@ -59,16 +59,6 @@ def hash_split(
     return df.withColumn(out, expr)
 
 
-def hash_sample(
-    df: DataFrame, id_col: str, fraction: float, salt: str = "sample"
-) -> DataFrame:
-    """Deterministic Bernoulli-style sample: keep rows whose bucket falls
-    below fraction * BUCKETS. Same rows survive on every run/cluster."""
-    return df.filter(
-        hash_bucket(F.col(id_col), salt) < int(round(fraction * BUCKETS))
-    )
-
-
 def stratified_hash_sample(
     df: DataFrame,
     id_col: str,

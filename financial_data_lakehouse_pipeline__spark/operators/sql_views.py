@@ -13,8 +13,6 @@ statement — the corpus imports VIEWS for both sides.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
 # Spark + DuckDB compatible ANSI SQL. Every computed column aliased.
 VIEWS: dict[str, str] = {
     # hv:236-250 v_recent_stock_performance: recent window scan + filter +
@@ -109,14 +107,3 @@ VIEWS: dict[str, str] = {
         GROUP BY o.o_orderkey, CAST(o.o_orderdate AS DATE), ROUND(o.o_totalprice, 2)
     """,
 }
-
-
-def create_views(spark: SparkSession, prefix: str = "") -> dict[str, DataFrame]:
-    """Register every view as a temp view; returns the DataFrames.
-    Requires base tables registered first (sources.catalog.register_views)."""
-    out = {}
-    for name, sql in VIEWS.items():
-        df = spark.sql(sql)
-        df.createOrReplaceTempView(prefix + name)
-        out[name] = df
-    return out

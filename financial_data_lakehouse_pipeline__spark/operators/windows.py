@@ -110,24 +110,6 @@ def rolling_range_agg(
     )
 
 
-def with_lag_lead(
-    df: DataFrame,
-    partition_by: Sequence[str],
-    order_by: Sequence[Column | str],
-    lags: dict[str, tuple[str, int]] | None = None,
-    leads: dict[str, tuple[str, int]] | None = None,
-) -> DataFrame:
-    """lag/lead analytics: {out: (col, offset)} (reference dt:194-196 lags,
-    sa:55-59 / sa:138-150 leads)."""
-    w = _w(partition_by, order_by)
-    cols: dict[str, Column] = {}
-    for out, (c, n) in (lags or {}).items():
-        cols[out] = F.lag(c, n).over(w)
-    for out, (c, n) in (leads or {}).items():
-        cols[out] = F.lead(c, n).over(w)
-    return df.withColumns(cols)
-
-
 def momentum(
     df: DataFrame,
     partition_by: Sequence[str],

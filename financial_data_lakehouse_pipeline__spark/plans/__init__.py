@@ -17,13 +17,6 @@ def formatted_plan(df: DataFrame) -> str:
     )
 
 
-def assert_pushed_filters(df: DataFrame, *fragments: str) -> None:
-    """Assert each fragment appears in the scan's PushedFilters."""
-    plan = formatted_plan(df)
-    for frag in fragments:
-        assert frag in plan, f"expected pushed filter {frag!r} in plan:\n{plan}"
-
-
 def count_exchanges(df: DataFrame) -> int:
     """Number of shuffle Exchange operators in the physical plan.
 

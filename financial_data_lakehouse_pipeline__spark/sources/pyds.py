@@ -21,6 +21,9 @@ exactly like a parquet scan's splits.
 
 from __future__ import annotations
 
+import sys
+
+from pyspark import cloudpickle
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
 #: Modulus/multiplier for the deterministic value column — small primes
@@ -80,5 +83,11 @@ class SyntheticRowsReader(DataSourceReader):
 
 
 def register(spark) -> None:
-    """Idempotently register the source with a SparkSession."""
+    """Idempotently register the source with a SparkSession.
+
+    The source class is pickled by value, so the Python worker that
+    instantiates it needs no import path to this package (a driver that
+    imports the engine through a ``sys.path`` entry from another working
+    directory leaves the worker without one)."""
+    cloudpickle.register_pickle_by_value(sys.modules[__name__])
     spark.dataSource.register(SyntheticRowsDataSource)

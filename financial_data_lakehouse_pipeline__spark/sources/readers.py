@@ -248,10 +248,9 @@ def scan_parallelism_floor(df: DataFrame) -> DataFrame:
     broadcast side of a join, down to the source leaves, whose planned
     input RDDs give Spark's own split count: the file scan's packing of
     files into ``maxSplitBytes`` partitions, a pin's RDD, a local
-    relation's slices. A cached (replicated) pin counts through its
-    cached plan, a frame that has already run through its query
-    stages. Any other leaf (none in the engine's plans) counts as one
-    unsplit input, so the worst a new leaf kind costs is one
+    relation's slices. A frame that has already run counts through its
+    query stages. Any other leaf (none in the engine's plans) counts as
+    one unsplit input, so the worst a new leaf kind costs is one
     round-robin shuffle, never an error. A streaming frame passes
     through untouched.
 
@@ -286,8 +285,6 @@ def _planned_partitions(plan) -> int:
         return n
     if name.endswith("QueryStageExec"):  # a frame that has already run
         return _planned_partitions(plan.plan())
-    if name == "InMemoryTableScanExec":
-        return _planned_partitions(plan.relation().cachedPlan())
     kids = plan.children()
     kids = [kids.apply(i) for i in range(kids.length())]
     kids = [

@@ -1,11 +1,16 @@
-"""Guard: pin storage is decided in ``materialize.py`` alone, table
-schemas come from the parquet footer, and no engine code runs a frame
-through its RDD view to shape a plan.
+"""Guard: pin storage is decided in ``materialize.py`` alone and is
+always a plan leaf, table schemas come from the parquet footer, and no
+engine code runs a frame through its RDD view to shape a plan.
 
 Scans the engine package's code tokens (comments and strings are
 skipped, so prose may still name the APIs) and fails on:
 
-- ``.persist(`` or ``.checkpoint(`` anywhere outside materialize.py;
+- ``.persist(``, ``.cache(`` or ``.unpersist(`` anywhere, materialize.py
+  included: no engine code keeps a DataFrame-level cache, whose cached
+  plan every consumer would print again. The py4j ``.rdd().unpersist(``
+  on a pin's JVM RDD, as in ``materialize.release``, frees checkpoint
+  blocks and stays allowed;
+- ``.checkpoint(`` anywhere outside materialize.py;
 - any use of the name ``_pin`` (the retired private helper);
 - ``.localCheckpoint(`` in a file the materialize module docstring does
   not list as a non-pin lineage cut;
@@ -42,7 +47,8 @@ def _engine_files() -> list[str]:
 
 
 def _code_names(path: str) -> set[str]:
-    """Names called as ``.name(`` in code, plus every bare NAME token
+    """Names called as ``.name(`` in code (except the py4j
+    ``.rdd().unpersist(``), plus every bare NAME token
     (prefixed with '!'), ``.parquet().schema`` for an inference lookup and
     ``.rdd`` for a DataFrame's RDD view read as an attribute — comments
     and string literals excluded."""
@@ -57,6 +63,8 @@ def _code_names(path: str) -> set[str]:
         if a.string == "." and b.string == "rdd" and c.string != "(":
             found.add(".rdd")
         if a.string == "." and b.type == tokenize.NAME and c.string == "(":
+            if b.string == "unpersist" and [t.string for t in toks[i - 3 : i]] == ["rdd", "(", ")"]:
+                continue  # py4j: frees a pin's JVM RDD blocks
             found.add(b.string)
             if b.string == "parquet" and _attr_after_call(toks, i + 2) == "schema":
                 found.add(".parquet().schema")
@@ -89,8 +97,10 @@ def test_pin_storage_is_decided_only_in_materialize():
     bad = []
     for path in files:
         calls = _code_names(path)
+        bad += [f"{path}: .{m}(" for m in ("persist", "cache", "unpersist") if m in calls]
         if path != "materialize.py":
-            bad += [f"{path}: .{m}(" for m in ("persist", "checkpoint") if m in calls]
+            if "checkpoint" in calls:
+                bad.append(f"{path}: .checkpoint(")
             if "localCheckpoint" in calls and path not in allow:
                 bad.append(f"{path}: .localCheckpoint( (not on the allowlist)")
         if "!_pin" in calls:

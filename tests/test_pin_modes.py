@@ -61,13 +61,15 @@ def test_pin_mode_off_keeps_full_lineage(small_df, monkeypatch):
 def test_pin_mode_replicated_persists_with_two_replicas(small_df, monkeypatch):
     monkeypatch.setenv(materialize.PIN_MODE_ENV, "replicated")
     pinned = materialize.pin(small_df)
-    lvl = pinned.storageLevel
-    # MEMORY_AND_DISK_2: lineage kept (recompute possible), 2 replicas —
-    # the executor-loss-tolerant variant for corpus-sized pins
-    assert lvl.replication == 2
-    assert lvl.useMemory and lvl.useDisk
+    # a plan leaf like the local pin, whose checkpoint RDD keeps 2 replicas
+    # of every block (MEMORY_AND_DISK_2) — the executor-loss-tolerant
+    # variant for corpus-sized pins
+    assert _plan_name(pinned) == "LogicalRDD"
+    lvl = pinned._jdf.queryExecution().logical().rdd().getStorageLevel()
+    assert lvl.replication() == 2
+    assert lvl.useMemory() and lvl.useDisk()
     assert pinned.count() == 100
-    pinned.unpersist()
+    materialize.release(pinned)
 
 
 def test_pin_mode_reliable_checkpoints(small_df, monkeypatch, tmp_path):
@@ -98,23 +100,41 @@ def test_pin_modes_produce_identical_results(small_df, sf_dir, monkeypatch, tmp_
     expected = sorted(r["k"] for r in small_df.collect())
     queries = corpus.queries()
     hashes: dict[str, dict[str, str]] = {}
-    try:
-        for mode in ("local", "replicated", "reliable", "off"):
-            monkeypatch.setenv(materialize.PIN_MODE_ENV, mode)
-            got = sorted(r["k"] for r in materialize.pin(small_df).collect())
-            assert got == expected, mode
-            for name in PIN_QUERIES:
-                with monkeypatch.context() as m:
-                    if name.startswith("curation_funnel"):
-                        m.setattr(DataFrameWriter, "__init__", _no_write)
-                    df = queries[name](small_df.sparkSession, sf_dir)
-                    hashes.setdefault(name, {})[mode] = _row_hash(df)
-    finally:
-        # replicated pins are cache-manager entries: drop them so later
-        # tests' plans never pick up an InMemoryRelation
-        small_df.sparkSession.catalog.clearCache()
+    for mode in ("local", "replicated", "reliable", "off"):
+        monkeypatch.setenv(materialize.PIN_MODE_ENV, mode)
+        got = sorted(r["k"] for r in materialize.pin(small_df).collect())
+        assert got == expected, mode
+        for name in PIN_QUERIES:
+            with monkeypatch.context() as m:
+                if name.startswith("curation_funnel"):
+                    m.setattr(DataFrameWriter, "__init__", _no_write)
+                df = queries[name](small_df.sparkSession, sf_dir)
+                hashes.setdefault(name, {})[mode] = _row_hash(df)
     for name, by_mode in hashes.items():
         assert len(set(by_mode.values())) == 1, (name, by_mode)
+
+
+def _nested_pin_plan_length(spark, mode: str, monkeypatch) -> int:
+    """Plan-string length of an aggregate pinned and self-joined 4 levels
+    deep, after it has run."""
+    monkeypatch.setenv(materialize.PIN_MODE_ENV, mode)
+    df = spark.range(64).select((F.col("id") % 8).alias("k"), F.col("id").alias("v"))
+    for _ in range(4):
+        agg = materialize.pin(df.groupBy("k").agg(F.sum("v").alias("v")))
+        df = agg.join(agg.withColumnRenamed("v", "w"), "k").select(
+            "k", (F.col("v") + F.col("w")).alias("v")
+        )
+    assert len(df.collect()) == 8
+    return len(df._jdf.queryExecution().toString())
+
+
+def test_replicated_pins_do_not_grow_the_plan(spark, monkeypatch):
+    """A replicated pin is a plan leaf like a local one, so nested pins
+    do not print the pinned plans again per reference (a persisted pin's
+    cached plan did, growing the string about 4x per level)."""
+    local = _nested_pin_plan_length(spark, "local", monkeypatch)
+    replicated = _nested_pin_plan_length(spark, "replicated", monkeypatch)
+    assert replicated <= 2 * local, (replicated, local)
 
 
 def test_release_pin_frees_materialized_blocks(small_df, monkeypatch):

@@ -415,6 +415,35 @@ def test_python_datasource_partitions_and_content(spark):
     assert got == [pyds.row_for_id(i) for i in range(103)]
 
 
+def test_python_datasource_scan_from_another_working_directory(sf_dir, tmp_path):
+    """The corpus query runs when the engine is imported the way
+    ``__spark_entry__.py`` loads it: through a ``sys.path`` entry, from a
+    working directory outside the checkout, where the Python worker that
+    instantiates the source cannot import the package."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = tmp_path / "run.py"
+    script.write_text(
+        "import sys\n"
+        f"sys.path.insert(0, {repo!r})\n"
+        "import __spark_entry__ as e\n"
+        "from pyspark.sql import SparkSession\n"
+        "spark = (SparkSession.builder.master(\"local[1]\")\n"
+        "         .config(\"spark.ui.enabled\", \"false\").getOrCreate())\n"
+        f"df = e.queries()[\"python_datasource_scan\"](spark, {sf_dir!r})\n"
+        "print(sum(r[\"n\"] for r in df.collect()))\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, str(script)], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert out.stdout.split()[-1] == "1000"
+
+
 def test_python_datasource_empty_and_reregister(spark):
     """rows=0 yields an empty frame with the declared schema; a second
     register() call is idempotent."""
@@ -622,8 +651,8 @@ def test_scan_floor_counts_the_splits_spark_plans(spark, tmp_path, monkeypatch):
     and is floored; a 12 MB one with 8 row groups packs into 3 splits at
     local[4] and is left alone, as is a 3-file dataset. A directory name
     that needs URI escaping, a local relation, a pin in the default and
-    the replicated mode, and a frame that has already run (its plan is
-    query stages) count the same way."""
+    the replicated mode (both plan leaves), and a frame that has already
+    run (its plan is query stages) count the same way."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -650,7 +679,7 @@ def test_scan_floor_counts_the_splits_spark_plans(spark, tmp_path, monkeypatch):
     odd.mkdir()
     pq.write_table(pa.table({"id": [1, 2]}), str(odd / "part-0.parquet"))
     monkeypatch.setenv(materialize.PIN_MODE_ENV, "replicated")
-    cached = materialize.pin(spark.read.parquet(big))
+    replicated = materialize.pin(spark.read.parquet(big))
     monkeypatch.delenv(materialize.PIN_MODE_ENV)
     frames = {
         "small": (spark.read.parquet(small), 1),
@@ -659,7 +688,7 @@ def test_scan_floor_counts_the_splits_spark_plans(spark, tmp_path, monkeypatch):
         "odd": (spark.read.parquet(str(odd)), 1),
         "local": (spark.createDataFrame([(i,) for i in range(8)], "a int"), 4),
         "pin": (materialize.pin(spark.read.parquet(big)), 3),
-        "cached": (cached, 3),
+        "replicated": (replicated, 3),
         "ran": (
             spark.read.parquet(big)
             .withColumn("id", F.length("b"))
@@ -679,7 +708,7 @@ def test_scan_floor_counts_the_splits_spark_plans(spark, tmp_path, monkeypatch):
             else:
                 assert out is df, name
     finally:
-        cached.unpersist()
+        materialize.release(replicated)
 
 
 def test_scan_floor_passes_streaming_frames_through(spark, tmp_path):
