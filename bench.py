@@ -13,12 +13,11 @@ import json
 import os
 import re
 import sys
-import time
 
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
-from financial_data_lakehouse_pipeline__spark import corpus  # noqa: E402
+from financial_data_lakehouse_pipeline__spark import corpus, measure  # noqa: E402
 from financial_data_lakehouse_pipeline__spark.session import build_session  # noqa: E402
 
 #: Headline set: one representative per operator family (SURVEY.md §2),
@@ -85,6 +84,10 @@ HEADLINE = [
     "leakage_safe_split_docs",   # cluster-atomic train/val/test split
 ]
 
+#: Queries per SparkSession: the session is rebuilt before every
+#: RESTART_EVERY-th headline query (see main).
+RESTART_EVERY = 12
+
 #: Audited in PLANS.md (physical-plan posture) but NOT timed in the
 #: bench line — the driver captures only the tail of stdout, and the
 #: result JSON is near its 2000-char window; these queries' wall time
@@ -145,10 +148,11 @@ def choose_result_line(
     return out
 
 
-def previous_round_queries(sf: float | None) -> dict[str, float]:
+def previous_round_queries(sf: float | None, cpus: int) -> dict[str, float]:
     """Per-query timings from the newest BENCH_r{N}.json recorded by the
     driver — the self-adjudication baseline. Only comparable runs count
-    (same sf, parsed queries present); anything else returns {} and the
+    (same sf and same cpus, parsed queries present; a wrapper without
+    `cpus` never matches); anything else returns {} and the
     adjudication pass simply doesn't engage."""
     best: tuple[int, dict] | None = None
     for fn in os.listdir(REPO):
@@ -157,10 +161,15 @@ def previous_round_queries(sf: float | None) -> dict[str, float]:
             continue
         try:
             with open(os.path.join(REPO, fn)) as fh:
-                parsed = json.load(fh).get("parsed") or {}
+                wrapper = json.load(fh)
         except (OSError, json.JSONDecodeError):
             continue
-        if parsed.get("sf") == sf and isinstance(parsed.get("queries"), dict):
+        parsed = wrapper.get("parsed") or {}
+        if (
+            wrapper.get("cpus") == cpus
+            and parsed.get("sf") == sf
+            and isinstance(parsed.get("queries"), dict)
+        ):
             n = int(m.group(1))
             if best is None or n > best[0]:
                 best = (n, parsed["queries"])
@@ -194,9 +203,7 @@ def main() -> None:
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1).rstrip(".")) if m else None
 
-    spark = build_session(
-        "bench", extra_conf={"spark.ui.showConsoleProgress": "false"}
-    )
+    spark = build_session("bench")
     qs = corpus.queries()
 
     # Steady-state methodology: per query, one untimed warmup execution
@@ -215,16 +222,14 @@ def main() -> None:
     # block manager and codegen cache in the same JVM), and
     # os.getloadavg() is recorded per group so a judge can adjudicate
     # external load without isolation re-runs.
-    restart_every = int(os.environ.get("SPARK_GRAFT_BENCH_RESTART_EVERY", "12"))
     errors: dict[str, str] = {}
     timings: dict[str, float] = {}
     spreads: dict[str, float] = {}
     minmax: dict[str, list[float]] = {}
     loadavg_per_group: list[list[float]] = []
-    group_of: dict[str, int] = {}
 
-    def run(name: str) -> None:
-        qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+    def time_query(name: str) -> dict[str, float]:
+        return measure.timed(lambda: measure.noop(qs[name](spark, sf_dir)))
 
     def prime() -> None:
         # absorb fresh-session costs (scheduler spin-up, codegen/IO
@@ -234,42 +239,30 @@ def main() -> None:
         from pyspark.sql.functions import col
 
         spark.range(100_000).groupBy(col("id") % 7).count().collect()
-        spark.read.parquet(
-            os.path.join(sf_dir, "orders.parquet")
-        ).limit(1000).write.format("noop").mode("overwrite").save()
+        measure.noop(
+            spark.read.parquet(os.path.join(sf_dir, "orders.parquet")).limit(1000)
+        )
 
-    prime()
     for i, name in enumerate(HEADLINE):
-        if restart_every and i and i % restart_every == 0:
-            spark.stop()
-            spark = build_session(
-                "bench", extra_conf={"spark.ui.showConsoleProgress": "false"}
-            )
+        if i % RESTART_EVERY == 0:
+            if i:
+                spark.stop()
+                spark = build_session("bench")
             prime()
-        # one loadavg snapshot per session (re)start — with
-        # RESTART_EVERY=0 that is exactly one, not one per query
-        if i == 0 or (restart_every and i % restart_every == 0):
-            try:
+            try:  # one loadavg snapshot per session group
                 loadavg_per_group.append(
                     [round(x, 2) for x in os.getloadavg()]
                 )
             except OSError:  # pragma: no cover - platform without loadavg
                 pass
-        group_of[name] = len(loadavg_per_group) - 1
-        samples: list[float] = []
         try:
-            run(name)  # untimed warmup
-            for _ in range(3):
-                t0 = time.time()
-                run(name)
-                samples.append(time.time() - t0)
+            t = time_query(name)
         except Exception as exc:  # pragma: no cover - resilience path
             errors[name] = f"{type(exc).__name__}: {exc}"[:200]
             continue
-        samples.sort()
-        timings[name] = round(samples[1], 3)
-        spreads[name] = round(samples[-1] - samples[0], 3)
-        minmax[name] = [round(samples[0], 3), round(samples[-1], 3)]
+        timings[name] = t["median"]
+        spreads[name] = t["spread"]
+        minmax[name] = [t["min"], t["max"]]
 
     # Self-adjudication pass (VERDICT r12 #3, widened per VERDICT r13
     # #1): rounds 10, 12 AND 13 were muddied by load-inflated per-query
@@ -278,36 +271,29 @@ def main() -> None:
     # is NOT visible in loadavg (BENCH_r13 ran at loadavg ~2.4 yet ~20
     # untouched queries came in 1.5-3x over r12), so the loadavg
     # precondition is GONE. Any query whose median exceeds its
-    # previous-round value (same sf, newest BENCH_r{N}.json) by >30% is
-    # RE-MEASURED at the tail of the run — fresh session, same warmup +
-    # median-of-3 methodology — most-inflated first, budget-capped at
-    # 15 queries so a globally slow round cannot double the bench's
-    # runtime. The quiet-tail re-measure REPLACES the in-run value
-    # symmetrically (VERDICT r13 what's-wrong #4: keep-min was a
-    # one-sided filter; the tail sample is the later, quieter one and
-    # is taken whether higher or lower). Result line carries `readj`
-    # (count) and the diagnostics line the old/new values, so
-    # BENCH_r{N}.json adjudicates itself.
-    prev = previous_round_queries(sf)
+    # previous-round value (same sf and cpus, newest BENCH_r{N}.json)
+    # by >30% is RE-MEASURED at the tail of the run — fresh session,
+    # same warmup + median-of-3 methodology — most-inflated first,
+    # budget-capped at 15 queries so a globally slow round cannot
+    # double the bench's runtime. The quiet-tail re-measure REPLACES
+    # the in-run value symmetrically (VERDICT r13 what's-wrong #4:
+    # keep-min was a one-sided filter; the tail sample is the later,
+    # quieter one and is taken whether higher or lower). Result line
+    # carries `readj` (count) and the diagnostics line the old/new
+    # values, so BENCH_r{N}.json adjudicates itself. This is the one
+    # adjudication path; tools/bench_compare.py only compares.
+    prev = previous_round_queries(sf, spark.sparkContext.defaultParallelism)
     flagged = select_readjudication(timings, prev)
     readj: dict[str, list[float]] = {}
     if flagged:
         spark.stop()
-        spark = build_session(
-            "bench", extra_conf={"spark.ui.showConsoleProgress": "false"}
-        )
+        spark = build_session("bench")
         prime()
         for name in flagged:
-            samples = []
             try:
-                run(name)
-                for _ in range(3):
-                    t0 = time.time()
-                    run(name)
-                    samples.append(time.time() - t0)
+                new = time_query(name)["median"]
             except Exception:  # pragma: no cover - resilience path
                 continue
-            new = round(sorted(samples)[1], 3)
             readj[name] = [timings[name], new]
             timings[name] = new
 
@@ -322,7 +308,7 @@ def main() -> None:
         json.dumps(
             {
                 "method": "median_of_3_after_per_query_warmup",
-                "session_restart_every": restart_every,
+                "session_restart_every": RESTART_EVERY,
                 "loadavg_per_group": loadavg_per_group,
                 "spread_max_minus_min": spreads,
                 "minmax": minmax,

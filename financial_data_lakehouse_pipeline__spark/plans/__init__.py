@@ -29,4 +29,5 @@ def count_exchanges(df: DataFrame) -> int:
 
 
 def has_broadcast_join(df: DataFrame) -> bool:
-    return "BroadcastHashJoin" in formatted_plan(df) or "BroadcastNestedLoopJoin" in formatted_plan(df)
+    plan = formatted_plan(df)
+    return "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan

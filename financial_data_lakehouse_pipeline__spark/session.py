@@ -98,6 +98,8 @@ def build_session(
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.ui.enabled", "false")
+        # no live stage progress bar on stderr (on by default in a script)
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.maxResultSize", "4g")
     )
     # Heap sizing (local mode runs everything in the driver JVM): the

@@ -18,12 +18,7 @@ SF_SMALL = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = build_session(
-        "tests",
-        master="local[4]",
-        shuffle_partitions=8,
-        extra_conf={"spark.ui.showConsoleProgress": "false"},
-    )
+    s = build_session("tests", master="local[4]", shuffle_partitions=8)
     yield s
     s.stop()
 

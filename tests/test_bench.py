@@ -107,22 +107,31 @@ def test_select_readjudication_no_loadavg_gate():
 
 def test_previous_round_queries_picks_newest_matching_sf(tmp_path):
     """Self-adjudication baseline: newest BENCH_r{N}.json with the SAME
-    sf; non-matching sf or unparseable files never contribute."""
+    sf and the SAME cpus; non-matching sf or cpus, a wrapper without
+    cpus, and unparseable files never contribute."""
     sys.path.insert(0, REPO)
     import bench
+
+    def wrapper(cpus, sf, q1):
+        w = {"parsed": {"sf": sf, "queries": {"q1": q1}}}
+        return json.dumps(w if cpus is None else {"cpus": cpus, **w})
 
     old_repo = bench.REPO
     try:
         bench.REPO = str(tmp_path)
-        (tmp_path / "BENCH_r03.json").write_text(json.dumps(
-            {"parsed": {"sf": 0.1, "queries": {"q1": 1.0}}}))
-        (tmp_path / "BENCH_r07.json").write_text(json.dumps(
-            {"parsed": {"sf": 0.1, "queries": {"q1": 2.0}}}))
-        (tmp_path / "BENCH_r09.json").write_text(json.dumps(
-            {"parsed": {"sf": 0.01, "queries": {"q1": 9.0}}}))
+        (tmp_path / "BENCH_r03.json").write_text(wrapper(4, 0.1, 1.0))
+        (tmp_path / "BENCH_r07.json").write_text(wrapper(4, 0.1, 2.0))
+        (tmp_path / "BENCH_r08.json").write_text(wrapper(32, 0.1, 5.0))
+        (tmp_path / "BENCH_r09.json").write_text(wrapper(4, 0.01, 9.0))
+        (tmp_path / "BENCH_r10.json").write_text(wrapper(None, 0.1, 7.0))
         (tmp_path / "BENCH_r11.json").write_text("not json")
-        assert bench.previous_round_queries(0.1) == {"q1": 2.0}
-        assert bench.previous_round_queries(0.01) == {"q1": 9.0}
-        assert bench.previous_round_queries(2.0) == {}
+        # r08 (32 cpus) and r10 (no cpus) are newer than r07 but are
+        # not 4-cpu runs
+        assert bench.previous_round_queries(0.1, 4) == {"q1": 2.0}
+        assert bench.previous_round_queries(0.01, 4) == {"q1": 9.0}
+        assert bench.previous_round_queries(2.0, 4) == {}
+        assert bench.previous_round_queries(0.1, 32) == {"q1": 5.0}
+        assert bench.previous_round_queries(0.01, 32) == {}
+        assert bench.previous_round_queries(0.1, 8) == {}
     finally:
         bench.REPO = old_repo

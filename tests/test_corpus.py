@@ -14,7 +14,7 @@ sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(
 
 from check_oracle import normalize, type_mismatches  # noqa: E402
 
-from financial_data_lakehouse_pipeline__spark import corpus  # noqa: E402
+from financial_data_lakehouse_pipeline__spark import corpus, measure  # noqa: E402
 from financial_data_lakehouse_pipeline__spark.sources import TABLES  # noqa: E402
 
 _QUERIES = corpus.queries()
@@ -157,15 +157,10 @@ def test_every_query_handles_empty_input(spark, tmp_path):
 def test_pure_query_build_launches_no_spark_job(name, spark, sf_dir):
     """Building a pure query (no pin, no driver loop) runs no Spark job:
     every table schema comes from the parquet footer, not inference.
-    Jobs are counted per job group after draining the listener bus, as
-    tools/job_count.py does, so a job whose start event is still queued
-    is not missed."""
-    sc = spark.sparkContext
-    group = f"build:{name}"
-    sc.setJobGroup(group, group)
-    try:
-        _QUERIES[name](spark, sf_dir)
-    finally:
-        sc.setJobGroup(None, None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    Jobs are counted by measure.jobs, as tools/job_count.py does, after
+    draining the listener bus, so a job whose start event is still
+    queued is not missed."""
+    _, n = measure.jobs(
+        spark, f"build:{name}", lambda: _QUERIES[name](spark, sf_dir)
+    )
+    assert n == 0

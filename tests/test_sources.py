@@ -595,18 +595,11 @@ def test_footer_schema_rejects_unmapped_types(tmp_path):
 
 
 def _floor_with_jobs(spark, df, group):
-    """``scan_parallelism_floor(df)`` and the Spark jobs it ran, counted
-    per job group after draining the listener bus."""
+    """``scan_parallelism_floor(df)`` and the Spark jobs it ran."""
+    from financial_data_lakehouse_pipeline__spark import measure
     from financial_data_lakehouse_pipeline__spark.sources import scan_parallelism_floor
 
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = scan_parallelism_floor(df)
-    finally:
-        sc.setJobGroup(None, None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    return measure.jobs(spark, group, lambda: scan_parallelism_floor(df))
 
 
 def _round_robin_root(spark, df) -> bool:

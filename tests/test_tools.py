@@ -1,22 +1,28 @@
-"""Pins for the verification tooling itself — the checksum comparator
-check_oracle --checksum leans on (a silent false-pass there would
-invalidate every large-scale oracle run), no SparkSession needed."""
+"""Pins for the verification and measurement tooling itself — the
+checksum comparator check_oracle --checksum leans on (a silent
+false-pass there would invalidate every large-scale oracle run), the
+measure helpers bench.py and tools/ time and count jobs with, and an
+import of every tool."""
 
 from __future__ import annotations
 
 import datetime
+import glob
+import importlib
 import os
 import sys
 
 import pyarrow as pa
+import pytest
 
-sys.path.insert(
-    0,
-    os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                 "tools"),
+TOOLS = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"
 )
+sys.path.insert(0, TOOLS)
 
 from check_oracle import _canonical_row_hashes  # noqa: E402
+
+from financial_data_lakehouse_pipeline__spark import measure  # noqa: E402
 
 
 def _h(tbl) -> int:
@@ -136,3 +142,45 @@ def test_apply_oracle_ceilings_decision_core():
     # unknown scale: never skip (verification must not silently drop)
     skips, only = apply_oracle_ceilings(ceil, None, {"q_big"})
     assert skips == {} and only == {"q_big"}
+
+
+def test_timed_warms_up_once_then_takes_the_median_of_three(monkeypatch):
+    """One untimed warmup call plus three timed ones; the three
+    durations (3 s, 1 s, 2 s) give median 2 and spread 2."""
+    ticks = iter([0.0, 3.0, 10.0, 11.0, 20.0, 22.0])
+    monkeypatch.setattr(measure.time, "monotonic", lambda: next(ticks))
+    calls = []
+    t = measure.timed(lambda: calls.append(1))
+    assert len(calls) == 4
+    assert t == {"median": 2.0, "spread": 2.0, "min": 1.0, "max": 3.0}
+
+
+def test_jobs_counts_the_group_and_clears_it(spark):
+    """Building a DataFrame launches no job, an action inside ``fn``
+    launches at least one, and the job group is cleared when ``fn``
+    raises."""
+    df, n = measure.jobs(
+        spark, "measure:build", lambda: spark.range(10).groupBy("id").count()
+    )
+    assert n == 0
+    count, n = measure.jobs(spark, "measure:count", df.count)
+    assert count == 10 and n >= 1
+
+    def boom():
+        raise RuntimeError("boom")
+
+    with pytest.raises(RuntimeError):
+        measure.jobs(spark, "measure:raise", boom)
+    assert spark.sparkContext.getLocalProperty("spark.jobGroup.id") is None
+
+
+@pytest.mark.parametrize(
+    "name",
+    sorted(
+        os.path.basename(p)[:-3] for p in glob.glob(os.path.join(TOOLS, "*.py"))
+    ),
+)
+def test_tool_imports(name):
+    """Every tool imports: their imports of the engine, of measure and
+    of each other are resolved without running them."""
+    importlib.import_module(name)

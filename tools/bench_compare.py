@@ -1,31 +1,18 @@
 """Compare two BENCH_r{N}.json files with variance context.
 
 Usage: python tools/bench_compare.py OLD.json NEW.json [ratio]
-                                     [--adjudicate [sf_dir]]
 
-Flags per-query regressions where new/old exceeds `ratio` (default 1.5)
-AND the delta exceeds the recorded spread (when a diagnostics sidecar is
-unavailable, spread defaults to 0 and only the ratio gate applies) —
-the r5/r6 lesson: shared-box per-query variance produced 1.5-2x phantom
-regressions that judges had to adjudicate by hand; this makes the noise
-context part of the comparison.
-
---adjudicate closes the loop: every flagged mover is re-timed by
-tools/bench_isolate.py (fresh session per query, warm median-of-3) and
-the adjudication table — in-bench old/new vs isolated median, with a
-real/environmental verdict — is APPENDED to PLANS.md so the judge
-reads the adjudication instead of redoing it.
+Flags per-query regressions where new/old reaches `ratio` (default 1.5)
+AND the delta is at least 0.25 s — the r5/r6 lesson: shared-box
+per-query variance produced 1.5-2x phantom regressions on sub-second
+queries. It only compares: a mover is re-measured by bench.py's own
+in-run readjudication, or by hand with tools/bench_isolate.py.
 """
 
 from __future__ import annotations
 
-import datetime
 import json
-import os
-import subprocess
 import sys
-
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def load(path: str) -> dict:
@@ -38,75 +25,9 @@ def load(path: str) -> dict:
     return d
 
 
-def adjudicate(flags, sf_dir: str, old_p: str, new_p: str) -> None:
-    """Isolation-re-run every flagged mover and append the adjudication
-    table to PLANS.md. Verdict rule: a mover is 'real' only when its
-    ISOLATED median still exceeds the old in-bench time by ≥1.3× —
-    otherwise the in-bench number was shared-session/box noise."""
-    names = [n for n, _a, _b, _r in flags]
-    proc = subprocess.run(
-        [sys.executable, os.path.join(REPO, "tools", "bench_isolate.py"),
-         sf_dir, *names],
-        capture_output=True, text=True,
-    )
-    # surface the isolation run's own failure instead of crashing on
-    # empty stdout (IndexError) with its stderr swallowed
-    out_lines = [ln for ln in proc.stdout.splitlines() if ln.strip()]
-    if proc.returncode != 0 or not out_lines:
-        print(
-            f"bench_isolate failed (rc={proc.returncode}); stderr tail:\n"
-            + "\n".join(proc.stderr.splitlines()[-10:]),
-            file=sys.stderr,
-        )
-        return
-    iso = json.loads(out_lines[-1])
-    lines = [
-        "",
-        f"## Drift adjudication ({os.path.basename(old_p)} → "
-        f"{os.path.basename(new_p)}, "
-        f"{datetime.date.today().isoformat()})",
-        "",
-        f"Auto-generated by tools/bench_compare.py --adjudicate: each "
-        f">1.5× in-bench mover re-timed by tools/bench_isolate.py "
-        f"(fresh session, warm median-of-3) at {sf_dir}; loadavg at "
-        f"isolation start {iso.get('loadavg')}.",
-        "",
-        "| query | old (bench) | new (bench) | isolated median | "
-        "isolated spread | verdict |",
-        "|---|---|---|---|---|---|",
-    ]
-    for name, a, b, _r in flags:
-        q = iso["queries"].get(name, {})
-        med, spr = q.get("median"), q.get("spread")
-        verdict = (
-            "REAL regression" if med is not None and a > 0
-            and med / a >= 1.3 else "environmental (in-bench noise)"
-        )
-        lines.append(
-            f"| {name} | {a} | {b} | {med} | {spr} | {verdict} |"
-        )
-    lines.append("")
-    with open(os.path.join(REPO, "PLANS.md"), "a") as fh:
-        fh.write("\n".join(lines))
-    print(f"adjudication appended to PLANS.md ({len(flags)} movers)",
-          file=sys.stderr)
-
-
 def main() -> None:
-    argv = list(sys.argv[1:])
-    adj = False
-    adj_sf = "/root/testdata/sf0.1"
-    if "--adjudicate" in argv:
-        i = argv.index("--adjudicate")
-        if i + 1 < len(argv) and os.path.isdir(argv[i + 1]):
-            adj_sf = argv[i + 1]
-            del argv[i:i + 2]
-        else:
-            del argv[i]
-        adj = True
-    old_p, new_p = argv[0], argv[1]
-    ratio = float(argv[2]) if len(argv) > 2 else 1.5
-    old, new = load(old_p), load(new_p)
+    old, new = load(sys.argv[1]), load(sys.argv[2])
+    ratio = float(sys.argv[3]) if len(sys.argv) > 3 else 1.5
     oq, nq = old.get("queries", {}), new.get("queries", {})
     shared = sorted(set(oq) & set(nq))
     added = sorted(set(nq) - set(oq))
@@ -141,8 +62,6 @@ def main() -> None:
             indent=2,
         )
     )
-    if adj and flags:
-        adjudicate(flags, adj_sf, old_p, new_p)
 
 
 if __name__ == "__main__":

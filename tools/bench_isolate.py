@@ -1,8 +1,8 @@
 """Isolation timings: run named corpus queries EACH IN A FRESH
-SparkSession (warmup + median-of-3, same methodology as bench.py) so a
-per-query number carries no shared-session state — the adjudication
-tool for round-over-round drift on the shared box (r7/r8 phantom
-regressions).
+SparkSession (measure.timed: warmup + median-of-3, the bench.py
+methodology) so a per-query number carries no shared-session state —
+the re-measure for round-over-round drift on the shared box (r7/r8
+phantom regressions).
 
 Usage:
     python tools/bench_isolate.py [sf_dir] name1 name2 ...
@@ -15,15 +15,25 @@ from __future__ import annotations
 
 import json
 import os
-import statistics
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from financial_data_lakehouse_pipeline__spark import corpus  # noqa: E402
+from financial_data_lakehouse_pipeline__spark import corpus, measure  # noqa: E402
 from financial_data_lakehouse_pipeline__spark.session import build_session  # noqa: E402
+
+
+def isolate(name: str, sf_dir: str) -> dict[str, float]:
+    """Median and spread of corpus query ``name`` at ``sf_dir``, timed
+    in a session of its own."""
+    spark = build_session(f"isolate-{name}")
+    try:
+        fn = corpus.queries()[name]
+        t = measure.timed(lambda: measure.noop(fn(spark, sf_dir)))
+    finally:
+        spark.stop()
+    return {"median": t["median"], "spread": t["spread"]}
 
 
 def main() -> None:
@@ -34,29 +44,7 @@ def main() -> None:
     if not args:
         print("usage: bench_isolate.py [sf_dir] name...", file=sys.stderr)
         raise SystemExit(1)
-    qs = corpus.queries()
-    out: dict[str, dict] = {}
-    for name in args:
-        spark = build_session(
-            f"isolate-{name}",
-            extra_conf={"spark.ui.showConsoleProgress": "false"},
-        )
-        fn = qs[name]
-
-        def run():
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-
-        run()  # warmup: codegen + IO caches, untimed
-        times = []
-        for _ in range(3):
-            t0 = time.monotonic()
-            run()
-            times.append(time.monotonic() - t0)
-        out[name] = {
-            "median": round(statistics.median(times), 3),
-            "spread": round(max(times) - min(times), 3),
-        }
-        spark.stop()
+    out = {name: isolate(name, sf_dir) for name in args}
     print(
         json.dumps(
             {

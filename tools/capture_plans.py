@@ -18,6 +18,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from financial_data_lakehouse_pipeline__spark import corpus  # noqa: E402
+from financial_data_lakehouse_pipeline__spark.plans import formatted_plan  # noqa: E402
 from financial_data_lakehouse_pipeline__spark.session import build_session  # noqa: E402
 
 
@@ -28,17 +29,10 @@ def main() -> None:
         sf_dir, rest = rest[0], rest[1:]
     outdir = os.path.join(REPO, "plans", tag)
     os.makedirs(outdir, exist_ok=True)
-    spark = build_session(
-        "capture-plans", extra_conf={"spark.ui.showConsoleProgress": "false"}
-    )
+    spark = build_session("capture-plans")
     qs = corpus.queries()
     for name in rest:
-        df = qs[name](spark, sf_dir)
-        plan = df._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-        )
+        plan = formatted_plan(qs[name](spark, sf_dir))
         path = os.path.join(outdir, f"{name}_{suffix}.txt")
         with open(path, "w") as fh:
             fh.write(f"-- {name} @ {sf_dir} ({suffix})\n")

@@ -9,8 +9,8 @@ incoming batch against the other 9/10ths three ways and time each —
               parquet (minhash_index written once beforehand — the
               production posture; index build time reported separately)
 
-All three are warm median-of-3 in one fresh session per variant (same
-methodology as tools/bench_isolate.py), forced with a noop sink.
+All three are warm median-of-3 (measure.timed) in one fresh session,
+forced with a noop sink.
 The incremental outputs equal the full output filtered to pairs touching
 the batch (pinned by pytest), so the comparison is work-for-work.
 
@@ -23,13 +23,13 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import statistics
 import sys
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from financial_data_lakehouse_pipeline__spark import measure  # noqa: E402
 from financial_data_lakehouse_pipeline__spark.operators import dedup, sampling  # noqa: E402
 from financial_data_lakehouse_pipeline__spark.session import build_session  # noqa: E402
 from financial_data_lakehouse_pipeline__spark.sources import read_table  # noqa: E402
@@ -37,15 +37,32 @@ from financial_data_lakehouse_pipeline__spark.sources import read_table  # noqa:
 PARAMS = dict(num_hashes=16, bands=4, threshold=0.5, max_bucket_size=50)
 
 
-def timed(make_df) -> dict:
-    runs = []
-    make_df().write.format("noop").mode("overwrite").save()  # warmup
-    for _ in range(3):
-        t0 = time.time()
-        make_df().write.format("noop").mode("overwrite").save()
-        runs.append(time.time() - t0)
-    return {"median": round(statistics.median(runs), 3),
-            "spread": round(max(runs) - min(runs), 3)}
+def timed_noop(make_df) -> dict[str, float]:
+    """Median and spread of executing ``make_df()`` with the noop sink."""
+    t = measure.timed(lambda: measure.noop(make_df()))
+    return {"median": t["median"], "spread": t["spread"]}
+
+
+def build_index(base, out_dir: str) -> float:
+    """Write ``base``'s shingle and signature index to ``out_dir``/sh and
+    ``out_dir``/sig (once per corpus life, amortized over every batch);
+    return the seconds it took."""
+    t0 = time.monotonic()
+    sh_b, sig_b = dedup.minhash_index(base)
+    sh_b.write.mode("overwrite").parquet(f"{out_dir}/sh")
+    sig_b.write.mode("overwrite").parquet(f"{out_dir}/sig")
+    return round(time.monotonic() - t0, 3)
+
+
+def indexed(spark, inc, out_dir: str, **index):
+    """Pairs of the ``inc`` batch against the base index in ``out_dir``,
+    read from parquet; ``index`` passes further stored index tables."""
+    return dedup.incremental_minhash_pairs(
+        None, inc,
+        base_shingles=spark.read.parquet(f"{out_dir}/sh"),
+        base_signatures=spark.read.parquet(f"{out_dir}/sig"),
+        **index, **PARAMS,
+    )
 
 
 def main() -> None:
@@ -62,28 +79,13 @@ def main() -> None:
     is_new = sampling.hash_bucket(F.col("doc_id"), salt="incr") < 1000
     base, inc = d.filter(~is_new), d.filter(is_new)
     n_base, n_inc = base.count(), inc.count()
+    index_build_s = build_index(base, out_dir)
 
-    # index build (once per corpus life, amortized over every batch)
-    t0 = time.time()
-    sh_b, sig_b = dedup.minhash_index(base)
-    sh_b.write.mode("overwrite").parquet(f"{out_dir}/sh")
-    sig_b.write.mode("overwrite").parquet(f"{out_dir}/sig")
-    index_build_s = round(time.time() - t0, 3)
-
-    results["full"] = timed(lambda: dedup.minhash_lsh_pairs(d, **PARAMS))
-    results["incremental"] = timed(
+    results["full"] = timed_noop(lambda: dedup.minhash_lsh_pairs(d, **PARAMS))
+    results["incremental"] = timed_noop(
         lambda: dedup.incremental_minhash_pairs(base, inc, **PARAMS)
     )
-
-    def indexed():
-        return dedup.incremental_minhash_pairs(
-            None, inc,
-            base_shingles=spark.read.parquet(f"{out_dir}/sh"),
-            base_signatures=spark.read.parquet(f"{out_dir}/sig"),
-            **PARAMS,
-        )
-
-    results["indexed"] = timed(indexed)
+    results["indexed"] = timed_noop(lambda: indexed(spark, inc, out_dir))
     print(json.dumps({
         "sf_dir": sf_dir, "n_base": n_base, "n_incoming": n_inc,
         "index_build_s": index_build_s,

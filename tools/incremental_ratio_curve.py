@@ -13,9 +13,9 @@ Per sf_dir, in a FRESH session (no cross-scale cache bleed):
     docs regardless of corpus size;
   * index build time (once per corpus life, amortized over every batch
     — reported, not charged to the per-batch number);
-  * warm median-of-3 wall for incremental_minhash_pairs reading the
-    stored index, noop sink (same methodology as
-    tools/incremental_dedup_rehearsal.py).
+  * warm median-of-3 wall (measure.timed) for incremental_minhash_pairs
+    reading the stored index, noop sink — the index build and the
+    `indexed` variant are tools/incremental_dedup_rehearsal.py's.
 
 Usage: python tools/incremental_ratio_curve.py sf_dir [sf_dir ...]
 Prints one JSON line per sf_dir, then a summary line with the curve.
@@ -26,30 +26,19 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import statistics
 import sys
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from incremental_dedup_rehearsal import PARAMS, build_index, indexed, timed_noop  # noqa: E402
+
 from financial_data_lakehouse_pipeline__spark.operators import dedup, sampling  # noqa: E402
 from financial_data_lakehouse_pipeline__spark.session import build_session  # noqa: E402
 from financial_data_lakehouse_pipeline__spark.sources import read_table  # noqa: E402
 
-PARAMS = dict(num_hashes=16, bands=4, threshold=0.5, max_bucket_size=50)
 TARGET_BATCH = 500
-
-
-def timed(make_df) -> dict:
-    runs = []
-    make_df().write.format("noop").mode("overwrite").save()  # warmup
-    for _ in range(3):
-        t0 = time.time()
-        make_df().write.format("noop").mode("overwrite").save()
-        runs.append(time.time() - t0)
-    return {"median": round(statistics.median(runs), 3),
-            "spread": round(max(runs) - min(runs), 3)}
 
 
 def measure(sf_dir: str, out_dir: str) -> dict:
@@ -67,45 +56,26 @@ def measure(sf_dir: str, out_dir: str) -> dict:
         is_new = sampling.hash_bucket(F.col("doc_id"), salt="incr") < k
         base, inc = d.filter(~is_new), d.filter(is_new)
         n_base, n_inc = base.count(), inc.count()
-
-        t0 = time.time()
-        sh_b, sig_b = dedup.minhash_index(base)
-        sh_b.write.mode("overwrite").parquet(f"{out_dir}/sh")
-        sig_b.write.mode("overwrite").parquet(f"{out_dir}/sig")
-        index_build_s = round(time.time() - t0, 3)
+        index_build_s = build_index(base, out_dir)
         # optional third index table (round 13): precomputed band
         # buckets amortize the per-batch bands*N md5 recompute
-        t0 = time.time()
+        t0 = time.monotonic()
         dedup.minhash_band_buckets(
             spark.read.parquet(f"{out_dir}/sig"),
             num_hashes=PARAMS["num_hashes"], bands=PARAMS["bands"],
         ).write.mode("overwrite").parquet(f"{out_dir}/bk")
-        bucket_index_build_s = round(time.time() - t0, 3)
-
-        def indexed():
-            return dedup.incremental_minhash_pairs(
-                None, inc,
-                base_shingles=spark.read.parquet(f"{out_dir}/sh"),
-                base_signatures=spark.read.parquet(f"{out_dir}/sig"),
-                **PARAMS,
-            )
-
-        def indexed_bucketed():
-            return dedup.incremental_minhash_pairs(
-                None, inc,
-                base_shingles=spark.read.parquet(f"{out_dir}/sh"),
-                base_signatures=spark.read.parquet(f"{out_dir}/sig"),
-                base_buckets=spark.read.parquet(f"{out_dir}/bk"),
-                **PARAMS,
-            )
+        bucket_index_build_s = round(time.monotonic() - t0, 3)
 
         row = {
             "sf_dir": sf_dir, "n_base": n_base, "n_batch": n_inc,
             "ratio": round(n_base / max(n_inc, 1), 1),
             "index_build_s": index_build_s,
             "bucket_index_build_s": bucket_index_build_s,
-            "per_batch": timed(indexed),
-            "per_batch_bucketed": timed(indexed_bucketed),
+            "per_batch": timed_noop(lambda: indexed(spark, inc, out_dir)),
+            "per_batch_bucketed": timed_noop(lambda: indexed(
+                spark, inc, out_dir,
+                base_buckets=spark.read.parquet(f"{out_dir}/bk"),
+            )),
             "loadavg": [round(x, 2) for x in os.getloadavg()],
         }
         print(json.dumps(row), flush=True)

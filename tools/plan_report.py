@@ -1,6 +1,6 @@
 """Generate PLANS.md: a physical-plan audit of every bench headline
 query — exchange (shuffle) count, parquet scan count, whole-stage
-codegen span count, broadcast joins, and scan-level pushdown — the
+codegen span count, broadcast joins and Cartesian products — the
 at-a-glance scale-posture report. Regenerate after plan-affecting
 changes:
 
@@ -21,6 +21,7 @@ sys.path.insert(0, REPO)
 from bench import HEADLINE, PLANS_EXTRA  # noqa: E402
 
 from financial_data_lakehouse_pipeline__spark import corpus  # noqa: E402
+from financial_data_lakehouse_pipeline__spark.plans import formatted_plan  # noqa: E402
 from financial_data_lakehouse_pipeline__spark.session import build_session  # noqa: E402
 
 
@@ -36,12 +37,8 @@ def main() -> int:
     ).stdout.strip()
 
     rows = []
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        "formatted"
-    )
     for name in HEADLINE + PLANS_EXTRA:
-        df = qs[name](spark, sf_dir)
-        p = df._jdf.queryExecution().explainString(mode)
+        p = formatted_plan(qs[name](spark, sf_dir))
         # count operators from the numbered tree only — formatted mode
         # repeats each operator in the detail section below the tree
         ops = re.findall(r"^\s*[:+\-| ]*\*?\((\d+)\)\s+(\w[\w ]*?)(?:\s*\[|$)",
@@ -58,7 +55,6 @@ def main() -> int:
                     for o in op_names
                     if o in ("BroadcastHashJoin", "BroadcastNestedLoopJoin")
                 ),
-                "yes",
                 "YES" if "CartesianProduct" in p else "no",
             )
         )
@@ -97,7 +93,7 @@ def main() -> int:
         "| Query | Exchanges | Scans | WSCG spans | Bcast joins | Cartesian |",
         "|---|---|---|---|---|---|",
     ]
-    for name, ex, sc, wscg, bc, _pushed, cart in rows:
+    for name, ex, sc, wscg, bc, cart in rows:
         out.append(f"| {name} | {ex} | {sc} | {wscg} | {bc} | {cart} |")
     out.append("")
 

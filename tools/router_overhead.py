@@ -14,13 +14,12 @@ from __future__ import annotations
 
 import json
 import os
-import statistics
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from financial_data_lakehouse_pipeline__spark import measure  # noqa: E402
 from financial_data_lakehouse_pipeline__spark.operators import dedup  # noqa: E402
 from financial_data_lakehouse_pipeline__spark.session import build_session  # noqa: E402
 from financial_data_lakehouse_pipeline__spark.sources import read_table  # noqa: E402
@@ -28,32 +27,20 @@ from financial_data_lakehouse_pipeline__spark.sources import read_table  # noqa:
 
 def main() -> None:
     for sf_dir in sys.argv[1:] or ["/root/testdata/sf0.1"]:
-        spark = build_session(
-            "router-overhead",
-            extra_conf={"spark.ui.showConsoleProgress": "false"},
-        )
+        spark = build_session("router-overhead")
         try:
             d = read_table(spark, sf_dir, "documents")
-            route = stats = None
-
-            def prepass():
-                nonlocal route, stats
-                # same params as corpus dedup_pairs_auto_docs
-                route, stats = dedup.dedup_route(d, n=3)
-
-            prepass()  # warmup (codegen + IO caches)
-            runs = []
-            for _ in range(3):
-                t0 = time.monotonic()
-                prepass()
-                runs.append(time.monotonic() - t0)
+            # same params as corpus dedup_pairs_auto_docs
+            routes = []  # (route, stats) of every run
+            t = measure.timed(lambda: routes.append(dedup.dedup_route(d, n=3)))
+            route, stats = routes[-1]
             print(json.dumps({
                 "sf_dir": sf_dir,
                 "route": route,
                 "n_docs": stats["n_docs"],
                 "candidates_per_doc": round(stats["candidates_per_doc"], 1),
-                "prepass_median_s": round(statistics.median(runs), 3),
-                "prepass_spread_s": round(max(runs) - min(runs), 3),
+                "prepass_median_s": t["median"],
+                "prepass_spread_s": t["spread"],
                 "loadavg": [round(x, 2) for x in os.getloadavg()],
             }), flush=True)
         finally:

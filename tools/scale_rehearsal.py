@@ -22,39 +22,9 @@ from __future__ import annotations
 import json
 import math
 import os
-import statistics
 import sys
-import time
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
-
-from financial_data_lakehouse_pipeline__spark import corpus  # noqa: E402
-from financial_data_lakehouse_pipeline__spark.session import build_session  # noqa: E402
-
-
-def _time_query(name: str, sf_dir: str) -> dict:
-    """bench_isolate methodology: fresh session, warmup, median-of-3."""
-    spark = build_session(
-        f"scale-{name}",
-        extra_conf={"spark.ui.showConsoleProgress": "false"},
-    )
-    fn = corpus.queries()[name]
-
-    def run():
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-
-    run()  # warmup: codegen + IO caches, untimed
-    times = []
-    for _ in range(3):
-        t0 = time.monotonic()
-        run()
-        times.append(time.monotonic() - t0)
-    spark.stop()
-    return {
-        "median": round(statistics.median(times), 3),
-        "spread": round(max(times) - min(times), 3),
-    }
+from bench_isolate import isolate
 
 
 def main() -> None:
@@ -62,8 +32,8 @@ def main() -> None:
     names = sys.argv[4:]
     rows = []
     for name in names:
-        lo = _time_query(name, lo_dir)
-        hi = _time_query(name, hi_dir)
+        lo = isolate(name, lo_dir)
+        hi = isolate(name, hi_dir)
         alpha = math.log(hi["median"] / lo["median"]) / math.log(ratio)
         rows.append({"query": name, "lo": lo, "hi": hi,
                      "alpha": round(alpha, 2)})
