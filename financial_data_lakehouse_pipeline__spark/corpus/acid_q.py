@@ -486,7 +486,7 @@ def acid_dpp_prune(spark, sf_dir):
         [(2024, "old"), (2025, "current"), (2026, "next")],
         "year int, status string",
     ).filter(F.col("status") != "old")
-    assert acid.pruned_files_in(_PT_ROOT, "year", [2025, 2026]) == [
+    assert acid.pruned_files(_PT_ROOT, [("year", "in", [2025, 2026])]) == [
         os.path.join("data", "v0-fixture", "year=2025", "part-0.parquet"),
         os.path.join("data", "v0-fixture", "year=2026", "part-0.parquet"),
     ]

@@ -799,15 +799,15 @@ def streaming_click_attribution(spark, sf_dir):
 )
 def streaming_upsert_keep_latest(spark, sf_dir):
     """Streaming MERGE sink (streaming.upsert_sink): foreachBatch
-    dedups each micro-batch to its latest row per user and MERGEs it
-    into a copy-on-write versioned parquet table (the poor-man's Delta
-    log; sources.acid.merge is the ACID variant). Driven to
-    completion, the committed state equals batch keep-latest — the
-    oracle."""
+    dedups each micro-batch to its latest row per user and commits it
+    to a sources/acid.py table (create on the first batch, acid.merge
+    after that). Driven to completion, the committed state read with
+    acid.read_snapshot equals batch keep-latest — the oracle."""
     import os
     import shutil
 
     from financial_data_lakehouse_pipeline__spark import streaming as st
+    from financial_data_lakehouse_pipeline__spark.sources import acid
 
     scratch = os.path.join(
         os.path.dirname(__file__), "..", "..", ".scratch", "upsert_state"
@@ -828,7 +828,7 @@ def streaming_upsert_keep_latest(spark, sf_dir):
         query_name="corpus_streaming_upsert",
     )
     q.awaitTermination()
-    return st.read_upsert_state(spark, scratch)
+    return acid.read_snapshot(spark, scratch)
 
 
 @register(

@@ -582,17 +582,19 @@ def kmv_merge_rollup_balances(spark, sf_dir):
 )
 def streaming_kmv_quantiles(spark, sf_dir):
     """Streaming KMV quantile sketch driven to completion
-    (streaming.kmv_sink): micro-batch register candidates merge into a
-    versioned copy-on-write state by re-taking the k smallest hashes —
-    EXACT mergeability means the final committed registers equal the
-    batch sketch regardless of micro-batch boundaries, so the oracle
-    is literally kmv_quantile_prices' twin. Completes the streaming
+    (streaming.kmv_sink): micro-batch register candidates merge into
+    the registers committed to a sources/acid.py table by re-taking
+    the k smallest hashes — EXACT mergeability means the final
+    committed registers equal the batch sketch regardless of
+    micro-batch boundaries, so the oracle is literally
+    kmv_quantile_prices' twin. Completes the streaming
     sketch family: CMS by SUM, histogram by SUM, HLL by MAX, KMV by
     bottom-k re-cut."""
     import os
     import shutil
 
     from financial_data_lakehouse_pipeline__spark import streaming as st
+    from financial_data_lakehouse_pipeline__spark.sources import acid
 
     scratch = os.path.join(
         os.path.dirname(__file__), "..", "..", ".scratch", "kmv_state"
@@ -614,7 +616,7 @@ def streaming_kmv_quantiles(spark, sf_dir):
     )
     q = st.kmv_sink(proj, scratch, k=512, query_name="corpus_streaming_kmv")
     q.awaitTermination()
-    regs = st.read_upsert_state(spark, scratch)
+    regs = acid.read_snapshot(spark, scratch)
     return sketches.kmv_quantiles(
         regs, [], [(1, 4), (1, 2), (3, 4), (9, 10), (99, 100)]
     ).select("q", "n", "est")

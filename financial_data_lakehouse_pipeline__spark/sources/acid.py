@@ -75,9 +75,12 @@ ACID properties and how each is provided:
   granularity is the honest conservative cut here).
 - **Idempotent replay**: a commit may carry ``app_txn_id``; committing
   an id already present anywhere in the log is a silent no-op — the
-  exactly-once contract foreachBatch sinks need on retry (same
-  mechanism as streaming/__init__.py's versioned MERGE sink, unified
-  here).
+  exactly-once contract foreachBatch sinks need on retry.
+
+This log is the engine's one table format: every streaming sink that
+keeps a versioned table (streaming/__init__.py's append, MERGE-upsert,
+KMV and dedup-ingest sinks) commits through it, and every read resolves
+its snapshot once, in :func:`_snapshot`.
 
 Scale shape: MERGE is file-pruned copy-on-write — the update batch's
 keys are semi-joined against the snapshot WITH file attribution
@@ -91,11 +94,13 @@ files Delta would.
 from __future__ import annotations
 
 import json
+import operator
 import os
 import re
 import time
 import uuid
 from collections.abc import Sequence
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -326,24 +331,68 @@ def _resolve(root: str, entries: Sequence[dict], version: int) -> list[str]:
     )
 
 
+class _Snapshot(NamedTuple):
+    """One resolved table version: the log read it was resolved from,
+    the version, its live files, its schema JSON (as logged) and its
+    partition columns."""
+
+    entries: list[dict]
+    version: int
+    files: list[str]
+    schema_json: str
+    partition_by: list[str]
+
+    @property
+    def schema(self) -> T.StructType:
+        return T.StructType.fromJson(json.loads(self.schema_json))
+
+
+def _snapshot(
+    root: str,
+    version: int | None = None,
+    timestamp: float | None = None,
+    entries: list[dict] | None = None,
+) -> _Snapshot:
+    """Resolve the table at ``version``, or at the last commit with
+    commit_ts <= ``timestamp``, or at the head — from ONE log read
+    (pass ``entries`` to resolve a second version from the same read).
+    Raises :class:`NoSuchVersionError` for a missing table or version."""
+    if entries is None:
+        entries = _read_log(root)
+    if not entries:
+        raise NoSuchVersionError(f"no table at {root}: create_table first")
+    if version is None and timestamp is not None:
+        eligible = [e["version"] for e in entries if e["commit_ts"] <= timestamp]
+        if not eligible:
+            raise NoSuchVersionError(
+                f"timestamp {timestamp} predates the first commit"
+            )
+        version = max(eligible)
+    if version is None:
+        version = entries[-1]["version"]
+    entry = next((e for e in entries if e["version"] == version), None)
+    if entry is None:
+        raise NoSuchVersionError(f"version {version} not in log")
+    return _Snapshot(
+        entries,
+        version,
+        _resolve(root, entries, version),
+        entry["schema"],
+        list(entry.get("partition_by") or []),
+    )
+
+
 def checkpoint(root: str, version: int | None = None) -> int:
     """Write a live-file-set checkpoint as of ``version`` (default
     latest). Returns the checkpointed version. Atomic last-writer-wins
     publish (os.replace) — checkpoints are derived, so a concurrent
     duplicate write of the same version is harmless."""
-    entries = _read_log(root)
-    if not entries:
-        raise NoSuchVersionError(f"no table at {root}")
-    if version is None:
-        version = entries[-1]["version"]
-    by_v = {e["version"]: e for e in entries}
-    if version not in by_v:
-        raise NoSuchVersionError(f"version {version} not in log")
+    snap = _snapshot(root, version)
     payload = json.dumps(
         {
-            "version": version,
-            "files": _resolve_files(entries, version),
-            "schema": by_v[version]["schema"],
+            "version": snap.version,
+            "files": snap.files,
+            "schema": snap.schema_json,
         },
         sort_keys=True,
     ).encode()
@@ -352,8 +401,8 @@ def checkpoint(root: str, version: int | None = None) -> int:
         f.write(payload)
         f.flush()
         os.fsync(f.fileno())
-    os.replace(tmp, _checkpoint_path(root, version))
-    return version
+    os.replace(tmp, _checkpoint_path(root, snap.version))
+    return snap.version
 
 
 def _commit(
@@ -534,9 +583,9 @@ def _collect_stats(root: str, rels: Sequence[str]) -> dict:
     return out
 
 
-#: supported comparison operators for stats pruning: op -> (python test
-#: "file may contain a matching row", Spark Column builder)
-_PRUNE_OPS = ("==", ">=", "<=", ">", "<")
+#: supported pruning operators: comparisons against a literal, and
+#: ``in`` (set membership) against a list of literals
+_PRUNE_OPS = ("==", ">=", "<=", ">", "<", "in")
 
 
 def _file_may_match(stats: dict | None, col: str, op: str, val) -> bool:
@@ -606,6 +655,42 @@ def _partition_may_match(pvals: dict | None, col: str, op: str, val) -> bool:
     return True
 
 
+def _may_match(
+    pvals: dict | None, stats: dict | None, col: str, op: str, val
+) -> bool:
+    """One predicate against one file's logged partition values, then
+    its min/max stats. ``in`` keeps the file if any listed value may
+    match under ``==``."""
+    if op == "in":
+        return any(_may_match(pvals, stats, col, "==", v) for v in val)
+    return _partition_may_match(pvals, col, op, val) and _file_may_match(
+        stats, col, op, val
+    )
+
+
+def _prune(snap: _Snapshot, predicates: Sequence[tuple]) -> list[str]:
+    """The snapshot's live files that every predicate may match,
+    judged from the stats and partition values in the same log read."""
+    for _, op, _v in predicates:
+        if op not in _PRUNE_OPS:
+            raise ValueError(f"unsupported prune op: {op}")
+    stats_by_file: dict[str, dict] = {}
+    parts_by_file: dict[str, dict] = {}
+    for e in snap.entries:
+        if e["version"] > snap.version:
+            break
+        stats_by_file.update(e.get("stats") or {})
+        parts_by_file.update(e.get("partitions") or {})
+    return [
+        f
+        for f in snap.files
+        if all(
+            _may_match(parts_by_file.get(f), stats_by_file.get(f), col, op, val)
+            for col, op, val in predicates
+        )
+    ]
+
+
 def pruned_files(
     root: str,
     predicates: Sequence[tuple],
@@ -616,77 +701,11 @@ def pruned_files(
     prove no row can match — exact, whole partitions drop first — or
     (b) the log's per-file min/max PROVE it cannot contain a matching
     row, for ALL ``predicates`` (a conjunction of simple comparisons
-    ``(column, op, literal)`` with op in ==/>=/<=/>/<). Exposed
-    separately so tests (and the DuckDB oracle) can assert the exact
-    pruned set."""
-    for _, op, _v in predicates:
-        if op not in _PRUNE_OPS:
-            raise ValueError(f"unsupported prune op: {op}")
-    entries = _read_log(root)
-    if not entries:
-        raise NoSuchVersionError(f"no table at {root}")
-    if version is None:
-        version = entries[-1]["version"]
-    files = _resolve(root, entries, version)
-    stats_by_file: dict[str, dict] = {}
-    parts_by_file: dict[str, dict] = {}
-    for e in entries:
-        if e["version"] > version:
-            break
-        for rel, st in (e.get("stats") or {}).items():
-            stats_by_file[rel] = st
-        for rel, pv in (e.get("partitions") or {}).items():
-            parts_by_file[rel] = pv
-    return [
-        f
-        for f in files
-        if all(
-            _partition_may_match(parts_by_file.get(f), col, op, val)
-            and _file_may_match(stats_by_file.get(f), col, op, val)
-            for col, op, val in predicates
-        )
-    ]
-
-
-def pruned_files_in(
-    root: str,
-    col: str,
-    values: Sequence,
-    version: int | None = None,
-) -> list[str]:
-    """The snapshot file list after SET-membership pruning: keep a
-    file only if its logged partition value equals one of ``values``
-    (exact, whole partitions drop first) or — for unpartitioned
-    layouts — its min/max stats admit at least one of them. This is
-    the metadata half of runtime dim-driven pruning
-    (:func:`scan_dpp`); exposed separately so tests and the DuckDB
-    oracle can assert the exact pruned set. O(files × values) over
-    metadata only — the value set is broadcast-sized by contract."""
-    entries = _read_log(root)
-    if not entries:
-        raise NoSuchVersionError(f"no table at {root}")
-    if version is None:
-        version = entries[-1]["version"]
-    files = _resolve(root, entries, version)
-    stats_by_file: dict[str, dict] = {}
-    parts_by_file: dict[str, dict] = {}
-    for e in entries:
-        if e["version"] > version:
-            break
-        for rel, st in (e.get("stats") or {}).items():
-            stats_by_file[rel] = st
-        for rel, pv in (e.get("partitions") or {}).items():
-            parts_by_file[rel] = pv
-    vals = list(values)
-    return [
-        f
-        for f in files
-        if any(
-            _partition_may_match(parts_by_file.get(f), col, "==", v)
-            and _file_may_match(stats_by_file.get(f), col, "==", v)
-            for v in vals
-        )
-    ]
+    ``(column, op, literal)`` with op in ==/>=/<=/>/<, or SET
+    membership ``(column, "in", values)`` — the metadata half of
+    :func:`scan_dpp`, O(files × values)). Exposed separately so tests
+    (and the DuckDB oracle) can assert the exact pruned set."""
+    return _prune(_snapshot(root, version), predicates)
 
 
 def scan_dpp(
@@ -705,7 +724,7 @@ def scan_dpp(
     values, prune the fact's file list to partitions/files whose
     logged metadata admits one of them, then read only those files
     with a residual ``isin`` filter (pruning is conservative, never a
-    substitute for the filter).
+    substitute for the filter) — :func:`scan` with an ``in`` predicate.
 
     Returns the semi-join ``fact WHERE col IN (SELECT dim_col FROM
     dim)`` — at 100 TB a dim filter that selects 3 of 1,000 partition
@@ -728,26 +747,23 @@ def scan_dpp(
         .distinct()
         .limit(max_dim_values + 1).collect()
     ]
-    entries = _read_log(root)
-    if not entries:
-        raise NoSuchVersionError(f"no table at {root}")
-    if version is None:
-        version = entries[-1]["version"]
-    by_v = {e["version"]: e for e in entries}
-    if version not in by_v:
-        raise NoSuchVersionError(f"version {version} not in log")
-    schema = T.StructType.fromJson(json.loads(by_v[version]["schema"]))
-    if len(kvals) > max_dim_values:
-        snap = _read_files(
-            spark, root, _resolve(root, entries, version), schema
-        )
-        return snap.join(
-            dim.select(F.col(dim_col or col).alias(col)).distinct(),
-            col, "left_semi",
-        )
-    files = pruned_files_in(root, col, kvals, version)
-    df = _read_files(spark, root, files, schema)
-    return df.filter(F.col(col).isin(kvals) if kvals else F.lit(False))
+    if len(kvals) <= max_dim_values:
+        return scan(spark, root, [(col, "in", kvals)], version)
+    snap = _snapshot(root, version)
+    return _read_files(spark, root, snap.files, snap.schema).join(
+        dim.select(F.col(dim_col or col).alias(col)).distinct(),
+        col, "left_semi",
+    )
+
+
+def _predicate_column(col: str, op: str, val):
+    c = F.col(col)
+    if op == "in":
+        return c.isin(list(val)) if val else F.lit(False)
+    return {
+        "==": operator.eq, ">=": operator.ge, "<=": operator.le,
+        ">": operator.gt, "<": operator.lt,
+    }[op](c, val)
 
 
 def scan(
@@ -762,25 +778,11 @@ def scan(
     this is the difference between opening a million footers and
     reading a metadata-scale log), then apply the SAME predicates as a
     residual Spark filter (stats pruning is conservative, never a
-    substitute for the filter)."""
-    entries = _read_log(root)
-    if not entries:
-        raise NoSuchVersionError(f"no table at {root}")
-    if version is None:
-        version = entries[-1]["version"]
-    by_v = {e["version"]: e for e in entries}
-    if version not in by_v:
-        raise NoSuchVersionError(f"version {version} not in log")
-    schema = T.StructType.fromJson(json.loads(by_v[version]["schema"]))
-    files = pruned_files(root, predicates, version)
-    df = _read_files(spark, root, files, schema)
+    substitute for the filter). Predicates are :func:`pruned_files`'."""
+    snap = _snapshot(root, version)
+    df = _read_files(spark, root, _prune(snap, predicates), snap.schema)
     for col, op, val in predicates:
-        c = F.col(col)
-        expr = {
-            "==": c == val, ">=": c >= val, "<=": c <= val,
-            ">": c > val, "<": c < val,
-        }[op]
-        df = df.filter(expr)
+        df = df.filter(_predicate_column(col, op, val))
     return df
 
 
@@ -789,18 +791,21 @@ def _write_data(
     root: str,
     version_hint: int,
     partition_by: Sequence[str] | None = None,
-) -> list[str]:
+) -> dict:
     """Write df as parquet under data/v<hint>-<token>/ and return the
-    part files RELATIVE to root (the log stores relative paths so the
-    table directory is relocatable). With ``partition_by``, files land
-    hive-layout (``col=val/`` dirs) under the version dir — ONE Spark
-    job regardless of partition count; the partition values a file owns
-    are recorded in its path (and, by the caller, in the commit entry —
-    metadata-scale, so ``pruned_files`` prunes partitions without
-    listing directories). Zero-row part files (empty task partitions —
-    routine under Spark's default parallelism on small batches) are
-    deleted, not committed: they would accumulate as stat-less files
-    that data skipping can never prune and every scan must still open."""
+    ``adds``, ``stats`` and ``partitions`` keyword arguments of
+    :func:`_commit`: the part files RELATIVE to root (the log stores
+    relative paths so the table directory is relocatable), their footer
+    stats, and — with ``partition_by`` — their partition values. With
+    ``partition_by``, files land hive-layout (``col=val/`` dirs) under
+    the version dir — ONE Spark job regardless of partition count; the
+    partition values a file owns are recorded in its path and in the
+    commit entry (metadata-scale, so ``pruned_files`` prunes partitions
+    without listing directories). Zero-row part files (empty task
+    partitions — routine under Spark's default parallelism on small
+    batches) are deleted, not committed: they would accumulate as
+    stat-less files that data skipping can never prune and every scan
+    must still open."""
     import pyarrow.parquet as pq
 
     token = uuid.uuid4().hex[:12]
@@ -824,7 +829,13 @@ def _write_data(
                 os.remove(full)
                 continue
             rels.append(os.path.relpath(full, root))
-    return sorted(rels)
+    rels.sort()
+    return {
+        "adds": rels,
+        "stats": _collect_stats(root, rels),
+        "partitions": {r: _partition_values_of(r, partition_by) for r in rels}
+        if partition_by else None,
+    }
 
 
 def _partition_values_of(rel: str, partition_by: Sequence[str]) -> dict:
@@ -842,20 +853,6 @@ def _partition_values_of(rel: str, partition_by: Sequence[str]) -> dict:
                 None if v == "__HIVE_DEFAULT_PARTITION__" else unquote(v)
             )
     return vals
-
-
-def _table_partition_by(entries: Sequence[dict], version: int | None = None) -> list[str]:
-    """The table's partition columns as of ``version`` (default: head).
-    Stamped on every commit entry; entries from before partitioning
-    support (or unpartitioned tables) read as []."""
-    if not entries:
-        return []
-    if version is None:
-        return list(entries[-1].get("partition_by") or [])
-    for e in reversed(entries):
-        if e["version"] <= version:
-            return list(e.get("partition_by") or [])
-    return []
 
 
 def _read_files(
@@ -944,18 +941,15 @@ def create_table(
         return -1
     current = entries[-1]["version"] if entries else -1
     prior = _resolve(root, entries, current) if current >= 0 else []
-    adds = _write_data(df, root, current + 1, partition_by=pb)
     return _commit(
         root,
         "overwrite",
-        adds,
-        prior,
-        df.schema.json(),
+        removes=prior,
+        schema_json=df.schema.json(),
         expected_version=current,
         app_txn_id=app_txn_id,
-        stats=_collect_stats(root, adds),
         partition_by=pb,
-        partitions={r: _partition_values_of(r, pb) for r in adds} if pb else None,
+        **_write_data(df, root, current + 1, partition_by=pb),
     )
 
 
@@ -1006,10 +1000,8 @@ def append(
     the latest committed schema — the mergeSchema contract without
     rewriting history). Type changes and dropped columns are still
     rejected as drift."""
-    entries = _read_log(root)
-    if not entries:
-        raise NoSuchVersionError(f"no table at {root}: create_table first")
-    if _already_applied(entries, app_txn_id):
+    snap = _snapshot(root)
+    if _already_applied(snap.entries, app_txn_id):
         return -1
     incoming = json.loads(df.schema.json())
 
@@ -1023,10 +1015,9 @@ def append(
             _widen_nullability(committed, incoming), sort_keys=True
         )
 
-    out_schema(json.loads(entries[-1]["schema"]))  # validate BEFORE writing
-    pb = _table_partition_by(entries)  # appends inherit the partitioning
-    adds = _write_data(df, root, entries[-1]["version"] + 1, partition_by=pb)
-    stats = _collect_stats(root, adds)
+    out_schema(json.loads(snap.schema_json))  # validate BEFORE writing
+    pb = snap.partition_by  # appends inherit the partitioning
+    written = _write_data(df, root, snap.version + 1, partition_by=pb)
 
     # validate_head runs against the SAME log read _commit uses to
     # compute the next version — an overwrite with a different schema
@@ -1034,10 +1025,11 @@ def append(
     # never be silently built upon (it either raises here, or loses the
     # link race and the retry re-validates against the new head).
     def validate_head(es):
-        if _table_partition_by(es) != pb:
+        head_pb = list(es[-1].get("partition_by") or [])
+        if head_pb != pb:
             raise ValueError(
                 f"partitioning drift: table is now partitioned by "
-                f"{_table_partition_by(es)} but this append wrote {pb} — "
+                f"{head_pb} but this append wrote {pb} — "
                 "a concurrent overwrite changed the layout; retry the append"
             )
         return out_schema(json.loads(es[-1]["schema"]))
@@ -1045,12 +1037,11 @@ def append(
     while True:
         try:
             return _commit(
-                root, "append", adds, [], None,
-                app_txn_id=app_txn_id, stats=stats,
+                root, "append", removes=[], schema_json=None,
+                app_txn_id=app_txn_id,
                 schema_fn=validate_head,
                 partition_by=pb,
-                partitions={r: _partition_values_of(r, pb) for r in adds}
-                if pb else None,
+                **written,
             )
         except ConcurrentCommitError:
             continue  # re-validate against the new head, then retry
@@ -1066,24 +1057,8 @@ def read_snapshot(
     of the last commit with commit_ts <= ``timestamp``, or latest.
     An empty snapshot returns an empty DataFrame with the committed
     schema (not an error)."""
-    entries = _read_log(root)
-    if not entries:
-        raise NoSuchVersionError(f"no table at {root}")
-    if version is None and timestamp is not None:
-        eligible = [e["version"] for e in entries if e["commit_ts"] <= timestamp]
-        if not eligible:
-            raise NoSuchVersionError(
-                f"timestamp {timestamp} predates the first commit"
-            )
-        version = max(eligible)
-    if version is None:
-        version = entries[-1]["version"]
-    by_v = {e["version"]: e for e in entries}
-    if version not in by_v:
-        raise NoSuchVersionError(f"version {version} not in log")
-    files = _resolve(root, entries, version)
-    schema = T.StructType.fromJson(json.loads(by_v[version]["schema"]))
-    return _read_files(spark, root, files, schema)
+    snap = _snapshot(root, version, timestamp)
+    return _read_files(spark, root, snap.files, snap.schema)
 
 
 def merge(
@@ -1112,55 +1087,53 @@ def merge(
     """
     from financial_data_lakehouse_pipeline__spark.operators.cdc import merge_upsert
 
-    entries = _read_log(root)
-    if not entries:
-        raise NoSuchVersionError(f"no table at {root}: create_table first")
-    if _already_applied(entries, app_txn_id):
+    snap = _snapshot(root)
+    if _already_applied(snap.entries, app_txn_id):
         return -1
-    read_version = entries[-1]["version"]
-    snap = read_snapshot(spark, root, version=read_version)
-    _check_drift(
-        "merge",
-        json.loads(updates.schema.json()),
-        json.loads(entries[-1]["schema"]),
+    incoming = json.loads(updates.schema.json())
+    committed = json.loads(snap.schema_json)
+    _check_drift("merge", incoming, committed)
+    key_set = F.broadcast(updates.select(*keys).distinct())
+    touched = _touched_files(
+        spark, root, snap, lambda df: df.join(key_set, list(keys), "semi")
     )
-    pb = _table_partition_by(entries)
-    files = _resolve(root, entries, read_version)
-    if not files:
-        touched_rel: list[str] = []
-        merged = updates
-    else:
-        attributed = _read_files(
-            spark, root, files, snap.schema, with_file_col="__file"
-        )
-        key_set = updates.select(*keys).distinct()
-        touched_files = [
-            r["__file"]
-            for r in attributed.join(F.broadcast(key_set), list(keys), "semi")
-            .select("__file")
-            .distinct()
-            .collect()
-        ]
-        abs_root = os.path.abspath(root)
-        touched_rel = sorted(
-            _file_uri_to_rel(f, abs_root) for f in touched_files
-        )
-        touched_df = _read_files(spark, root, touched_rel, snap.schema)
-        merged = merge_upsert(touched_df, updates, keys)
-    adds = _write_data(merged, root, read_version + 1, partition_by=pb)
+    merged = (
+        merge_upsert(_read_files(spark, root, touched, snap.schema), updates, keys)
+        if snap.files else updates
+    )
     return _commit(
         root,
         "merge",
-        adds,
-        touched_rel,
-        snap.schema.json(),
-        expected_version=read_version,
+        removes=touched,
+        schema_json=json.dumps(
+            _widen_nullability(committed, incoming), sort_keys=True
+        ),
+        expected_version=snap.version,
         app_txn_id=app_txn_id,
         op_params={"keys": list(keys)},
-        stats=_collect_stats(root, adds),
-        partition_by=pb,
-        partitions={r: _partition_values_of(r, pb) for r in adds}
-        if pb else None,
+        partition_by=snap.partition_by,
+        **_write_data(merged, root, snap.version + 1, partition_by=snap.partition_by),
+    )
+
+
+def _touched_files(
+    spark: SparkSession, root: str, snap: _Snapshot, match
+) -> list[str]:
+    """The live files of ``snap`` holding at least one row that
+    ``match`` (a function of the snapshot DataFrame) keeps, relative to
+    the table root: every row is attributed to its parquet file
+    (``_metadata.file_path`` — no extra scan, the metadata column is
+    constant-folded per file), and the distinct files of the matching
+    rows are collected. An empty snapshot runs no job."""
+    if not snap.files:
+        return []
+    attributed = _read_files(
+        spark, root, snap.files, snap.schema, with_file_col="__file"
+    )
+    abs_root = os.path.abspath(root)
+    return sorted(
+        _file_uri_to_rel(r["__file"], abs_root)
+        for r in match(attributed).select("__file").distinct().collect()
     )
 
 
@@ -1173,52 +1146,30 @@ def delete_where(
     """DELETE FROM ... WHERE predicate, file-pruned copy-on-write: only
     files containing at least one matching row are rewritten (with the
     survivors); files with no match survive by reference."""
-    entries = _read_log(root)
-    if not entries:
-        raise NoSuchVersionError(f"no table at {root}")
-    if _already_applied(entries, app_txn_id):
+    snap = _snapshot(root)
+    if _already_applied(snap.entries, app_txn_id):
         return -1
-    read_version = entries[-1]["version"]
-    pb = _table_partition_by(entries)
-    files = _resolve(root, entries, read_version)
-    schema = T.StructType.fromJson(json.loads(entries[-1]["schema"]))
-    if not files:
-        return _commit(
-            root, "delete", [], [], schema.json(),
-            expected_version=read_version, app_txn_id=app_txn_id,
-            op_params={"predicate": predicate}, partition_by=pb,
-        )
-    attributed = _read_files(spark, root, files, schema, with_file_col="__file")
-    touched_files = [
-        r["__file"]
-        for r in attributed.filter(F.expr(predicate))
-        .select("__file")
-        .distinct()
-        .collect()
-    ]
-    abs_root = os.path.abspath(root)
-    touched_rel = sorted(
-        _file_uri_to_rel(f, abs_root) for f in touched_files
+    touched = _touched_files(
+        spark, root, snap, lambda df: df.filter(F.expr(predicate))
     )
-    adds: list[str] = []
-    if touched_rel:
-        survivors = _read_files(spark, root, touched_rel, schema).filter(
+    written: dict = {"adds": []}
+    if touched:
+        survivors = _read_files(spark, root, touched, snap.schema).filter(
             ~F.expr(predicate)
         )
-        adds = _write_data(survivors, root, read_version + 1, partition_by=pb)
+        written = _write_data(
+            survivors, root, snap.version + 1, partition_by=snap.partition_by
+        )
     return _commit(
         root,
         "delete",
-        adds,
-        touched_rel,
-        schema.json(),
-        expected_version=read_version,
+        removes=touched,
+        schema_json=snap.schema_json,
+        expected_version=snap.version,
         app_txn_id=app_txn_id,
         op_params={"predicate": predicate},
-        stats=_collect_stats(root, adds),
-        partition_by=pb,
-        partitions={r: _partition_values_of(r, pb) for r in adds}
-        if pb else None,
+        partition_by=snap.partition_by,
+        **written,
     )
 
 
@@ -1242,30 +1193,15 @@ def table_changes(
     identical values by a copy-on-write rewrite — are dropped).
     Without keys: row-multiset semantics — every row of removed files
     as 'deleted' + every row of added files as 'inserted'."""
-    entries = _read_log(root)
-    if not entries:
-        raise NoSuchVersionError(f"no table at {root}")
-    if to_version is None:
-        to_version = entries[-1]["version"]
-    by_v = {e["version"]: e for e in entries}
-    if from_version not in by_v or to_version not in by_v:
-        raise NoSuchVersionError(
-            f"versions {from_version}..{to_version} not both in log"
-        )
-    old_files = set(_resolve(root, entries, from_version))
-    new_files = set(_resolve(root, entries, to_version))
-    removed = sorted(old_files - new_files)
-    added = sorted(new_files - old_files)
-    schema = T.StructType.fromJson(json.loads(by_v[to_version]["schema"]))
-    old_schema = T.StructType.fromJson(
-        json.loads(by_v[from_version]["schema"])
+    new = _snapshot(root, to_version)
+    old = _snapshot(root, from_version, entries=new.entries)
+    schema, old_schema = new.schema, old.schema
+    old_side = _read_files(
+        spark, root, sorted(set(old.files) - set(new.files)), old_schema
     )
-
-    def read(files: Sequence[str], sch) -> DataFrame:
-        return _read_files(spark, root, files, sch)
-
-    old_side = read(removed, old_schema)
-    new_side = read(added, schema)
+    new_side = _read_files(
+        spark, root, sorted(set(new.files) - set(old.files)), schema
+    )
     if keys is None:
         cols = [f.name for f in schema.fields]
         old_cols = {f.name for f in old_schema.fields}
@@ -1328,30 +1264,25 @@ def optimize(
     is always safe to retry). Returns the new version, the current
     version when there is nothing to compact (< 2 small files and no
     zorder), or -1 on idempotent replay."""
-    entries = _read_log(root)
-    if not entries:
-        raise NoSuchVersionError(f"no table at {root}")
-    if _already_applied(entries, app_txn_id):
+    snap = _snapshot(root)
+    if _already_applied(snap.entries, app_txn_id):
         return -1
-    read_version = entries[-1]["version"]
-    files = _resolve(root, entries, read_version)
+    read_version, pb = snap.version, snap.partition_by
     if zorder:
-        candidates = list(files)  # re-clustering rewrites everything
+        candidates = list(snap.files)  # re-clustering rewrites everything
     else:
         candidates = [
             f
-            for f in files
+            for f in snap.files
             if os.path.getsize(os.path.join(root, f)) < target_file_bytes
         ]
         if len(candidates) < 2:
             return read_version  # nothing to gain
     if not candidates:
         return read_version
-    schema = T.StructType.fromJson(json.loads(entries[-1]["schema"]))
-    pb = _table_partition_by(entries)
     total = sum(os.path.getsize(os.path.join(root, f)) for f in candidates)
     n_out = int(max(1, -(-total // target_file_bytes)))  # ceil
-    df = _read_files(spark, root, candidates, schema)
+    df = _read_files(spark, root, candidates, snap.schema)
     if zorder:
         from financial_data_lakehouse_pipeline__spark.operators import layout
 
@@ -1402,25 +1333,22 @@ def optimize(
         compacted = df.repartition(max(n_out, 1), *[F.col(c) for c in pb])
     else:
         compacted = df.repartition(n_out)
-    adds = _write_data(compacted, root, read_version + 1, partition_by=pb)
+    written = _write_data(compacted, root, read_version + 1, partition_by=pb)
     return _commit(
         root,
         "optimize",
-        adds,
-        candidates,
-        schema.json(),
+        removes=candidates,
+        schema_json=snap.schema_json,
         expected_version=read_version,
         app_txn_id=app_txn_id,
         op_params={
             "target_file_bytes": int(target_file_bytes),
             "n_in": len(candidates),
-            "n_out": len(adds),
+            "n_out": len(written["adds"]),
             "zorder": list(zorder) if zorder else None,
         },
-        stats=_collect_stats(root, adds),
         partition_by=pb,
-        partitions={r: _partition_values_of(r, pb) for r in adds}
-        if pb else None,
+        **written,
     )
 
 
@@ -1432,17 +1360,11 @@ def restore(root: str, version: int, app_txn_id: str | None = None) -> int:
     auditable and time-travelable), roll-FORWARD by restoring again.
     Requires the target's files to still exist: vacuum with
     keep_versions covering the target, or restore before vacuuming."""
-    entries = _read_log(root)
-    if not entries:
-        raise NoSuchVersionError(f"no table at {root}")
-    if _already_applied(entries, app_txn_id):
+    head = _snapshot(root)
+    if _already_applied(head.entries, app_txn_id):
         return -1
-    by_v = {e["version"]: e for e in entries}
-    if version not in by_v:
-        raise NoSuchVersionError(f"version {version} not in log")
-    current = entries[-1]["version"]
-    target = set(_resolve(root, entries, version))
-    live = set(_resolve(root, entries, current))
+    to = _snapshot(root, version, entries=head.entries)
+    target, live = set(to.files), set(head.files)
     missing = [
         f for f in target - live
         if not os.path.exists(os.path.join(root, f))
@@ -1457,11 +1379,11 @@ def restore(root: str, version: int, app_txn_id: str | None = None) -> int:
         "restore",
         sorted(target - live),
         sorted(live - target),
-        by_v[version]["schema"],
-        expected_version=current,
+        to.schema_json,
+        expected_version=head.version,
         app_txn_id=app_txn_id,
         op_params={"restored_to": int(version)},
-        partition_by=_table_partition_by(entries, version),
+        partition_by=to.partition_by,
     )
 
 
@@ -1582,9 +1504,4 @@ def snapshot_files(root: str, version: int | None = None) -> list[str]:
     """The resolved live-file list (relative paths) at a version —
     exposed so an external engine (the DuckDB oracle) can read the
     exact snapshot byte-for-byte."""
-    entries = _read_log(root)
-    if not entries:
-        raise NoSuchVersionError(f"no table at {root}")
-    if version is None:
-        version = entries[-1]["version"]
-    return _resolve(root, entries, version)
+    return _snapshot(root, version).files

@@ -8,8 +8,8 @@ rely on spark.sql.sources.partitionOverwriteMode=dynamic for idempotent
 daily re-runs (reference spark-defaults.conf:99).
 
 At 100 TB the failure mode to avoid is millions of tiny output files:
-`write_partitioned_parquet` optionally repartitions by the partition
-columns first so each dynamic partition is written by few tasks.
+`write_partitioned_parquet` repartitions by the partition columns first
+so each dynamic partition is written by few tasks.
 """
 
 from __future__ import annotations
@@ -27,15 +27,14 @@ def write_partitioned_parquet(
     path: str,
     partition_cols: list[str],
     mode: str = "overwrite",
-    coalesce_output: bool = True,
 ) -> None:
     """Hive-partitioned parquet sink (reference data_cleaning.py:127).
 
-    ``coalesce_output=True`` shuffles rows to co-locate each output
-    partition, trading one shuffle for small-file avoidance — the right
-    default at scale (AQE coalescing then sizes the shuffle output).
+    Rows are first repartitioned by the partition columns to co-locate
+    each output partition, trading one shuffle for small-file avoidance
+    (AQE coalescing then sizes the shuffle output).
     """
-    out = df.repartition(*partition_cols) if coalesce_output and partition_cols else df
+    out = df.repartition(*partition_cols) if partition_cols else df
     writer = out.write.mode(mode)
     if partition_cols:
         writer = writer.partitionBy(*partition_cols)

@@ -238,55 +238,54 @@ def upsert_sink(
     query_name: str = "upsert_sink",
 ):
     """Streaming MERGE sink via foreachBatch: each micro-batch is
-    deduplicated to its latest row per key, then MERGEd (update-or-
-    insert) into a copy-on-write versioned parquet table —
-    ``path/v0, path/v1, ...`` with each version a complete snapshot and
-    ``path/_LATEST`` naming the current one. The poor-man's Delta
-    transaction log: readers always see a complete committed version,
-    and the versions double as time travel.
+    deduplicated to its latest row per key
+    (cleaning.dedup_keep_latest on ``order_col`` then ``tiebreak_col``,
+    both descending), then committed to the sources/acid.py table at
+    ``path`` — ``create_table`` for the first batch, ``acid.merge``
+    (update-or-insert, rewriting only the files that hold a matched
+    key) after that. One committed version per batch: readers get
+    snapshot isolation and time travel through ``acid.read_snapshot``.
 
-    At scale the same foreachBatch body targets sources.acid.merge
-    (ACID MERGE that rewrites only the files holding matched keys); the
-    copy-on-write variant here rewrites the whole table.
+    Commits carry no ``app_txn_id``; a replayed batch re-applies
+    idempotently, as a latest-wins merge of the same rows.
 
-    Returns the StreamingQuery (caller awaits termination); read the
-    result with :func:`read_upsert_state`.
+    Returns the StreamingQuery (caller awaits termination).
     """
-    import os
-
-    from pyspark.sql import Window
-
-    from financial_data_lakehouse_pipeline__spark.operators.cdc import merge_upsert
+    from financial_data_lakehouse_pipeline__spark.operators.cleaning import (
+        dedup_keep_latest,
+    )
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        w = Window.partitionBy(*keys).orderBy(
-            F.col(order_col).desc(), F.col(tiebreak_col).desc()
+        latest = dedup_keep_latest(
+            batch_df, keys, [F.col(order_col).desc(), F.col(tiebreak_col).desc()]
         )
-        latest = (
-            batch_df.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-        marker = os.path.join(path, "_LATEST")
-        if os.path.exists(marker):
-            with open(marker) as fh:
-                cur = int(fh.read().strip())
-            target = spark.read.parquet(os.path.join(path, f"v{cur}"))
-            merged = merge_upsert(target, latest, keys)
-            nxt = cur + 1
-        else:
-            merged, nxt = latest, 0
-        merged.write.mode("overwrite").parquet(os.path.join(path, f"v{nxt}"))
-        with open(marker + ".tmp", "w") as fh:
-            fh.write(str(nxt))
-        os.replace(marker + ".tmp", marker)  # atomic commit
+        _commit_batch(latest, path, keys)
 
     return (
         stream.writeStream.foreachBatch(handle)
         .queryName(query_name)
         .trigger(availableNow=True)
         .start()
+    )
+
+
+def _commit_batch(
+    batch_df: DataFrame,
+    root: str,
+    merge_keys: Sequence[str] | None,
+    app_txn_id: str | None = None,
+) -> int:
+    """Commit one micro-batch to the sources/acid.py table at ``root``:
+    ``create_table`` for the first batch, then ``append`` without
+    ``merge_keys`` or ``merge`` on them."""
+    from financial_data_lakehouse_pipeline__spark.sources import acid
+
+    if acid.latest_version(root) < 0:
+        return acid.create_table(batch_df, root, app_txn_id=app_txn_id)
+    if merge_keys is None:
+        return acid.append(batch_df, root, app_txn_id=app_txn_id)
+    return acid.merge(
+        batch_df.sparkSession, root, batch_df, merge_keys, app_txn_id=app_txn_id
     )
 
 
@@ -326,8 +325,6 @@ def acid_append_sink(
 
     Returns the StreamingQuery (availableNow trigger; caller awaits).
     """
-    from financial_data_lakehouse_pipeline__spark.sources import acid
-
     if checkpoint_location is None and not allow_uncheckpointed:
         raise ValueError(
             "acid_append_sink without checkpoint_location breaks the "
@@ -338,14 +335,7 @@ def acid_append_sink(
         )
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        txn = f"{query_name}:{batch_id}"
-        spark = batch_df.sparkSession
-        if acid.latest_version(root) < 0:
-            acid.create_table(batch_df, root, app_txn_id=txn)
-        elif merge_keys is None:
-            acid.append(batch_df, root, app_txn_id=txn)
-        else:
-            acid.merge(spark, root, batch_df, merge_keys, app_txn_id=txn)
+        _commit_batch(batch_df, root, merge_keys, f"{query_name}:{batch_id}")
 
     writer = (
         stream.writeStream.foreachBatch(handle)
@@ -355,19 +345,6 @@ def acid_append_sink(
     if checkpoint_location is not None:
         writer = writer.option("checkpointLocation", checkpoint_location)
     return writer.start()
-
-
-def read_upsert_state(
-    spark: SparkSession, path: str, version: int | None = None
-) -> DataFrame:
-    """Read a committed version of an upsert_sink table (default: the
-    one _LATEST points at) — the time-travel read."""
-    import os
-
-    if version is None:
-        with open(os.path.join(path, "_LATEST")) as fh:
-            version = int(fh.read().strip())
-    return spark.read.parquet(os.path.join(path, f"v{version}"))
 
 
 def kmv_sink(
@@ -381,8 +358,10 @@ def kmv_sink(
     register state by re-taking the k smallest hashes — and because
     KMV merge is EXACT (operators/sketches.kmv_merge), the final
     committed state equals the batch sketch of all data seen,
-    regardless of micro-batch boundaries. State is k rows, versioned
-    copy-on-write like :func:`upsert_sink` (v0, v1, ... + _LATEST).
+    regardless of micro-batch boundaries. State is k rows in the
+    sources/acid.py table at ``path``: each batch reads the committed
+    registers with ``acid.read_snapshot`` and commits the re-cut with
+    ``acid.create_table`` (an overwrite commit, one version per batch).
 
     The input stream must already carry (h, v) columns — apply the
     kmv_quantile_sketch hash projection upstream; the bottom-k CUT
@@ -390,35 +369,25 @@ def kmv_sink(
     exactly why the sink owns the cut).
 
     Returns the StreamingQuery; read registers with
-    :func:`read_upsert_state` and finalize with
+    ``acid.read_snapshot`` and finalize with
     operators/sketches.kmv_quantiles.
     """
-    import os
+    from financial_data_lakehouse_pipeline__spark.sources import acid
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        cand = batch_df.select("h", "v").orderBy("h").limit(int(k))
-        marker = os.path.join(path, "_LATEST")
-        if os.path.exists(marker):
-            with open(marker) as fh:
-                cur = int(fh.read().strip())
-            prior = spark.read.parquet(os.path.join(path, f"v{cur}"))
+        regs = batch_df.select("h", "v").orderBy("h").limit(int(k))
+        if acid.latest_version(path) >= 0:
             # distinct: registers are a SET — a replayed micro-batch
             # re-delivers identical (h, v) rows, and a bottom-k over
             # the multiset would double-count them (idempotence)
-            merged = (
-                prior.unionByName(cand)
+            regs = (
+                acid.read_snapshot(batch_df.sparkSession, path)
+                .unionByName(regs)
                 .distinct()
                 .orderBy("h")
                 .limit(int(k))
             )
-            nxt = cur + 1
-        else:
-            merged, nxt = cand, 0
-        merged.write.mode("overwrite").parquet(os.path.join(path, f"v{nxt}"))
-        with open(marker + ".tmp", "w") as fh:
-            fh.write(str(nxt))
-        os.replace(marker + ".tmp", marker)  # atomic commit
+        acid.create_table(regs, path)
 
     return (
         stream.writeStream.foreachBatch(handle)
@@ -589,14 +558,11 @@ def dedup_ingest_sink(
         survivors = dedup.dedup_keep_canonical(
             survivors_of_base, pairs, id_col
         )
-        if acid.latest_version(root) < 0:
-            acid.create_table(survivors, root, app_txn_id=txn)
-        elif on_existing_id == "update":
-            # one MERGE commit: matched ids rewrite in place, fresh
-            # survivors insert — exactly-once via the same app_txn_id
-            acid.merge(spark, root, survivors, [id_col], app_txn_id=txn)
-        else:
-            acid.append(survivors, root, app_txn_id=txn)
+        # "update" is one MERGE commit: matched ids rewrite in place,
+        # fresh survivors insert — exactly-once via the same app_txn_id
+        _commit_batch(
+            survivors, root, [id_col] if on_existing_id == "update" else None, txn
+        )
 
     writer = (
         stream.writeStream.foreachBatch(handle)

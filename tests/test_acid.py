@@ -855,13 +855,14 @@ def test_foreign_json_squatter_raises_not_spins(spark, root):
 def test_scan_dpp_prunes_from_dim_values(spark, root):
     """Runtime dim-driven pruning: the dim result's distinct keys prune
     the fact file list via logged partition values BEFORE any data
-    read; the exact pruned set is observable via pruned_files_in."""
+    read; the exact pruned set is observable via pruned_files' "in"
+    predicate."""
     fact = spark.createDataFrame(
         [(i, 2024 + (i % 3)) for i in range(9)], "k int, year int"
     )
     acid.create_table(fact, root, partition_by=["year"])
     all_files = acid.snapshot_files(root)
-    kept = acid.pruned_files_in(root, "year", [2025])
+    kept = acid.pruned_files(root, [("year", "in", [2025])])
     assert kept and set(kept) < set(all_files)
     assert all("year=2025" in f for f in kept)
     dim = spark.createDataFrame(
@@ -886,7 +887,7 @@ def test_scan_dpp_prunes_from_dim_values(spark, root):
         spark.createDataFrame([(1, 10)], "k int, year int"), root + "_u"
     )
     acid.append(spark.createDataFrame([(2, 20)], "k int, year int"), root + "_u")
-    kept_u = acid.pruned_files_in(root + "_u", "year", [20])
+    kept_u = acid.pruned_files(root + "_u", [("year", "in", [20])])
     assert len(kept_u) == 1
 
 

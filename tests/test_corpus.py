@@ -38,6 +38,11 @@ def test_every_oracle_has_a_query():
 
 @pytest.mark.parametrize("name", sorted(_ORACLES))
 def test_query_matches_oracle(name, spark, sf_dir, duck):
+    """Values and types: result hashes are taken WITH Arrow types, so
+    a DuckDB HUGEINT (decimal128) SUM vs a Spark BIGINT is a mismatch
+    even when every value agrees — the Spark plan schema must match the
+    DuckDB DESCRIBE (bind-only, no execution) under coarse type
+    classes."""
     df = _QUERIES[name](spark, sf_dir)
     s_cols = df.columns
     s_rows = [tuple(r) for r in df.collect()]
@@ -47,30 +52,13 @@ def test_query_matches_oracle(name, spark, sf_dir, duck):
     assert sorted(s_cols) == sorted(d_cols)
     assert len(s_rows) == len(d_rows)
     assert normalize(s_rows, s_cols) == normalize(d_rows, d_cols)
+    assert type_mismatches(df, duck, _ORACLES[name]) == []
 
 
 @pytest.mark.parametrize("name", sorted(set(_QUERIES) - set(_ORACLES)))
 def test_rows_only_queries_run(name, spark, sf_dir):
     df = _QUERIES[name](spark, sf_dir)
     assert df.count() >= 0
-
-
-def test_oracle_result_types_match(spark, sf_dir, duck):
-    """The driver hashes results WITH Arrow types, so a DuckDB HUGEINT
-    (decimal128) SUM vs a Spark BIGINT is a mismatch even when every
-    value agrees. Sweep every oracle: Spark plan schema vs DuckDB
-    DESCRIBE (bind-only, no execution) under coarse type classes."""
-    failures = []
-    for name in sorted(_ORACLES):
-        try:
-            df = _QUERIES[name](spark, sf_dir)
-            tm = type_mismatches(df, duck, _ORACLES[name])
-        except Exception as e:  # noqa: BLE001 - collecting all failures
-            failures.append(f"{name}: ERROR {str(e).splitlines()[0][:120]}")
-            continue
-        if tm:
-            failures.append(f"{name}: {tm}")
-    assert not failures, failures
 
 
 def test_user_active_time_duplicate_ts_ties(spark, tmp_path):

@@ -1,6 +1,7 @@
 """Guard: pin storage is decided in ``materialize.py`` alone and is
-always a plan leaf, table schemas come from the parquet footer, and no
-engine code runs a frame through its RDD view to shape a plan.
+always a plan leaf, table schemas come from the parquet footer, no
+engine code runs a frame through its RDD view to shape a plan, and
+``sources/acid.py`` is the only code that versions a table.
 
 Scans the engine package's code tokens (comments and strings are
 skipped, so prose may still name the APIs) and fails on:
@@ -20,7 +21,10 @@ skipped, so prose may still name the APIs) and fails on:
   AQE, runs the query's shuffle stages while the frame is only being
   built (``sources.scan_parallelism_floor`` decides from the plan). The
   py4j call ``.rdd()`` on a JVM plan node, as in ``materialize.release``,
-  is not an attribute read and stays allowed.
+  is not an attribute read and stays allowed;
+- ``os.replace(`` or ``os.link(`` outside ``sources/acid.py``: an atomic
+  publish of a pointer or log file is a table commit, and acid's
+  transaction log is the one table format.
 """
 
 from __future__ import annotations
@@ -49,9 +53,10 @@ def _engine_files() -> list[str]:
 def _code_names(path: str) -> set[str]:
     """Names called as ``.name(`` in code (except the py4j
     ``.rdd().unpersist(``), plus every bare NAME token
-    (prefixed with '!'), ``.parquet().schema`` for an inference lookup and
-    ``.rdd`` for a DataFrame's RDD view read as an attribute — comments
-    and string literals excluded."""
+    (prefixed with '!'), ``os.name`` for a call on the ``os`` module,
+    ``.parquet().schema`` for an inference lookup and ``.rdd`` for a
+    DataFrame's RDD view read as an attribute — comments and string
+    literals excluded."""
     with open(os.path.join(PKG, path), encoding="utf-8") as fh:
         toks = [
             t for t in tokenize.generate_tokens(io.StringIO(fh.read()).readline)
@@ -66,6 +71,8 @@ def _code_names(path: str) -> set[str]:
             if b.string == "unpersist" and [t.string for t in toks[i - 3 : i]] == ["rdd", "(", ")"]:
                 continue  # py4j: frees a pin's JVM RDD blocks
             found.add(b.string)
+            if i and toks[i - 1].string == "os":
+                found.add("os." + b.string)
             if b.string == "parquet" and _attr_after_call(toks, i + 2) == "schema":
                 found.add(".parquet().schema")
     return found
@@ -109,4 +116,15 @@ def test_pin_storage_is_decided_only_in_materialize():
             bad.append(f"{path}: .parquet(...).schema (use sources.footer_schema)")
         if ".rdd" in calls:
             bad.append(f"{path}: DataFrame .rdd (decide from the plan, as the scan floor does)")
+    assert not bad, bad
+
+
+def test_only_acid_publishes_table_files():
+    bad = [
+        f"{path}: {call}("
+        for path in _engine_files()
+        if path != os.path.join("sources", "acid.py")
+        for call in ("os.replace", "os.link")
+        if call in _code_names(path)
+    ]
     assert not bad, bad

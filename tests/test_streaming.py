@@ -254,14 +254,15 @@ def test_stream_stream_left_outer_semantics(spark, sf_dir):
 def test_upsert_sink_multi_batch_versions(spark, tmp_path):
     """foreachBatch MERGE sink with one file per micro-batch: keys
     updated in batch 2 take the new value, untouched keys carry through,
-    and each committed version is a complete readable snapshot
-    (time travel)."""
+    and each committed version is a complete readable acid snapshot
+    (time travel): v0 is the first batch's create, v1 its merge."""
     import os
     import time
 
     from pyspark.sql import Row
 
     from financial_data_lakehouse_pipeline__spark import streaming as st
+    from financial_data_lakehouse_pipeline__spark.sources import acid
 
     feed = str(tmp_path / "feed")
     os.makedirs(feed)
@@ -302,11 +303,13 @@ def test_upsert_sink_multi_batch_versions(spark, tmp_path):
     )
     q.awaitTermination()
 
-    final = {r.k: r.v for r in st.read_upsert_state(spark, state).collect()}
+    final = {r.k: r.v for r in acid.read_snapshot(spark, state).collect()}
     assert final == {1: "a2", 2: "b2", 3: "c1"}
     # time travel: version 0 is the committed state after batch 1
-    v0 = {r.k: r.v for r in st.read_upsert_state(spark, state, version=0).collect()}
+    v0 = {r.k: r.v for r in acid.read_snapshot(spark, state, version=0).collect()}
     assert v0 == {1: "a2", 2: "b1"}
+    ops = [(r.version, r.op) for r in acid.history(spark, state).collect()]
+    assert ops == [(0, "overwrite"), (1, "merge")]
 
 
 def test_streaming_cms_multi_batch_equals_batch(spark, tmp_path):
@@ -384,11 +387,13 @@ def test_streaming_observed_metrics_in_progress(spark, sf_dir):
 def test_kmv_sink_state_equals_batch_sketch(spark, tmp_path):
     """The committed streaming KMV state equals the batch sketch of all
     data (EXACT merge), and a re-run over the same data is idempotent
-    (bottom-k of S ∪ S == bottom-k of S)."""
+    (bottom-k of S ∪ S == bottom-k of S). Each batch is one acid
+    overwrite commit of the re-cut registers."""
     from pyspark.sql import functions as F
 
     from financial_data_lakehouse_pipeline__spark import streaming as st
     from financial_data_lakehouse_pipeline__spark.operators import sketches
+    from financial_data_lakehouse_pipeline__spark.sources import acid
 
     src = str(tmp_path / "src")
     state = str(tmp_path / "state")
@@ -415,7 +420,7 @@ def test_kmv_sink_state_equals_batch_sketch(spark, tmp_path):
     run()
     got1 = sorted(
         (r["h"], r["v"])
-        for r in st.read_upsert_state(spark, state).collect()
+        for r in acid.read_snapshot(spark, state).collect()
     )
     batch = sorted(
         (r["h"], r["v"])
@@ -424,12 +429,16 @@ def test_kmv_sink_state_equals_batch_sketch(spark, tmp_path):
         ).collect()
     )
     assert got1 == batch and len(got1) == 32
+    assert [r.op for r in acid.history(spark, state).collect()] == ["overwrite"]
     run()  # idempotent re-run
     got2 = sorted(
         (r["h"], r["v"])
-        for r in st.read_upsert_state(spark, state).collect()
+        for r in acid.read_snapshot(spark, state).collect()
     )
     assert got2 == got1
+    assert [r.op for r in acid.history(spark, state).collect()] == [
+        "overwrite", "overwrite",
+    ]
 
 
 def test_acid_append_sink_exactly_once_replay(spark, tmp_path):

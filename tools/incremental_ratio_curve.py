@@ -10,7 +10,7 @@ collision volume, not the base size.
 
 Per sf_dir, in a FRESH session (no cross-scale cache bleed):
   * base/batch split by deterministic hash bucket sized for ~500 batch
-    docs regardless of corpus size;
+    docs regardless of corpus size, and at most a tenth of the corpus;
   * index build time (once per corpus life, amortized over every batch
     — reported, not charged to the per-batch number);
   * warm median-of-3 wall (measure.timed) for incremental_minhash_pairs
@@ -51,8 +51,10 @@ def measure(sf_dir: str, out_dir: str) -> dict:
         d = read_table(spark, sf_dir, "documents")
         n_docs = d.count()
         # bucket threshold sized for ~TARGET_BATCH docs at ANY corpus
-        # size (hash_bucket is uniform over [0, BUCKETS))
-        k = max(1, round(sampling.BUCKETS * TARGET_BATCH / n_docs))
+        # size (hash_bucket is uniform over [0, BUCKETS)), capped at a
+        # tenth of the corpus so a small corpus keeps a base to index
+        k = max(1, min(round(sampling.BUCKETS * TARGET_BATCH / n_docs),
+                       sampling.BUCKETS // 10))
         is_new = sampling.hash_bucket(F.col("doc_id"), salt="incr") < k
         base, inc = d.filter(~is_new), d.filter(is_new)
         n_base, n_inc = base.count(), inc.count()
