@@ -1,6 +1,6 @@
-"""Data-layout operators: multi-dimensional (Z-order) clustering and
-small-file compaction — the table-maintenance half of a lakehouse that
-keeps scans fast at 100 TB.
+"""Data-layout operators: multi-dimensional (Z-order) clustering, the
+table-maintenance half of a lakehouse that keeps scans fast at 100 TB
+(``sources/acid.optimize(zorder=...)`` clusters a table through them).
 
 Z-ordering maps each row's (dim1, dim2, ...) to a Morton code — the
 bit-interleaving of the dimensions — and sorts/range-partitions by it.
@@ -86,28 +86,3 @@ def zorder_by(
         coded = coded.repartitionByRange(F.col(out))
     return coded.sortWithinPartitions(out)
 
-
-def compact_parquet(
-    spark, path: str, target_files: int, sort_within: Sequence[str] | None = None
-) -> None:
-    """Rewrite a parquet location into ``target_files`` files — the
-    small-file compaction every streaming/incremental sink needs
-    periodically (thousands of tiny files turn scan planning and open()
-    overhead into the bottleneck long before data volume does).
-
-    Reads the current files, coalesces/repartitions to the target count
-    (optionally sorting within partitions to restore clustering), and
-    atomically overwrites via a staging directory + rename at the END —
-    Spark cannot overwrite its own input in place.
-    """
-    import shutil
-    import tempfile
-
-    df = spark.read.parquet(path)
-    out = df.repartition(target_files)
-    if sort_within:
-        out = out.sortWithinPartitions(*sort_within)
-    staging = tempfile.mkdtemp(prefix="compact_")
-    out.write.mode("overwrite").parquet(staging)
-    shutil.rmtree(path)
-    shutil.move(staging, path)

@@ -106,6 +106,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from financial_data_lakehouse_pipeline__spark.sources.readers import (
+    scan_parallelism_floor,
+)
+
 _LOG_DIR = "_txn_log"
 _DATA_DIR = "data"
 
@@ -791,6 +795,7 @@ def _write_data(
     root: str,
     version_hint: int,
     partition_by: Sequence[str] | None = None,
+    clustered: bool = False,
 ) -> dict:
     """Write df as parquet under data/v<hint>-<token>/ and return the
     ``adds``, ``stats`` and ``partitions`` keyword arguments of
@@ -801,7 +806,13 @@ def _write_data(
     the version dir — ONE Spark job regardless of partition count; the
     partition values a file owns are recorded in its path and in the
     commit entry (metadata-scale, so ``pruned_files`` prunes partitions
-    without listing directories). Zero-row part files (empty task
+    without listing directories). An under-split partitioned frame is
+    first hashed on the partition columns into the session's default
+    parallelism (``scan_parallelism_floor(df, *partition_by)``): one
+    file per partition value, written on every core instead of by one
+    task; a well-split frame passes through untouched. ``clustered``
+    skips that step for a frame whose layout is already decided
+    (:func:`optimize`). Zero-row part files (empty task
     partitions — routine under Spark's default parallelism on small
     batches) are deleted, not committed: they would accumulate as
     stat-less files that data skipping can never prune and every scan
@@ -811,6 +822,8 @@ def _write_data(
     token = uuid.uuid4().hex[:12]
     rel_dir = os.path.join(_DATA_DIR, f"v{version_hint}-{token}")
     out = os.path.join(root, rel_dir)
+    if partition_by and not clustered:
+        df = scan_parallelism_floor(df, *partition_by)
     writer = df.write.mode("error")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
@@ -1328,12 +1341,16 @@ def optimize(
         # hold rows of every partition, emitting up to n_out*P files —
         # MORE small files than the compaction removed on
         # high-cardinality partitions. Hashing on the partition columns
-        # sends each partition's rows to (about) one task, so the write
-        # emits ~1 file per live partition value.
-        compacted = df.repartition(max(n_out, 1), *[F.col(c) for c in pb])
+        # sends each partition's rows to one task, so the write emits
+        # one file per live partition value whatever the task count,
+        # and at least one task per core writes the directories.
+        n = max(n_out, spark.sparkContext.defaultParallelism)
+        compacted = df.repartition(n, *[F.col(c) for c in pb])
     else:
         compacted = df.repartition(n_out)
-    written = _write_data(compacted, root, read_version + 1, partition_by=pb)
+    written = _write_data(
+        compacted, root, read_version + 1, partition_by=pb, clustered=True
+    )
     return _commit(
         root,
         "optimize",

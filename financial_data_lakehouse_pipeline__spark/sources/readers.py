@@ -220,10 +220,11 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def scan_parallelism_floor(df: DataFrame) -> DataFrame:
+def scan_parallelism_floor(df: DataFrame, *hash_cols: str) -> DataFrame:
     """Raise an under-split input's partition count to the session's
     default parallelism before per-row-HEAVY map work (regex tokenize,
-    per-shingle md5, quality screens).
+    per-shingle md5, quality screens) or a per-file write (the ACID
+    table's partitioned commits).
 
     A parquet file splits at ROW-GROUP granularity, and the driver
     testdata (like any small compacted lake table) is one file with one
@@ -233,10 +234,16 @@ def scan_parallelism_floor(df: DataFrame) -> DataFrame:
     round 14 measured the docs-family tokenize stages single-task at
     every SF, e.g. word_shingles 0.55 s → 0.32 s at sf0.1 and the whole
     sf1 heavy family faster on 8 cores than 32 because the serial scan
-    stage dominated). The round-robin repartition costs one shuffle of
-    the raw rows, which only pays when downstream per-row work
+    stage dominated). The repartition costs one shuffle of the raw
+    rows, which only pays when downstream per-row or per-file work
     dominates the row bytes — callers are the tokenize/hash-heavy text
-    operators, nothing else.
+    operators and ``sources/acid``'s partitioned writes, nothing else.
+
+    Without ``hash_cols`` the repartition is round-robin. With them it
+    hashes on those columns (``repartition(target, *hash_cols)``), so
+    each value lands in one task: the ACID writes pass their partition
+    columns and keep one file per partition directory while the
+    directories are written on every core.
 
     Deciding runs no Spark job: ``n`` is read from the physical plan
     Spark has already built for the frame. Under AQE that is the
@@ -251,7 +258,7 @@ def scan_parallelism_floor(df: DataFrame) -> DataFrame:
     relation's slices. A frame that has already run counts through its
     query stages. Any other leaf (none in the engine's plans) counts as
     one unsplit input, so the worst a new leaf kind costs is one
-    round-robin shuffle, never an error. A streaming frame passes
+    shuffle, never an error. A streaming frame passes
     through untouched.
 
     Scale posture: the floor only engages when the scan is under-split
@@ -265,7 +272,7 @@ def scan_parallelism_floor(df: DataFrame) -> DataFrame:
     target = df.sparkSession.sparkContext.defaultParallelism
     if _planned_partitions(df._jdf.queryExecution().executedPlan()) * 2 > target:
         return df
-    return df.repartition(target)
+    return df.repartition(target, *hash_cols)
 
 
 #: Source leaves whose ``inputRDDs()`` are the RDDs Spark will scan.

@@ -7,9 +7,11 @@ downstream readers get static + dynamic partition pruning for free — and
 rely on spark.sql.sources.partitionOverwriteMode=dynamic for idempotent
 daily re-runs (reference spark-defaults.conf:99).
 
-At 100 TB the failure mode to avoid is millions of tiny output files:
-`write_partitioned_parquet` repartitions by the partition columns first
-so each dynamic partition is written by few tasks.
+`write_partitioned_parquet` hashes rows on the partition columns into
+the session's default parallelism before writing. Each partition value
+lands in one task, so each directory gets one file (at 100 TB the
+failure mode to avoid is millions of tiny files), and the directories
+are written by every core at once instead of one after another.
 """
 
 from __future__ import annotations
@@ -30,15 +32,22 @@ def write_partitioned_parquet(
 ) -> None:
     """Hive-partitioned parquet sink (reference data_cleaning.py:127).
 
-    Rows are first repartitioned by the partition columns to co-locate
-    each output partition, trading one shuffle for small-file avoidance
-    (AQE coalescing then sizes the shuffle output).
+    Rows are hash-partitioned on the partition columns into
+    ``defaultParallelism`` tasks before the write: one shuffle, after
+    which each partition value's rows sit in one task, so each
+    directory gets exactly one file. The count is explicit because the
+    write costs per file, not per byte: AQE would coalesce a
+    count-less repartition of a small frame into one task that writes
+    every directory in turn. At scale the count is the core count, the
+    same as ``spark.sql.shuffle.partitions`` under ``build_session``,
+    so a large output keeps one task per partition value.
     """
-    out = df.repartition(*partition_cols) if partition_cols else df
-    writer = out.write.mode(mode)
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.parquet(path)
+    if not partition_cols:
+        df.write.mode(mode).parquet(path)
+        return
+    n = df.sparkSession.sparkContext.defaultParallelism
+    out = df.repartition(n, *partition_cols)
+    out.write.mode(mode).partitionBy(*partition_cols).parquet(path)
 
 
 def write_bucketed_table(
@@ -93,58 +102,3 @@ def write_jdbc(df: DataFrame, url: str, table: str, mode: str = "append", **opti
     SURVEY.md §2.1 S7; postgresql_schemas.sql targets, config.py:80-82)."""
     df.write.mode(mode).options(**options).jdbc(url, table)
 
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    zorder_cols: list[str],
-    bits: int = 16,
-    target_files: int = 8,
-    mode: str = "overwrite",
-) -> None:
-    """Z-order-clustered parquet sink: rows are range-partitioned and
-    sorted by a Morton (bit-interleaved) key over ``zorder_cols``, so
-    each output file covers a small hyper-rectangle of the key space and
-    its parquet footer min/max stats prune multi-column range predicates
-    — the Delta ``OPTIMIZE ZORDER BY`` layout, built from pure Spark
-    primitives (functions.zorder_key + repartitionByRange + sortWithin-
-    Partitions; no UDF, one range shuffle).
-
-    Why not just sortBy(col_a, col_b)? A lexicographic sort clusters only
-    the leading column — files span the full range of every other
-    dimension, so predicates on col_b alone prune nothing. The z-curve
-    interleaves all dimensions, so every file is narrow in ALL of them
-    (verified against real footer stats in tests/test_sources.py).
-
-    Each dimension is min-max quantized onto 2^bits cells with exact
-    integer arithmetic (layout.quantize_minmax); the per-column maxima
-    come from one tiny agg broadcast onto every row. Clustering itself
-    is layout.zorder_by (morton_code + repartitionByRange + in-partition
-    sort).
-    """
-    from pyspark.sql import functions as F
-
-    from financial_data_lakehouse_pipeline__spark.operators import layout
-
-    bounds = df.agg(
-        *[F.max(F.col(c)).alias(f"__max_{c}") for c in zorder_cols],
-        *[F.min(F.col(c)).alias(f"__min_{c}") for c in zorder_cols],
-    )
-    cells = [
-        layout.quantize_minmax(
-            F.col(c), F.col(f"__max_{c}"), bits, min_col=F.col(f"__min_{c}")
-        )
-        for c in zorder_cols
-    ]
-    drop = [f"__max_{c}" for c in zorder_cols] + [f"__min_{c}" for c in zorder_cols]
-    (
-        layout.zorder_by(
-            df.crossJoin(F.broadcast(bounds)),
-            cells,
-            bits=bits,
-            num_partitions=target_files,
-        )
-        .drop("__zorder", *drop)
-        .write.mode(mode)
-        .parquet(path)
-    )

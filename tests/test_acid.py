@@ -347,6 +347,17 @@ def test_optimize_compacts_preserving_rows(spark, root):
     assert h[5] == "optimize"
 
 
+def _footer_range(root, rel, col):
+    """(min, max) of ``col`` over every row group of one data file, read
+    from its parquet footer."""
+    import pyarrow.parquet as pq
+
+    md = pq.ParquetFile(os.path.join(root, rel)).metadata
+    i = md.schema.names.index(col)
+    stats = [md.row_group(g).column(i).statistics for g in range(md.num_row_groups)]
+    return min(st.min for st in stats), max(st.max for st in stats)
+
+
 def test_optimize_zorder_enables_second_dim_skipping(spark, root):
     """OPTIMIZE ZORDER: after re-clustering by (k, amt2), per-file
     stats are narrow in BOTH dimensions — a predicate on the SECOND
@@ -372,6 +383,11 @@ def test_optimize_zorder_enables_second_dim_skipping(spark, root):
     acid.optimize(spark, root, target_file_bytes=8 * 1024, zorder=("k", "amt"))
     after_files = acid.snapshot_files(root)
     assert len(after_files) >= 3  # still multiple files to prune among
+    # the parquet footers' min/max are narrow in BOTH dimensions at once
+    # (a sort on k would leave every file spanning the full amt range)
+    for col, span in (("k", 2000), ("amt", 1000)):
+        cover = [_footer_range(root, f, col) for f in after_files]
+        assert sum((hi - lo + 1) / span for lo, hi in cover) / len(cover) < 0.75, col
     kept = acid.pruned_files(root, [("amt", ">=", 900.0)])
     assert len(kept) < len(after_files)  # second-dim pruning now works
     # logically a no-op: identical rows, and the scan result is exact
@@ -893,8 +909,8 @@ def test_scan_dpp_prunes_from_dim_values(spark, root):
 
 def test_optimize_partitioned_compacts_to_few_files(spark, root):
     """Compaction on a partitioned table must cluster rows by partition
-    value before the partitionBy write: the output should be ~1 file
-    per partition value, never n_out × P small files."""
+    value before the partitionBy write: the output is one file per
+    partition value, never n_out × P small files."""
     acid.create_table(
         spark.createDataFrame(
             [(i, f"p{i % 4}") for i in range(8)], "k int, part string"
@@ -910,6 +926,7 @@ def test_optimize_partitioned_compacts_to_few_files(spark, root):
     assert len(before) > 8
     acid.optimize(spark, root, target_file_bytes=1 << 20)
     after = acid.snapshot_files(root)
-    assert len(after) <= 4 + 2  # ~one file per partition value
+    # exactly one file per partition value
+    assert sorted(f.split(os.sep)[2] for f in after) == [f"part=p{i}" for i in range(4)]
     snap = {(r.k, r.part) for r in acid.read_snapshot(spark, root).collect()}
     assert snap == {(i, f"p{i % 4}") for i in range(24)}

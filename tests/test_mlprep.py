@@ -156,22 +156,6 @@ def test_zorder_by_clusters_both_dims(spark):
     assert avg_y < 28
 
 
-def test_compact_parquet_roundtrip(spark, tmp_path):
-    from financial_data_lakehouse_pipeline__spark.operators import layout
-    import os
-
-    p = str(tmp_path / "t")
-    spark.range(0, 10_000).repartition(16).write.parquet(p)
-    n_before = len([f for f in os.listdir(p) if f.endswith(".parquet")])
-    assert n_before == 16
-    layout.compact_parquet(spark, p, target_files=2)
-    n_after = len([f for f in os.listdir(p) if f.endswith(".parquet")])
-    assert n_after == 2
-    assert spark.read.parquet(p).count() == 10_000
-    got = spark.read.parquet(p).agg(F.sum("id")).collect()[0][0]
-    assert got == 10_000 * 9_999 // 2
-
-
 def test_dq_check_summary_counts_and_enforce(spark):
     from financial_data_lakehouse_pipeline__spark.operators import dq
 

@@ -35,6 +35,116 @@ def test_partitioned_write_layout_and_roundtrip(spark, tmp_path):
     assert {r.month for r in back.select("month").distinct().collect()} == {1, 2}
 
 
+def _one_task_frame(spark, n_values):
+    """A one-partition frame of ``5 * n_values`` rows over ``n_values``
+    values of a ``part`` partition column."""
+    return spark.range(0, 5 * n_values, 1, 1).select(
+        F.col("id").alias("k"),
+        (F.col("id") % n_values).cast("int").alias("part"),
+        (F.col("id") * 0.5).alias("v"),
+    )
+
+
+def _write_tasks(spark, group, write):
+    """Run ``write`` under job group ``group``; return the tasks of the
+    stage that wrote the files: the result stage of its last job."""
+    from financial_data_lakehouse_pipeline__spark import measure
+
+    st = spark.sparkContext.statusTracker()
+    measure.jobs(spark, group, write)
+    job = st.getJobInfo(max(st.getJobIdsForGroup(group)))
+    return st.getStageInfo(max(job.stageIds)).numCompletedTasks
+
+
+def _files_per_leaf(path):
+    """Parquet files in each directory that holds any."""
+    counts = {}
+    for d, _dirs, names in os.walk(path):
+        n = sum(name.endswith(".parquet") for name in names)
+        if n:
+            counts[os.path.relpath(d, path)] = n
+    return counts
+
+
+def _content_hash(df):
+    cols = sorted(df.columns)
+    r = df.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.xxhash64(*cols).cast("decimal(38,0)")).alias("h"),
+    ).collect()[0]
+    return r.n, int(r.h or 0)
+
+
+def test_partitioned_writes_run_one_task_per_core(spark, tmp_path):
+    """A one-partition frame with 2x defaultParallelism partition values
+    is written by min(defaultParallelism, values) tasks, through the lake
+    writer and through a partitioned ACID create, with one file per
+    partition directory and every row read back unchanged."""
+    from financial_data_lakehouse_pipeline__spark.sources import acid
+
+    target = spark.sparkContext.defaultParallelism
+    n_values = 2 * target
+    df = _one_task_frame(spark, n_values)
+    want = sorted(df.collect())
+
+    lake = str(tmp_path / "lake")
+    tasks = _write_tasks(
+        spark, "write:lake", lambda: write_partitioned_parquet(df, lake, ["part"])
+    )
+    assert tasks == min(target, n_values)
+    assert _files_per_leaf(lake) == {f"part={i}": 1 for i in range(n_values)}
+    assert sorted(read_parquet(spark, lake).select("k", "part", "v").collect()) == want
+
+    root = str(tmp_path / "acid")
+    tasks = _write_tasks(
+        spark, "write:acid", lambda: acid.create_table(df, root, partition_by=["part"])
+    )
+    assert tasks == min(target, n_values)
+    files = acid.snapshot_files(root)
+    assert len(files) == n_values
+    assert len({os.path.dirname(f) for f in files}) == n_values
+    got = acid.read_snapshot(spark, root).select("k", "part", "v").collect()
+    assert sorted(got) == want
+
+
+def test_partitioned_write_layout_holds_across_configs(spark, tmp_path):
+    """The lake writer's layout and content do not depend on the
+    session: under AQE off, one shuffle partition and 3x cpus shuffle
+    partitions it still writes one file per directory with
+    min(defaultParallelism, values) tasks, and the rows read back hash
+    the same as under the default confs."""
+    target = spark.sparkContext.defaultParallelism
+    n_values = 2 * target
+    df = _one_task_frame(spark, n_values)
+    want = {f"part={i}": 1 for i in range(n_values)}
+
+    def write(name):
+        path = str(tmp_path / name)
+        tasks = _write_tasks(
+            spark, f"write:{name}", lambda: write_partitioned_parquet(df, path, ["part"])
+        )
+        assert tasks == min(target, n_values), name
+        assert _files_per_leaf(path) == want, name
+        return _content_hash(read_parquet(spark, path))
+
+    base = write("default")
+    assert base[0] == 5 * n_values
+    configs = {
+        "aqe_off": {"spark.sql.adaptive.enabled": "false"},
+        "shuffle_1": {"spark.sql.shuffle.partitions": "1"},
+        "shuffle_3x": {"spark.sql.shuffle.partitions": str(3 * target)},
+    }
+    for name, confs in configs.items():
+        saved = {k: spark.conf.get(k) for k in confs}
+        try:
+            for k, v in confs.items():
+                spark.conf.set(k, v)
+            assert write(name) == base, name
+        finally:
+            for k, v in saved.items():
+                spark.conf.set(k, v)
+
+
 def test_external_table_msck_and_analyze(spark, tmp_path):
     """S6/S9: external table over a partitioned layout needs MSCK REPAIR
     to discover partitions (reference hive_schemas.sql:301-306); ANALYZE
@@ -258,100 +368,6 @@ def test_json_corrupt_record_quarantine(spark, tmp_path):
 
     with _pytest.raises(ValueError):
         read_json(spark, p, corrupt_col="_bad")
-
-
-def test_zordered_write_narrows_file_stats_in_all_dims(spark, sf_dir):
-    """write_zordered produces files whose parquet footer min/max ranges
-    are narrow in BOTH z-order dimensions (the data-skipping property),
-    where a lexicographic sort is narrow only in its leading column."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    from financial_data_lakehouse_pipeline__spark.sources.writers import (
-        write_zordered,
-    )
-
-    li = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).select(
-        "l_partkey", "l_suppkey", "l_quantity"
-    )
-    stats = li.agg(
-        F.min("l_partkey"), F.max("l_partkey"),
-        F.min("l_suppkey"), F.max("l_suppkey"),
-    ).collect()[0]
-    span_p = stats[1] - stats[0] + 1
-    span_s = stats[3] - stats[2] + 1
-
-    def mean_file_coverage(path):
-        """Mean fraction of each column's global span covered per file."""
-        cov_p, cov_s, n = 0.0, 0.0, 0
-        for f in glob.glob(os.path.join(path, "*.parquet")):
-            md = pq.ParquetFile(f).metadata
-            mins = {"l_partkey": None, "l_suppkey": None}
-            maxs = {"l_partkey": None, "l_suppkey": None}
-            for rg in range(md.num_row_groups):
-                for ci in range(md.num_columns):
-                    col = md.row_group(rg).column(ci)
-                    name = col.path_in_schema
-                    if name in mins and col.statistics is not None:
-                        st = col.statistics
-                        if mins[name] is None or st.min < mins[name]:
-                            mins[name] = st.min
-                        if maxs[name] is None or st.max > maxs[name]:
-                            maxs[name] = st.max
-            cov_p += (maxs["l_partkey"] - mins["l_partkey"] + 1) / span_p
-            cov_s += (maxs["l_suppkey"] - mins["l_suppkey"] + 1) / span_s
-            n += 1
-        return cov_p / n, cov_s / n, n
-
-    z_path = str(_SCRATCH) + "/zorder_li"
-    lex_path = str(_SCRATCH) + "/lex_li"
-    write_zordered(li, z_path, ["l_partkey", "l_suppkey"], target_files=16)
-    (
-        li.repartitionByRange(16, "l_partkey")
-        .sortWithinPartitions("l_partkey", "l_suppkey")
-        .write.mode("overwrite")
-        .parquet(lex_path)
-    )
-
-    zp, zs, zn = mean_file_coverage(z_path)
-    lp, ls, ln = mean_file_coverage(lex_path)
-    assert zn >= 8 and ln >= 8
-    # lexicographic: leading column narrow, second column ~full span —
-    # a range predicate on l_suppkey alone prunes NOTHING
-    assert lp < 0.2
-    assert ls > 0.9
-    # z-order: BOTH dimensions substantially narrower than full span
-    # (bounding boxes, so not 1/sqrt(nfiles)-tight — but narrow in every
-    # dim at once, which lexicographic cannot be)
-    assert zp < 0.7 and zs < 0.5
-
-    # The actual skipping semantics: a 10%-wide band predicate on the
-    # SECOND dimension intersects every lexicographic file but can skip
-    # a real fraction of z-ordered files on footer stats alone.
-    def files_hit(path, lo, hi):
-        hit = n = 0
-        for f in glob.glob(os.path.join(path, "*.parquet")):
-            md = pq.ParquetFile(f).metadata
-            fmin = fmax = None
-            for rg in range(md.num_row_groups):
-                for ci in range(md.num_columns):
-                    col = md.row_group(rg).column(ci)
-                    if col.path_in_schema == "l_suppkey" and col.statistics:
-                        st = col.statistics
-                        fmin = st.min if fmin is None else min(fmin, st.min)
-                        fmax = st.max if fmax is None else max(fmax, st.max)
-            n += 1
-            if not (fmax < lo or fmin > hi):
-                hit += 1
-        return hit, n
-
-    lo = stats[2] + int(0.45 * span_s)
-    hi = stats[2] + int(0.55 * span_s)
-    z_hit, z_n = files_hit(z_path, lo, hi)
-    l_hit, l_n = files_hit(lex_path, lo, hi)
-    assert l_hit == l_n  # lexicographic cannot skip on the second dim
-    assert z_hit <= z_n - 2  # z-order skips files on footer stats alone
 
 
 def test_morton_code_interleave_known_values(spark):

@@ -174,6 +174,36 @@ def test_jobs_counts_the_group_and_clears_it(spark):
     assert spark.sparkContext.getLocalProperty("spark.jobGroup.id") is None
 
 
+def test_scale_rehearsal_ratio_is_per_query_from_footers(tmp_path):
+    """The size ratio sums footer row counts of the tables each query's
+    oracle reads: a table that did not grow gives ratio 1 and no
+    exponent, one that grew tenfold gives ratio 10."""
+    import pyarrow.parquet as pq
+
+    from scale_rehearsal import alpha, oracle_tables, size_ratio
+
+    for sf, n_docs, n_items in (("lo", 500, 60), ("hi", 500, 600)):
+        os.makedirs(tmp_path / sf)
+        pq.write_table(
+            pa.table({"doc_id": list(range(n_docs))}), tmp_path / sf / "documents.parquet"
+        )
+        pq.write_table(
+            pa.table({"l_orderkey": list(range(n_items))}), tmp_path / sf / "lineitem.parquet"
+        )
+    lo, hi = str(tmp_path / "lo"), str(tmp_path / "hi")
+    docs = oracle_tables("minhash_lsh_pairs_docs")
+    assert docs == {"documents"}
+    assert size_ratio(docs, lo, hi) == 1.0
+    assert alpha(0.5, 0.6, size_ratio(docs, lo, hi)) is None
+    assert size_ratio({"lineitem"}, lo, hi) == 10.0
+    assert size_ratio({"documents", "lineitem"}, lo, hi) == 1100 / 560
+    assert alpha(1.0, 10.0, 10.0) == 1.0
+    # no oracle, or a templated oracle DuckDB cannot parse: no ratio
+    for name in ("approx_distinct_parts", "acid_merge_upsert"):
+        assert oracle_tables(name) == set()
+    assert size_ratio(set(), lo, hi) is None and alpha(1.0, 2.0, None) is None
+
+
 @pytest.mark.parametrize(
     "name",
     sorted(
