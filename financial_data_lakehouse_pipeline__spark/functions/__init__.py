@@ -55,6 +55,28 @@ def dmean(col: Column) -> Column:
     return guarded_div(F.sum(col.cast(_DEC)).cast("double"), F.count(col))
 
 
+def dstddev(col: Column) -> Column:
+    """Order-independent sample standard deviation, as DOUBLE.
+
+    ``stddev_samp`` merges partial double moments, so its last bits
+    depend on how rows are split across tasks. Here n, Σx and Σx² are
+    exact decimals at ``_DEC`` scale (each x, as in ``dmean``, and each
+    x² rounded once to six decimals, the same way on every
+    partitioning), and the doubles meet only in the final closed form.
+    NULL for fewer than two values, 0 for a constant group, as
+    ``stddev_samp``."""
+    x = col.cast(_DEC)
+    n = F.count(x).cast("double")
+    s1 = F.sum(x).cast("double")
+    s2 = F.sum(x * x).cast("double")
+    var = (n * s2 - s1 * s1) / (n * (n - F.lit(1.0)))
+    return (
+        F.when(n < 2, F.lit(None).cast("double"))
+        .when(F.min(x) == F.max(x), F.lit(0.0))
+        .otherwise(F.sqrt(F.greatest(var, F.lit(0.0))))
+    )
+
+
 def money_sum(col: Column, decimals: int = 2) -> Column:
     """Exact order-independent sum for fixed-point (money-like) values,
     as DOUBLE — the fast path where the data contract guarantees at most

@@ -12,7 +12,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from financial_data_lakehouse_pipeline__spark.functions import dmean
+from financial_data_lakehouse_pipeline__spark.functions import dmean, dstddev
 from financial_data_lakehouse_pipeline__spark.materialize import pin
 
 
@@ -146,7 +146,8 @@ def summary_stats(
     df: DataFrame, keys: Sequence[str], value_cols: Sequence[str]
 ) -> DataFrame:
     """Per-group mean/min/max/stddev for each value column (reference
-    sa:313-348 summary job)."""
+    sa:313-348 summary job). The mean and the stddev come from exact
+    decimal moments, so no output depends on the partitioning."""
     aggs: list[Column] = [F.count(F.lit(1)).alias("n_rows")]
     for c in value_cols:
         col = F.col(c)
@@ -154,7 +155,7 @@ def summary_stats(
             dmean(col).alias(f"{c}_avg"),
             F.min(col).alias(f"{c}_min"),
             F.max(col).alias(f"{c}_max"),
-            F.stddev_samp(col).alias(f"{c}_stddev"),
+            dstddev(col).alias(f"{c}_stddev"),
         ]
     return df.groupBy(*keys).agg(*aggs)
 

@@ -26,6 +26,16 @@ _RUNTIME_CONF = {
     # splitting, local shuffle reader (reference: spark-defaults.conf:27-30).
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    # AQE targets max(min(T / cpus, 64 MB), minPartitionSize) bytes per
+    # coalesced partition of a T-byte shuffle, so this floor binds only
+    # when T < cpus x floor. Spark's 1 MB default merged the pipeline's
+    # 0.9-2.0 MB dedup, window and join shuffles at sf0.01 into one task
+    # each, and the window stage costs ~0.6 ms of CPU per KB it reads.
+    # At 256 KB they run on every core: perfbench pipeline_daily pass_s
+    # 10.49 -> 8.57 s median over 10 alternating pairs (4 vCPU, 10 of
+    # 10 won), with the same jobs and files. Shuffles of cpus x 1 MB or
+    # more are unaffected.
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize": "256k",
     "spark.sql.adaptive.skewJoin.enabled": "true",
     # Idempotent re-runs of partitioned sinks (reference: spark-defaults.conf:99).
     "spark.sql.sources.partitionOverwriteMode": "dynamic",

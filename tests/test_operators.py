@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from financial_data_lakehouse_pipeline__spark.functions import (
     clamp,
+    dstddev,
     guarded_div,
     safe_corr,
 )
@@ -47,6 +48,29 @@ def test_safe_corr_constant_series_is_null(spark):
     (DuckDB semantics) — SURVEY.md §7.3 hazard."""
     df = spark.createDataFrame([Row(x=1.0, y=2.0), Row(x=1.0, y=3.0)])
     assert df.agg(safe_corr(F.col("x"), F.col("y")).alias("c")).collect()[0].c is None
+
+
+def test_dstddev_edges_and_partition_independence(spark):
+    """NULL below two values, 0 for a constant group and stddev_samp's
+    value otherwise; the same bits whether the rows arrive in one
+    partition or in seven."""
+    rows = [Row(k=1, v=5.0), Row(k=1, v=5.0), Row(k=2, v=3.0), Row(k=3, v=None)]
+    rows += [Row(k=3, v=1.0)] + [Row(k=4, v=(i * 7919 % 1000) / 100) for i in range(500)]
+    df = spark.createDataFrame(rows)
+
+    def agg(d):
+        out = d.groupBy("k").agg(
+            dstddev(F.col("v")).alias("d"), F.stddev_samp("v").alias("s")
+        )
+        return {r.k: (r.d, r.s) for r in out.collect()}
+
+    got = agg(df.coalesce(1))
+    assert got[1] == (0.0, 0.0)
+    assert got[2] == (None, None) and got[3] == (None, None)
+    d, s = got[4]
+    assert abs(d - s) <= 1e-12 * s
+    spread = agg(df.repartition(7))
+    assert {k: v[0] for k, v in spread.items()} == {k: v[0] for k, v in got.items()}
 
 
 def test_dedup_keep_latest_deterministic(spark):

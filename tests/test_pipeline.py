@@ -7,7 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from financial_data_lakehouse_pipeline__spark import materialize, pipeline
+from financial_data_lakehouse_pipeline__spark import materialize, pipeline, session
 
 _OUTPUTS = ("master", "correlation", "forward_returns", "events", "summary")
 
@@ -63,19 +63,20 @@ def test_lake_layout_written(results, spark):
     assert back.count() > 0
 
 
-#: Floating aggregates whose last bits depend on the order rows reach
-#: them: without the pin, Catalyst prunes the window sort from these two
-#: outputs (they read no window column), so their input order differs.
-_FLOAT_AGGS = {"qty_price_corr", "net_price_stddev"}
+#: A floating aggregate whose last bits depend on the order rows reach
+#: it: without the pin, Catalyst prunes the window sort from the
+#: correlation output (it reads no window column), so its input order
+#: differs.
+_FLOAT_AGGS = {"qty_price_corr"}
 
 
-def _hashes(res: dict) -> dict[str, tuple[int, int]]:
+def _hashes(res: dict, rounded=_FLOAT_AGGS) -> dict[str, tuple[int, int]]:
     """Row count and order-insensitive hash sum of each output, with the
-    floating aggregates rounded to 8 decimals."""
+    ``rounded`` columns rounded to 8 decimals."""
     out = {}
     for k in _OUTPUTS:
         df = res[k]
-        cols = [F.round(c, 8) if c in _FLOAT_AGGS else F.col(c) for c in df.columns]
+        cols = [F.round(c, 8) if c in rounded else F.col(c) for c in df.columns]
         r = df.agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(F.xxhash64(*cols).cast("decimal(38,0)")).alias("h"),
@@ -101,3 +102,51 @@ def test_shared_pin_matches_unpinned_outputs(spark, sf_dir, monkeypatch):
     plain = pipeline.run_pipeline(spark, sf_dir)
     assert any(f.endswith("lineitem.parquet") for f in plain["summary"].inputFiles())
     assert _hashes(pinned) == _hashes(plain)
+
+
+def test_summary_stddev_matches_stddev_samp(results):
+    """The summary's exact-moment stddev stays within 1e-9 relative of
+    Spark's stddev_samp over the same indicator rows."""
+    res, _ = results
+    want = {
+        r.l_returnflag: r.s
+        for r in res["indicators"]
+        .groupBy("l_returnflag")
+        .agg(F.stddev_samp("net_price").alias("s"))
+        .collect()
+    }
+    got = {r.l_returnflag: r.net_price_stddev for r in res["summary"].collect()}
+    assert got.keys() == want.keys()
+    for k, s in want.items():
+        assert abs(got[k] - s) <= 1e-9 * s, k
+
+
+def test_outputs_are_hash_equal_across_configs(spark, sf_dir):
+    """The five outputs hash the same, bit for bit and with no column
+    rounded, under AQE off, one and 3x cpus shuffle partitions, and
+    AQE's coalesce floor at Spark's 1 MB default instead of the
+    engine's 256 KB. Each conf is set for one whole run, computed by the
+    hash, and restored. Every ``read_table`` re-applies the engine's
+    ``_RUNTIME_CONF``, so a conf listed there is changed in that dict
+    too, or the run would quietly revert it."""
+    cpus = spark.sparkContext.defaultParallelism
+    configs = {
+        "aqe_off": {"spark.sql.adaptive.enabled": "false"},
+        "shuffle_1": {"spark.sql.shuffle.partitions": "1"},
+        "shuffle_3x": {"spark.sql.shuffle.partitions": str(3 * cpus)},
+        "floor_1m": {"spark.sql.adaptive.coalescePartitions.minPartitionSize": "1m"},
+    }
+    base = _hashes(pipeline.run_pipeline(spark, sf_dir), rounded=())
+    for name, confs in configs.items():
+        saved = {k: spark.conf.get(k) for k in confs}
+        with pytest.MonkeyPatch.context() as mp:
+            try:
+                for k, v in confs.items():
+                    if k in session._RUNTIME_CONF:
+                        mp.setitem(session._RUNTIME_CONF, k, v)
+                    spark.conf.set(k, v)
+                got = _hashes(pipeline.run_pipeline(spark, sf_dir), rounded=())
+            finally:
+                for k, v in saved.items():
+                    spark.conf.set(k, v)
+        assert got == base, name

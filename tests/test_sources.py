@@ -45,13 +45,14 @@ def _one_task_frame(spark, n_values):
     )
 
 
-def _write_tasks(spark, group, write):
-    """Run ``write`` under job group ``group``; return the tasks of the
-    stage that wrote the files: the result stage of its last job."""
+def _result_tasks(spark, group, action):
+    """Run ``action`` under job group ``group``; return the tasks of the
+    result stage of its last job (for a write, the stage that wrote the
+    files)."""
     from financial_data_lakehouse_pipeline__spark import measure
 
     st = spark.sparkContext.statusTracker()
-    measure.jobs(spark, group, write)
+    measure.jobs(spark, group, action)
     job = st.getJobInfo(max(st.getJobIdsForGroup(group)))
     return st.getStageInfo(max(job.stageIds)).numCompletedTasks
 
@@ -88,7 +89,7 @@ def test_partitioned_writes_run_one_task_per_core(spark, tmp_path):
     want = sorted(df.collect())
 
     lake = str(tmp_path / "lake")
-    tasks = _write_tasks(
+    tasks = _result_tasks(
         spark, "write:lake", lambda: write_partitioned_parquet(df, lake, ["part"])
     )
     assert tasks == min(target, n_values)
@@ -96,7 +97,7 @@ def test_partitioned_writes_run_one_task_per_core(spark, tmp_path):
     assert sorted(read_parquet(spark, lake).select("k", "part", "v").collect()) == want
 
     root = str(tmp_path / "acid")
-    tasks = _write_tasks(
+    tasks = _result_tasks(
         spark, "write:acid", lambda: acid.create_table(df, root, partition_by=["part"])
     )
     assert tasks == min(target, n_values)
@@ -120,7 +121,7 @@ def test_partitioned_write_layout_holds_across_configs(spark, tmp_path):
 
     def write(name):
         path = str(tmp_path / name)
-        tasks = _write_tasks(
+        tasks = _result_tasks(
             spark, f"write:{name}", lambda: write_partitioned_parquet(df, path, ["part"])
         )
         assert tasks == min(target, n_values), name
@@ -143,6 +144,41 @@ def test_partitioned_write_layout_holds_across_configs(spark, tmp_path):
         finally:
             for k, v in saved.items():
                 spark.conf.set(k, v)
+
+
+def test_small_shuffle_runs_one_task_per_core(spark):
+    """AQE's coalesce floor: a window over a two-partition frame whose
+    shuffle holds about 1.6 MB runs its post-shuffle stage on
+    defaultParallelism tasks under build_session's confs (there, one
+    shuffle partition per core). Spark's 1 MB default floor merges the
+    same shuffle into one task. (A one-partition input is not shuffled
+    at all: a single partition already satisfies the window's
+    clustering.) tune_runtime sets the floor on a session that lacks
+    it."""
+    from pyspark.sql import Window
+
+    from financial_data_lakehouse_pipeline__spark import measure
+    from financial_data_lakehouse_pipeline__spark.session import tune_runtime
+
+    target = spark.sparkContext.defaultParallelism
+    df = spark.range(0, 31_250 * target, 1, 2).select(
+        (F.col("id") % 1009).alias("k"), F.rand(7).alias("v")
+    )
+    windowed = df.withColumn("r", F.row_number().over(Window.partitionBy("k").orderBy("v")))
+    key = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, str(target))
+    try:
+        tasks = _result_tasks(spark, "floor:window", lambda: measure.noop(windowed))
+    finally:
+        spark.conf.set(key, saved)
+    assert tasks == target
+
+    floor = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+    spark.conf.unset(floor)
+    assert spark.conf.get(floor) != "256k"
+    tune_runtime(spark)
+    assert spark.conf.get(floor) == "256k"
 
 
 def test_external_table_msck_and_analyze(spark, tmp_path):

@@ -155,6 +155,36 @@ def test_timed_warms_up_once_then_takes_the_median_of_three(monkeypatch):
     assert t == {"median": 2.0, "spread": 2.0, "min": 1.0, "max": 3.0}
 
 
+def test_ab_alternates_abba_and_reports_per_pair_ratios(monkeypatch):
+    """One untimed warmup of each side, then pairs in ABBA order on the
+    fake clock; each pair's ratio is B's seconds over A's, and a pair
+    favours B when that ratio is below 1."""
+    clock, calls = [0.0], []
+    a_secs = iter([9.0, 2.0, 2.0, 4.0, 2.0])
+    b_secs = iter([9.0, 1.0, 3.0, 1.0, 1.0])
+
+    def fake(name, secs):
+        def run():
+            calls.append(name)
+            clock[0] += next(secs)
+
+        return run
+
+    monkeypatch.setattr(measure.time, "monotonic", lambda: clock[0])
+    r = measure.ab(fake("a", a_secs), fake("b", b_secs), pairs=4)
+    assert calls == ["a", "b", "a", "b", "b", "a", "a", "b", "b", "a"]
+    # ratios 0.5, 1.5, 0.25, 0.5
+    assert r == {
+        "pairs": 4,
+        "ratio_median": 0.5,
+        "ratio_min": 0.25,
+        "ratio_max": 1.5,
+        "b_wins": 3,
+        "a_median": 2.0,
+        "b_median": 1.0,
+    }
+
+
 def test_jobs_counts_the_group_and_clears_it(spark):
     """Building a DataFrame launches no job, an action inside ``fn``
     launches at least one, and the job group is cleared when ``fn``

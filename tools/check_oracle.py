@@ -258,6 +258,18 @@ def type_mismatches(spark_df, con, sql) -> list[str]:
     ]
 
 
+def stop_session(spark) -> None:
+    """Stop every active streaming query, then the JVM's StateStore, then
+    the session. The streaming corpus queries leave their state stores
+    loaded; without the StateStore stop, its maintenance thread can fire
+    after ``spark.stop()`` and log ``SparkEnv not active, cannot do
+    maintenance on StateStores``."""
+    for q in spark.streams.active:
+        q.stop()
+    spark._jvm.org.apache.spark.sql.execution.streaming.state.StateStore.stop()
+    spark.stop()
+
+
 def main() -> int:
     argv = sys.argv[1:]
     sample_n = seed = None
@@ -462,7 +474,7 @@ def main() -> int:
         + (f", {n_skip} skipped (oracle scale ceiling)" if n_skip else "")
         + (f" :: {' '.join(failures)}" if failures else "")
     )
-    spark.stop()
+    stop_session(spark)
     return 1 if n_fail else 0
 
 
